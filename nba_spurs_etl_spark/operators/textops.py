@@ -186,7 +186,8 @@ _COLS_MEMO: dict = {}
 
 def _cols_memo_key(builder: str, *args):
     """Memo key for an expression-builder call, or None when any arg
-    is not a plain string/None (Column-typed args build fresh) or no
+    is not a plain string (Column-typed args, and the None that
+    ``_col_name_or_none`` gives a complex Column, build fresh) or no
     JVM gateway is up yet."""
     from pyspark import SparkContext
 
@@ -194,7 +195,7 @@ def _cols_memo_key(builder: str, *args):
     if gw is None:
         return None
     for a in args:
-        if a is not None and not isinstance(a, str):
+        if not isinstance(a, str):
             return None
     return (id(gw), builder) + args
 
@@ -202,7 +203,8 @@ def _cols_memo_key(builder: str, *args):
 def _col_name_or_none(c):
     """A stable string for a plain column reference, else None (memo
     only the F.col('name') shape every caller uses — a complex Column
-    argument opts out of memoization)."""
+    argument opts out of memoization). An absent column is the
+    ``"<none>"`` sentinel, which is memoized."""
     if c is None:
         return "<none>"
     try:

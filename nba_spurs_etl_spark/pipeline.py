@@ -3,7 +3,9 @@
 Replaces the reference's Airflow DAG + dbt run (SURVEY §3): the three
 task groups become three function calls; Spark's lazy plan + action
 boundaries replace the task DAG; model dependency order is plain call
-order inside ``plans.gold.build_all``.
+order inside ``plans.gold.build_all``. dbt's test step needs no scan of
+its own when gold is materialized: the quality checks are observed
+aggregates on the gold writes (``quality.observe``).
 
 Typical use::
 
@@ -35,7 +37,12 @@ def run_pipeline(
 
     Returns the gold DataFrames; with ``materialize_gold`` they are
     also written as Parquet under <work_dir>/gold (the dbt
-    CREATE TABLE AS materialization, S15)."""
+    CREATE TABLE AS materialization, S15).
+
+    With ``run_quality`` the 12 gold checks must pass before this
+    returns (``quality.QualityError`` otherwise). On materialized gold
+    they are observed on the Parquet writes and add no Spark job; on
+    lazy gold they cost one aggregate per checked table."""
     bronze_dir = os.path.join(work_dir, "bronze")
     bronze.write_all(spark, bronze_dir)
 
@@ -50,12 +57,19 @@ def run_pipeline(
     }
     gold_tables = gold.build_all(persisted)
 
+    # materialized gold carries its checks into the writes, which
+    # already scan every row; lazy gold is checked by one aggregate
+    # per table in run_checks
+    checked: dict = gold_tables
     if materialize_gold:
-        for name, df in gold_tables.items():
+        to_write = gold_tables
+        if run_quality:
+            to_write, checked = quality.observe(gold_tables)
+        for name, df in to_write.items():
             df.write.mode("overwrite").parquet(
                 os.path.join(work_dir, "gold", name)
             )
 
     if run_quality:
-        quality.run_checks(gold_tables)
+        quality.run_checks(checked)
     return gold_tables

@@ -3,15 +3,26 @@
 Each check compiles to a violation count that must be 0, exactly like
 dbt's not_null / accepted_values tests
 (``/root/reference/dbt/models/spurs_analysis/spurs_analysis.yml``).
-``GOLD_CHECKS`` is the reference's test suite verbatim; ``run_checks``
-evaluates any suite against a dict of DataFrames.
+``GOLD_CHECKS`` is the reference's test suite verbatim.
+
+A check is one ``count_if`` aggregate, and the checks on one table are
+evaluated together, in one of two ways:
+
+- ``observe`` attaches them to the table as an ``Observation``, so the
+  counts are computed by whatever action next scans the table (the
+  pipeline's gold Parquet write) and cost no Spark job of their own;
+- a table given as a DataFrame gets one fused ``agg`` in ``run_checks``.
+
+``run_checks`` accepts either form per table, and raises on any
+failing check.
 """
 
 from __future__ import annotations
 
+from collections.abc import Mapping
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -26,7 +37,9 @@ class Check:
     def name(self) -> str:
         return f"{self.kind}:{self.table}.{self.column}"
 
-    def violations(self, df: DataFrame) -> int:
+    def violations(self) -> Column:
+        """The number of violating rows, as an aggregate named after
+        the check."""
         if self.kind == "not_null":
             pred = F.col(self.column).isNull()
         elif self.kind == "accepted_values":
@@ -37,7 +50,7 @@ class Check:
             pred = ~F.col(self.column).isin(*self.values)
         else:
             raise ValueError(f"unknown check kind {self.kind!r}")
-        return df.filter(pred).count()
+        return F.count_if(pred).alias(self.name)
 
 
 def not_null(table: str, column: str) -> Check:
@@ -71,12 +84,49 @@ class QualityError(AssertionError):
     pass
 
 
-def run_checks(
-    tables: dict[str, DataFrame], checks: list[Check] | None = None
-) -> dict[str, int]:
-    """Violation count per check; raises QualityError on any failure."""
+def _by_table(checks: list[Check]) -> dict[str, list[Column]]:
+    """The violation aggregates of each checked table."""
+    cols: dict[str, list[Column]] = {}
+    for c in checks:
+        cols.setdefault(c.table, []).append(c.violations())
+    return cols
+
+
+def observe(
+    tables: Mapping[str, DataFrame], checks: list[Check] | None = None
+) -> tuple[dict[str, DataFrame], dict[str, Observation]]:
+    """Attach each checked table's violation counts as an Observation.
+
+    Returns the tables to run the next action on (checked ones
+    observed, the rest as given) and the Observations, which
+    ``run_checks`` reads once that action has finished. A count may
+    exceed the true one if a task is retried, but a table with no
+    violation always observes 0."""
     checks = GOLD_CHECKS if checks is None else checks
-    results = {c.name: c.violations(tables[c.table]) for c in checks}
+    out, observations = dict(tables), {}
+    for table, cols in _by_table(checks).items():
+        observations[table] = Observation()
+        out[table] = tables[table].observe(observations[table], *cols)
+    return out, observations
+
+
+def run_checks(
+    tables: Mapping[str, DataFrame | Observation],
+    checks: list[Check] | None = None,
+) -> dict[str, int]:
+    """Violation count per check; raises QualityError on any failure.
+
+    A table given as an Observation (see ``observe``) is read without
+    a Spark job; a DataFrame costs one aggregate over the table."""
+    checks = GOLD_CHECKS if checks is None else checks
+    counts: dict[str, int] = {}
+    for table, cols in _by_table(checks).items():
+        src = tables[table]
+        if isinstance(src, Observation):
+            counts.update(src.get)
+        else:
+            counts.update(src.agg(*cols).first().asDict())
+    results = {c.name: int(counts[c.name]) for c in checks}
     failed = {k: v for k, v in results.items() if v}
     if failed:
         raise QualityError(f"quality checks failed: {failed}")

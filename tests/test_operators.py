@@ -426,6 +426,34 @@ def test_repetition_features_on_known_docs(spark):
     assert got[3].dup_bigram_frac == 0.0
 
 
+def test_complex_words_col_expressions_do_not_share_a_memo_slot(spark):
+    """Two different complex ``words_col`` expressions over the same
+    text column must each get their own expressions: neither may be
+    served the other's from the expression memo."""
+    from nba_spurs_etl_spark.operators.textops import c4_cols, repetition_cols
+
+    df = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a a a a"), (3, "abcdefghijklmnopqrst b")],
+        ["doc", "text"],
+    ).withColumn("lang", F.lit("en"))
+    whole = F.split(F.col("text"), " ")
+    last = F.slice(F.split(F.col("text"), " "), -1, 1)
+
+    def hits(cols, pred):
+        return sorted(r.doc for r in df.filter(pred(cols)).collect())
+
+    def repeats(c):
+        return c["dup_word_frac"] > 0
+
+    def long_word(c):
+        return ~c["max_word_ok"]
+
+    assert hits(repetition_cols("text", words_col=whole), repeats) == [2]
+    assert hits(repetition_cols("text", words_col=last), repeats) == []
+    assert hits(c4_cols("text", "lang", words_col=whole), long_word) == [3]
+    assert hits(c4_cols("text", "lang", words_col=last), long_word) == []
+
+
 # ---------------------------------------------------------------------------
 # CDC merge semantics
 # ---------------------------------------------------------------------------

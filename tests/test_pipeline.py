@@ -51,6 +51,104 @@ def test_quality_catches_bad_values(spark, gold_tables):
         quality.run_checks(broken)
 
 
+def _run_materialized(spark, work, build_all=None):
+    """run_pipeline with gold written to Parquet, optionally through a
+    replacement for gold.build_all. Also returns the results of its
+    quality.run_checks call and the Spark jobs that call launched."""
+    sc = spark.sparkContext
+    seen = {}
+    real_checks = quality.run_checks
+
+    def counted(tables, checks=None):
+        group = f"test-run-checks-{id(seen)}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, "quality.run_checks")
+        try:
+            seen["results"] = real_checks(tables, checks)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+            seen["jobs"] = list(sc.statusTracker().getJobIdsForGroup(group))
+        return seen["results"]
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(quality, "run_checks", counted)
+        if build_all is not None:
+            mp.setattr(gold, "build_all", build_all)
+        out = run_pipeline(spark, work, materialize_gold=True)
+    return out, seen
+
+
+@pytest.fixture(scope="module")
+def materialized(spark):
+    with tempfile.TemporaryDirectory() as work:
+        out, seen = _run_materialized(spark, work)
+        written = {
+            name: spark.read.parquet(f"{work}/gold/{name}") for name in out
+        }
+        yield written, seen
+
+
+def test_materialized_gold_matches_lazy(gold_tables, materialized):
+    written, seen = materialized
+    assert set(written) == set(gold_tables)
+    for name, df in written.items():
+        assert _ms(df) == _ms(gold_tables[name]), name
+    assert [c.name for c in quality.GOLD_CHECKS] == list(seen["results"])
+    assert all(v == 0 for v in seen["results"].values())
+
+
+def test_materialized_quality_launches_no_jobs(materialized):
+    """The checks ride the gold writes as observed aggregates: reading
+    them back is a zero-job budget for quality.run_checks."""
+    _written, seen = materialized
+    assert seen["jobs"] == []
+
+
+def test_materialized_quality_catches_bad_values(spark):
+    real_build = gold.build_all
+
+    def neutral(silver):
+        out = real_build(silver)
+        out["home_vs_away"] = out["home_vs_away"].withColumn(
+            "location", F.lit("Neutral")
+        )
+        return out
+
+    with tempfile.TemporaryDirectory() as work:
+        with pytest.raises(quality.QualityError, match="home_vs_away.location"):
+            _run_materialized(spark, work, build_all=neutral)
+
+
+def test_materialized_quality_on_empty_gold(spark):
+    """Empty gold inputs still fire every Observation: the run returns
+    with all-zero counts instead of blocking in Observation.get."""
+    import threading
+
+    real_build = gold.build_all
+
+    def empty(silver):
+        return real_build({k: v.limit(0) for k, v in silver.items()})
+
+    box = {}
+
+    def target(work):
+        try:
+            box["out"] = _run_materialized(spark, work, build_all=empty)
+        except Exception as e:  # re-raised in the test thread below
+            box["err"] = e
+
+    with tempfile.TemporaryDirectory() as work:
+        t = threading.Thread(target=target, args=(work,), daemon=True)
+        t.start()
+        t.join(timeout=300)
+        assert not t.is_alive(), "run_pipeline blocked on empty gold"
+    if "err" in box:
+        raise box["err"]
+    _out, seen = box["out"]
+    assert len(seen["results"]) == 12
+    assert all(v == 0 for v in seen["results"].values())
+
+
 def test_pk_validation_raises_on_duplicates(spark):
     teams = synth.build_teams(spark)
     assert validate_pk(teams, ("id",)) == 0

@@ -919,3 +919,29 @@ def test_tws_registration_tracks_protobuf_capability():
         have = False
     assert sq.tws_available() == have
     assert ("stream_user_profile_tws" in queries()) == sq.tws_available()
+
+
+def test_stream_scratch_sweeps_default_tmp(monkeypatch, tmp_path):
+    """A stream entry's scratch copy left under /tmp by a run made
+    before TMPDIR was set is removed when the entry next runs with
+    TMPDIR pointing elsewhere."""
+    import os
+    import shutil
+    import tempfile
+
+    from nba_spurs_etl_spark.plans import stream_queries as sq
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    tag = f"sweep_test_{os.getpid()}"
+    work = sq._work_dir(tag, SF_SMOKE)
+    assert os.path.dirname(work) == str(tmp_path)
+    stale = os.path.join("/tmp", os.path.basename(work))
+    os.makedirs(stale, exist_ok=True)
+    try:
+        with open(os.path.join(stale, "part-0"), "w") as f:
+            f.write("left by an earlier run")
+        assert sq._work_dir(tag, SF_SMOKE) == work
+        assert not os.path.exists(stale)
+    finally:
+        shutil.rmtree(stale, ignore_errors=True)
