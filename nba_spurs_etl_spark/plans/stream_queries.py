@@ -72,9 +72,8 @@ def _work_dir(tag: str, sf_dir: str) -> str:
     # clear EVERY candidate base, not just the one selected now: the
     # headroom probe re-runs each invocation, so a flip (shm filling
     # between calls) must not strand the previous few-hundred-MB
-    # scratch copy in tmpfs RAM until reboot (ADVICE r11). /tmp, the
-    # default base, is swept too: a run made before TMPDIR was set
-    # left its copy there
+    # scratch copy in tmpfs RAM until reboot. /tmp, the default base,
+    # is swept too: a run made before TMPDIR was set left its copy there
     for b in {"/dev/shm", "/tmp", tmp_default}:
         shutil.rmtree(os.path.join(b, name), ignore_errors=True)
     base = "/dev/shm" if _shm_usable() else tmp_default

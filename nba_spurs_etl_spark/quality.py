@@ -93,18 +93,18 @@ def _by_table(checks: list[Check]) -> dict[str, list[Column]]:
 
 
 def observe(
-    tables: Mapping[str, DataFrame], checks: list[Check] | None = None
+    tables: Mapping[str, DataFrame],
 ) -> tuple[dict[str, DataFrame], dict[str, Observation]]:
-    """Attach each checked table's violation counts as an Observation.
+    """Attach each gold table's ``GOLD_CHECKS`` violation counts as an
+    Observation.
 
     Returns the tables to run the next action on (checked ones
     observed, the rest as given) and the Observations, which
     ``run_checks`` reads once that action has finished. A count may
     exceed the true one if a task is retried, but a table with no
     violation always observes 0."""
-    checks = GOLD_CHECKS if checks is None else checks
     out, observations = dict(tables), {}
-    for table, cols in _by_table(checks).items():
+    for table, cols in _by_table(GOLD_CHECKS).items():
         observations[table] = Observation()
         out[table] = tables[table].observe(observations[table], *cols)
     return out, observations
@@ -116,8 +116,9 @@ def run_checks(
 ) -> dict[str, int]:
     """Violation count per check; raises QualityError on any failure.
 
-    A table given as an Observation (see ``observe``) is read without
-    a Spark job; a DataFrame costs one aggregate over the table."""
+    A table given as an Observation (see ``observe``, which observes
+    ``GOLD_CHECKS``) is read without a Spark job; a DataFrame costs one
+    aggregate over the table."""
     checks = GOLD_CHECKS if checks is None else checks
     counts: dict[str, int] = {}
     for table, cols in _by_table(checks).items():
