@@ -854,13 +854,16 @@ def mislabel_flags(
             F.col("l2").alias("cn"),
         )
     )
-    # index-metadata caching, the codebook-sample pattern: centroids
-    # are built once per corpus snapshot and reused across plan builds
+    # centroids are built once per corpus snapshot and reused across
+    # plan builds (see _SAMPLE_CACHE)
     key = _index_cache_key(cents, "label_centroids")
-    cent_rows = _cache_rows_get(key)
+    cent_rows = _SAMPLE_CACHE.get(key)
     if cent_rows is None:
         cent_rows = cents.collect()
-        _cache_rows_put(key, cent_rows)
+        if key is not None:
+            if len(_SAMPLE_CACHE) >= _SAMPLE_CACHE_MAX:
+                _SAMPLE_CACHE.clear()
+            _SAMPLE_CACHE[key] = cent_rows
     v = F.col(vec_col)
     base = _nonzero_norm(df.filter(F.col(group_col).isNotNull()), vec_col)
     corpus = spread_for_compute(base, id_col).select(
@@ -883,33 +886,26 @@ def mislabel_flags(
     )
 
 
-#: codebook/centroid samples keyed on (plan identity, source files,
-#: file mtimes+sizes, params) — ANN index metadata is built once per
-#: corpus snapshot and reused across plan builds, exactly like a
-#: production index persisted beside the data. Repeated builds of the
-#: same entry (bench warm protocol, eval entries composing several
-#: indexes over one corpus) skip the TakeOrdered collect job entirely;
-#: any change to the source files or the feeding plan changes the key.
-#: The dict is the per-process tier; a JSON sidecar under
-#: ``_index_cache_dir()`` persists the same rows ACROSS processes
-#: (VERDICT r08 item 2 — a fresh driver bench was paying a cold
-#: codebook/centroid collect per ANN entry that a production
-#: deployment persists beside the data). The plan component of the
-#: key hashes the canonicalized-plan STRING (cross-process stable —
-#: verified over separate JVMs; ``semanticHash()`` is NOT), and a key
-#: that fails to reproduce simply misses, costing one collect.
+#: label-centroid rows keyed on (plan identity, source files, file
+#: mtimes+sizes, params): :func:`mislabel_flags` collects them once per
+#: corpus snapshot and reuses them across plan builds in this process
+#: (3 jobs warm vs 5 cold at sf0.01); any change to the source files or
+#: the feeding plan changes the key. In-process only — a fresh process
+#: pays one collect.
 _SAMPLE_CACHE: dict = {}
 _SAMPLE_CACHE_MAX = 64
-_DISK_CACHE_MAX_FILES = 128
 
 
 def canon_plan_str(df: DataFrame):
-    """Canonicalized logical-plan STRING, or None when it cannot be
+    """Canonicalized analyzed-plan STRING, or None when it cannot be
     produced. The one shared spelling of the idiom (r10 review: three
-    hand-rolled copies had drifted on the failure fallback): the
-    string is cross-process stable — verified by diffing separate
-    JVMs — while ``semanticHash()`` mixes relation object state and
-    changes per process. NOTE for cache keys: a LocalRelation
+    hand-rolled copies had drifted on the failure fallback). The
+    ANALYZED plan is canonicalized, not the unresolved one: there a
+    higher-order lambda's variable carries a name from a JVM-global
+    counter (``x_1`` on one build, ``x_45`` on the next), while the
+    analyzer's canonical form prints every lambda variable and
+    attribute by position, so repeated builds of one frame compare
+    equal. NOTE for cache keys: a LocalRelation
     (createDataFrame) canonicalizes WITHOUT its data (only the output
     schema prints), so a canon string alone never identifies
     in-memory data — pair it with input-file stamps
@@ -917,7 +913,7 @@ def canon_plan_str(df: DataFrame):
     uncacheable."""
     try:
         return (
-            df._jdf.queryExecution().logical().canonicalized().toString()
+            df._jdf.queryExecution().analyzed().canonicalized().toString()
         )
     except Exception:
         return None
@@ -972,8 +968,7 @@ def _index_cache_key(candidates: DataFrame, *params):
         return (st.st_mtime, st.st_size)
 
     # sha256 of the canonicalized-plan STRING, not semanticHash() (see
-    # canon_plan_str) — a hash mismatch would silently defeat the
-    # persisted sidecar tier below
+    # canon_plan_str)
     import hashlib
 
     canon = canon_plan_str(candidates)
@@ -981,146 +976,6 @@ def _index_cache_key(candidates: DataFrame, *params):
         return None
     plan_id = hashlib.sha256(canon.encode()).hexdigest()[:16]
     return (plan_id, files, tuple(stamp(f) for f in files), params)
-
-
-def _index_cache_dir():
-    """Sidecar directory for persisted index metadata. Overridable via
-    ``SPARK_GRAFT_INDEX_DIR`` (empty string disables persistence —
-    the in-process tier still works).
-
-    The default is PER-USER (ADVICE r09): a world-shared /tmp path
-    lets another local user pre-create the directory or plant JSON
-    payloads — cached rows define centroids/codebooks, so a poisoned
-    or clobbered sidecar silently changes ANN query results (the key
-    digest is computable from public repo code plus file stats).
-    Embedding the uid namespaces users apart; creation mode and the
-    ownership gate live in :func:`_trusted_cache_dir`."""
-    import os
-    import tempfile
-
-    d = os.environ.get("SPARK_GRAFT_INDEX_DIR")
-    if d == "":
-        return None
-    if d:
-        return d
-    uid = os.getuid() if hasattr(os, "getuid") else "u"
-    return os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ann_index_{uid}"
-    )
-
-
-def _trusted_cache_dir(create: bool = False):
-    """Resolve the sidecar dir and refuse anything not safely ours:
-    the path must be a real directory (not a symlink a hostile user
-    parked at the well-known name) owned by the current uid. Created
-    on demand with mode 0o700 so other local users can neither read
-    the cached plan metadata nor swap payloads under us. Applies to
-    an explicit ``SPARK_GRAFT_INDEX_DIR`` too — point it only at a
-    directory you own. Returns None (disk tier off) on any doubt;
-    persistence is an optimization, never worth trusting a foreign
-    directory for."""
-    import os
-    import stat
-
-    d = _index_cache_dir()
-    if d is None:
-        return None
-    if not os.path.lexists(d):
-        if not create:
-            return None
-        try:
-            os.makedirs(d, mode=0o700, exist_ok=True)
-        except OSError:
-            return None
-    try:
-        st = os.lstat(d)
-    except OSError:
-        return None
-    if not stat.S_ISDIR(st.st_mode):
-        return None  # symlink or plain file planted at the path
-    if hasattr(os, "getuid") and st.st_uid != os.getuid():
-        return None  # pre-created by another local user: untrusted
-    return d
-
-
-def _key_digest(key) -> str:
-    import hashlib
-
-    # repr of a tuple of (int, str, float) primitives is deterministic
-    return hashlib.sha256(repr(key).encode()).hexdigest()[:32]
-
-
-def _disk_cache_load(key):
-    import json
-    import os
-
-    d = _trusted_cache_dir()
-    if d is None:
-        return None
-    try:
-        with open(os.path.join(d, _key_digest(key) + ".json")) as f:
-            payload = json.load(f)
-    except (OSError, ValueError):
-        return None
-    if payload.get("key") != repr(key):
-        return None  # truncated-digest collision: treat as a miss
-    return payload.get("rows")
-
-
-def _disk_cache_store(key, rows) -> None:
-    import json
-    import os
-
-    d = _trusted_cache_dir(create=True)
-    if d is None:
-        return
-    try:
-        recs = [
-            r.asDict() if hasattr(r, "asDict") else dict(r) for r in rows
-        ]
-        path = os.path.join(d, _key_digest(key) + ".json")
-        tmp = path + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            # allow_nan default: NaN/Infinity tokens round-trip through
-            # json.loads; Python float repr is bit-exact either way
-            json.dump({"key": repr(key), "rows": recs}, f)
-        os.replace(tmp, path)  # atomic — concurrent writers last-win
-        entries = [
-            os.path.join(d, n) for n in os.listdir(d)
-            if n.endswith(".json")
-        ]
-        if len(entries) > _DISK_CACHE_MAX_FILES:
-            entries.sort(key=lambda p: os.path.getmtime(p))
-            for p in entries[: len(entries) - _DISK_CACHE_MAX_FILES]:
-                os.unlink(p)
-    except (OSError, TypeError, ValueError):
-        # persistence is an optimization: never fail the plan build
-        # over a sidecar write (read-only tmp, non-JSON value, races)
-        return
-
-
-def _cache_rows_get(key):
-    """Two-tier lookup: per-process dict first, then the JSON sidecar
-    (promoted into the dict on hit). Returns None on miss."""
-    if key is None:
-        return None
-    if key in _SAMPLE_CACHE:
-        return _SAMPLE_CACHE[key]
-    rows = _disk_cache_load(key)
-    if rows is not None:
-        if len(_SAMPLE_CACHE) >= _SAMPLE_CACHE_MAX:
-            _SAMPLE_CACHE.clear()
-        _SAMPLE_CACHE[key] = rows
-    return rows
-
-
-def _cache_rows_put(key, rows) -> None:
-    if key is None:
-        return
-    if len(_SAMPLE_CACHE) >= _SAMPLE_CACHE_MAX:
-        _SAMPLE_CACHE.clear()
-    _SAMPLE_CACHE[key] = rows
-    _disk_cache_store(key, rows)
 
 
 def _pq_sample_rows(
@@ -1134,12 +989,7 @@ def _pq_sample_rows(
     share: the ``n`` md5-smallest corpus rows, collected in md5 order
     (a prefix-closed ordering — the first n_cells of a max(n_cells,
     n_codes) collect ARE the n_cells sample, so composed indexes pay
-    one collect, not one per quantizer). Collected once per corpus
-    snapshot (see ``_SAMPLE_CACHE``)."""
-    key = _index_cache_key(candidates, id_col, vec_col, n, with_norm)
-    cached = _cache_rows_get(key)
-    if cached is not None:
-        return cached
+    one collect, not one per quantizer)."""
     v = F.col(vec_col)
     cols = [F.col(id_col).alias("cid"), v.alias("cv")]
     if with_norm:
@@ -1149,15 +999,13 @@ def _pq_sample_rows(
     # rendered literal / Arrow matrix build requires int ids —
     # int(None) was a latent plan-build crash (r08 review find). The
     # ANN oracles' cents CTEs mirror the predicate.
-    rows = (
+    return (
         candidates.filter(F.col(id_col).isNotNull())
         .select(*cols)
         .orderBy(md5_long(F.col("cid").cast("string")), F.col("cid"))
         .limit(n)
         .collect()
     )
-    _cache_rows_put(key, rows)
-    return rows
 
 
 def _pq_codebook_literal(code_rows, m: int, sub: int):

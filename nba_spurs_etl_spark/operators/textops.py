@@ -171,51 +171,6 @@ def text_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-#: Memo for the heavyweight filter-expression builders below. Building
-#: c4_cols + repetition_cols costs ~1100 Py4J round-trips (~0.3 s warm,
-#: 1-3 s in throttled windows — measured r12, cProfile: the time is
-#: socket recv in py4j send_command) and the result is an immutable
-#: expression tree that every invocation rebuilds identically. Keyed by
-#: the JVM gateway identity so a restarted JVM can never serve stale
-#: java object handles; only string column names (the shape every
-#: caller uses) are memoized — Column-typed args build fresh. Results
-#: are bit-identical by construction: the SAME expression objects
-#: produce the same analyzed plan (bench plan fingerprints unchanged).
-_COLS_MEMO: dict = {}
-
-
-def _cols_memo_key(builder: str, *args):
-    """Memo key for an expression-builder call, or None when any arg
-    is not a plain string (Column-typed args, and the None that
-    ``_col_name_or_none`` gives a complex Column, build fresh) or no
-    JVM gateway is up yet."""
-    from pyspark import SparkContext
-
-    gw = SparkContext._gateway
-    if gw is None:
-        return None
-    for a in args:
-        if not isinstance(a, str):
-            return None
-    return (id(gw), builder) + args
-
-
-def _col_name_or_none(c):
-    """A stable string for a plain column reference, else None (memo
-    only the F.col('name') shape every caller uses — a complex Column
-    argument opts out of memoization). An absent column is the
-    ``"<none>"`` sentinel, which is memoized."""
-    if c is None:
-        return "<none>"
-    try:
-        s = c._jc.toString()
-    except Exception:
-        return None
-    # bare references print as the plain name; anything with operators
-    # or functions is not a name and opts out
-    return s if s.isidentifier() else None
-
-
 def repetition_cols(
     text_col: str | Column, words_col: Column | None = None
 ) -> dict[str, Column]:
@@ -227,15 +182,6 @@ def repetition_cols(
     are hot: the expressions scan the word list O(words * distinct)
     times inside interpreted HOFs, and an inline split() re-tokenizes
     per scan (no codegen subexpression elimination there)."""
-    memo_key = (
-        _cols_memo_key(
-            "repetition_cols", text_col, _col_name_or_none(words_col)
-        )
-        if isinstance(text_col, str)
-        else None
-    )
-    if memo_key is not None and memo_key in _COLS_MEMO:
-        return dict(_COLS_MEMO[memo_key])
     w = words_col if words_col is not None else words(text_col)
     n = F.size(w)
     nd = F.size(F.array_distinct(w))
@@ -264,18 +210,13 @@ def repetition_cols(
     keep = (
         (dup_word_frac <= 0.63) & (top_word_frac <= 0.12) & (dup_bigram_frac <= 0.2)
     )
-    out = {
+    return {
         "n_words": n.cast("bigint"),
         "dup_word_frac": dup_word_frac,
         "top_word_frac": top_word_frac,
         "dup_bigram_frac": dup_bigram_frac,
         "gopher_keep": keep,
     }
-    if memo_key is not None:
-        if len(_COLS_MEMO) >= 32:
-            _COLS_MEMO.clear()
-        _COLS_MEMO[memo_key] = dict(out)
-    return out
 
 
 def repetition_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -305,15 +246,6 @@ def c4_cols(
 ) -> dict[str, Column]:
     """The C4-rule flag expressions, column-level (see ``c4_filters``).
     ``words_col``: see ``repetition_cols`` — bind a projected array."""
-    memo_key = (
-        _cols_memo_key(
-            "c4_cols", text_col, lang_col, _col_name_or_none(words_col)
-        )
-        if isinstance(text_col, str) and isinstance(lang_col, str)
-        else None
-    )
-    if memo_key is not None and memo_key in _COLS_MEMO:
-        return dict(_COLS_MEMO[memo_key])
     w = words_col if words_col is not None else words(text_col)
     n = F.size(w)
     sum_len = F.aggregate(w, F.lit(0), lambda acc, x: acc + F.length(x))
@@ -332,7 +264,7 @@ def c4_cols(
     text = F.col(text_col) if isinstance(text_col, str) else text_col
     no_brace = ~text.contains("{")
     keep = min_words_ok & word_len_ok & max_word_ok & no_brace & stop_ok
-    out = {
+    return {
         "min_words_ok": min_words_ok,
         "word_len_ok": word_len_ok,
         "max_word_ok": max_word_ok,
@@ -340,11 +272,6 @@ def c4_cols(
         "stopword_ok": stop_ok,
         "c4_keep": keep,
     }
-    if memo_key is not None:
-        if len(_COLS_MEMO) >= 32:
-            _COLS_MEMO.clear()
-        _COLS_MEMO[memo_key] = dict(out)
-    return out
 
 
 def c4_filters(

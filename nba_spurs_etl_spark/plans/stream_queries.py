@@ -80,31 +80,18 @@ def _work_dir(tag: str, sf_dir: str) -> str:
     return os.path.join(base, name)
 
 
-_DIR_SIZE_MEMO: dict = {}
-
-
 def _dir_size(path: str) -> int:
-    """Total byte size of a source directory tree, memoized — the
-    scratch headroom guard above calls this once per (stream entry,
-    invocation) and the layouts are immutable within a run."""
+    """Total byte size of a source directory tree, for the scratch
+    headroom guard above."""
     import os
 
-    hit = _DIR_SIZE_MEMO.get(path)
-    if hit is not None:
-        return hit
     total = 0
-    try:
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                try:
-                    total += os.stat(os.path.join(root, f)).st_size
-                except OSError:
-                    pass
-    except OSError:
-        pass
-    if len(_DIR_SIZE_MEMO) >= 32:
-        _DIR_SIZE_MEMO.clear()
-    _DIR_SIZE_MEMO[path] = total
+    for root, _dirs, files in os.walk(path):  # walk skips unreadable dirs
+        for f in files:
+            try:
+                total += os.stat(os.path.join(root, f)).st_size
+            except OSError:
+                pass
     return total
 
 

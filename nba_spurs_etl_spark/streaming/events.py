@@ -24,6 +24,7 @@ Scale notes:
 from __future__ import annotations
 
 import itertools
+import shutil
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,7 +47,8 @@ def _drain_checkpoint_dir(name: str) -> str:
     where available (/dev/shm) — checkpoint fsync is a measurable
     fraction of a short drain (~0.4 s/query on the bench). Unique per
     process AND per query name, so no drain can ever resume another's
-    committed offsets. Production streams (e.g. CdcSnapshot.attach)
+    committed offsets; :func:`run_stream_to_table` removes each one
+    when its drain ends. Production streams (e.g. CdcSnapshot.attach)
     pass their own durable checkpoint path instead — a memory-sink
     drain is ephemeral by definition, its checkpoint never outlives
     the result."""
@@ -321,17 +323,25 @@ def run_stream_to_table(
     for k, v in overrides.items():
         saved[k] = spark.conf.get(k, None)
         spark.conf.set(k, v)
+    ckpt = _drain_checkpoint_dir(name)
+    q = None
     try:
         q = (
             df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option("checkpointLocation", _drain_checkpoint_dir(name))
+            .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
     finally:
+        # the drain's checkpoint is never resumed (the name is unique
+        # per call): remove it once the query is down, or every drain
+        # leaves its offsets/state files in tmpfs RAM until reboot
+        if q is not None and q.isActive:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
         for k, v in saved.items():
             if v is None:
                 spark.conf.unset(k)

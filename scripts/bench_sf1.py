@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Full-catalog benchmark at sf1 (10x the per-round bench scale).
 
-Upgrades the per-operator 10x probes (scripts/scale_probe.py, rows in
-docs/SCALE.md) to whole-suite scaling evidence: every catalog query
+Upgrades the per-operator 10x probes (rows in docs/SCALE.md) to
+whole-suite scaling evidence: every catalog query
 runs at the replicated-10x scale under the same warm protocol as
 bench.py (two runs, second reported; noop sink; python-worker +
 scan warm-up), and the per-query table is written to
@@ -11,34 +11,74 @@ from the committed BENCH_DETAIL.json so slopes are reviewable in one
 artifact.
 
 The 10x corpus is the same deliberately adversarial replication the
-probes use (scale_probe.build): key-offset facts, dims unchanged —
-every document/vector exists 10x, so near-dup/similarity operators see
-their posting-list worst case, not an easy uniform scale-up.
+probes used (``build``): key-offset facts, dims unchanged — every
+document/vector exists 10x, so near-dup/similarity operators see their
+posting-list worst case, not an easy uniform scale-up.
 
 Usage: python scripts/bench_sf1.py  (approx 15-30 min at local[32])
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 import time
 
+from pyspark.sql import functions as F
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nba_spurs_etl_spark.plans.catalog import queries  # noqa: E402
 from nba_spurs_etl_spark.session import default_parallelism, get_spark  # noqa: E402
-from nba_spurs_etl_spark.sources.catalog import TESTDATA_TABLES, load_table  # noqa: E402
-
-from scale_probe import build  # noqa: E402
+from nba_spurs_etl_spark.sources.catalog import (  # noqa: E402
+    DEFAULT_SF_DIR as SRC,
+    TESTDATA_TABLES,
+    load_table,
+)
 
 K = 10
 DST = f"/tmp/sfx{K}"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def build(spark, dst: str, k: int) -> None:
+    """Replicate SRC k times into dst: fact keys offset per copy, dim
+    tables copied unchanged."""
+
+    def rep(name: str, offsets: dict[str, int]) -> None:
+        df = spark.read.parquet(f"{SRC}/{name}.parquet")
+        reps = []
+        for i in range(k):
+            d = df
+            for c, stride in offsets.items():
+                d = d.withColumn(c, F.col(c) + i * stride)
+            reps.append(d)
+        out = reps[0]
+        for d in reps[1:]:
+            out = out.unionByName(d)
+        # plain part-file directories everywhere (round 5): the
+        # streaming readers are layout-aware, and a single-file
+        # documents/events replica capped batch scans at
+        # size/maxPartitionBytes tasks — measured 3-6x wall on the
+        # text/dedup family at 10x
+        out.write.mode("overwrite").parquet(f"{dst}/{name}.parquet")
+
+    rep("lineitem", {"l_orderkey": 10_000_000})
+    rep("orders", {"o_orderkey": 10_000_000, "o_custkey": 1_000_000})
+    rep("customer", {"c_custkey": 1_000_000})
+    rep("events", {"event_id": 100_000_000, "user_id": 1_000_000})
+    rep("documents", {"doc_id": 10_000_000})
+    rep("embeddings", {"vec_id": 10_000_000})
+    for dim in ["region", "nation", "supplier", "part"]:
+        spark.read.parquet(f"{SRC}/{dim}.parquet").write.mode(
+            "overwrite"
+        ).parquet(f"{dst}/{dim}.parquet")
+
+
 def main() -> int:
+    argparse.ArgumentParser(description=__doc__.split("\n\n")[0]).parse_args()
     spark = get_spark("bench-sf1")
     if not os.path.isdir(DST):
         t0 = time.perf_counter()
@@ -108,7 +148,7 @@ def main() -> int:
         "unit": "sec",
         "sf": 1.0,
         "scale_note": f"sf0.1 replicated {K}x with key offsets "
-        "(scale_probe.build); dims unchanged",
+        "(build); dims unchanged",
         "queries": timings,
         "cold_queries": cold,
         "sf01_warm_basis": sf01,

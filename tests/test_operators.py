@@ -3235,63 +3235,37 @@ def test_grid_radius_join_equals_bruteforce(spark):
     assert (990, 991, 22500) in got
 
 
-def test_ann_index_disk_cache_roundtrip_and_invalidation(
-    spark, tmp_path, monkeypatch
-):
-    """The persisted index sidecar (VERDICT r08 item 2) survives a
-    'fresh process' (simulated by clearing the in-process tier): rows
-    round-trip value-exact, the DISK copy is provably the source on
-    the second build, and touching the source file's mtime OR
-    rewriting it at a different size invalidates the key."""
-    import json
+def test_index_cache_key_invalidates_on_mtime_and_size(spark, tmp_path):
+    """The corpus-snapshot key behind the label-centroid cache and the
+    bm25 bind memo: a rebuilt frame over unchanged files gets the same
+    key, while touching a source file's mtime OR rewriting it at a
+    different size gives a new one."""
     import os
 
     from nba_spurs_etl_spark.operators import similarity as S
 
-    cache_dir = tmp_path / "annidx"
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(cache_dir))
     src = str(tmp_path / "corpus.parquet")
     spark.createDataFrame(
         [(i, [float(i), float(i % 3), 1.0]) for i in range(40)],
         "vec_id long, embedding array<double>",
     ).coalesce(1).write.parquet(src)
-    cand = spark.read.parquet(src)
-
-    rows1 = S._pq_sample_rows(cand, "vec_id", "embedding", 8,
-                              with_norm=True)
-    files = sorted(os.listdir(cache_dir))
-    assert len(files) == 1
-    # fresh-process simulation: only the sidecar remains
-    S._SAMPLE_CACHE.clear()
-    rows2 = S._pq_sample_rows(cand, "vec_id", "embedding", 8,
-                              with_norm=True)
-    assert [dict(r) if isinstance(r, dict) else r.asDict()
-            for r in rows1] == list(rows2)
-    # prove the disk copy was the source: tamper it, clear mem, reload
-    p = cache_dir / files[0]
-    payload = json.loads(p.read_text())
-    payload["rows"][0]["cid"] = -999
-    p.write_text(json.dumps(payload))
-    S._SAMPLE_CACHE.clear()
-    rows3 = S._pq_sample_rows(cand, "vec_id", "embedding", 8,
-                              with_norm=True)
-    assert rows3[0]["cid"] == -999
-    # mtime bump invalidates: a fresh collect returns the TRUE rows
+    k0 = S._index_cache_key(spark.read.parquet(src), "p")
+    assert k0 is not None
+    assert S._index_cache_key(spark.read.parquet(src), "p") == k0
     data_file = next(
         f for f in os.listdir(src)
         if f.endswith(".parquet") and not f.startswith("_")
     )
-    os.utime(os.path.join(src, data_file), None)
-    S._SAMPLE_CACHE.clear()
+    fp = os.path.join(src, data_file)
+    # mtime bump invalidates
+    st = os.stat(fp)
+    os.utime(fp, (st.st_atime, st.st_mtime + 5))
     cand = spark.read.parquet(src)  # fresh plan over the touched file
-    rows4 = S._pq_sample_rows(cand, "vec_id", "embedding", 8,
-                              with_norm=True)
-    assert rows4[0]["cid"] != -999
+    k_before = S._index_cache_key(cand, "p")
+    assert k_before != k0
     # size participates in the key (ADVICE r08): an mtime-preserving
     # rewrite at a DIFFERENT size must miss
-    fp = os.path.join(src, data_file)
     st = os.stat(fp)
-    k_before = S._index_cache_key(cand, "p")
     with open(fp, "ab") as f:  # same mtime, different size
         f.write(b"\x00")
     os.utime(fp, (st.st_atime, st.st_mtime))  # restore mtime exactly
@@ -3299,65 +3273,80 @@ def test_ann_index_disk_cache_roundtrip_and_invalidation(
     assert k_before != k_after
 
 
-def test_ann_sidecar_trust_gate(tmp_path, monkeypatch):
-    """ADVICE r09: the sidecar disk tier must refuse directories that
-    are not safely ours — cached rows define centroids/codebooks, so
-    a poisoned world-shared path silently changes ANN results. Pins:
-    per-user default path, 0o700 creation, and refusal of (a) a plain
-    file parked at the path, (b) a symlink parked at the path, (c) a
-    directory owned by another uid (simulated via the lstat seam)."""
-    import os
-    import stat
+def test_canon_plan_str_stable_across_lambda_builds(spark):
+    """Every higher-order lambda gets a fresh variable name from a
+    JVM-global counter, so the unresolved plans of two identical
+    builds differ; the canonicalized analyzed plan, and the lineage
+    token hashed from it, must not."""
+    from nba_spurs_etl_spark.operators.similarity import (
+        canon_plan_str,
+        lineage_token,
+    )
 
+    def build():
+        df = spark.createDataFrame(
+            [(1, [1.0, 2.0], [3.0, 4.0])],
+            "id long, a array<double>, b array<double>",
+        )
+        dot = F.aggregate(
+            F.zip_with("a", "b", lambda x, y: x * y),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+        return df.filter(dot > 1.0)
+
+    a, b = build(), build()
+    assert canon_plan_str(a) is not None
+    assert canon_plan_str(a) == canon_plan_str(b)
+    assert lineage_token(a) == lineage_token(b)
+
+
+def _jobs_of_build_and_drain(spark, name):
+    """Spark jobs one build + noop drain of a catalog entry launches."""
+    from nba_spurs_etl_spark.plans.catalog import queries
+
+    from .conftest import SF_SMOKE
+
+    sc = spark.sparkContext
+    group = f"test-jobs-{name}-{id(sc)}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, name)
+    try:
+        queries()[name](spark, SF_SMOKE).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_mislabel_label_centroids_cached_across_builds(spark):
+    """The label-centroid cache earns its keep: a second build of
+    embedding_mislabel_flags reuses the collected centroids and
+    launches fewer jobs than a build with the cache cleared."""
     from nba_spurs_etl_spark.operators import similarity as S
 
-    # default path embeds the uid (per-user namespace)
-    monkeypatch.delenv("SPARK_GRAFT_INDEX_DIR", raising=False)
-    if hasattr(os, "getuid"):
-        assert str(os.getuid()) in S._index_cache_dir()
+    S._SAMPLE_CACHE.clear()
+    _jobs_of_build_and_drain(spark, "embedding_mislabel_flags")
+    assert len(S._SAMPLE_CACHE) == 1
+    warm = _jobs_of_build_and_drain(spark, "embedding_mislabel_flags")
+    S._SAMPLE_CACHE.clear()
+    cleared = _jobs_of_build_and_drain(spark, "embedding_mislabel_flags")
+    assert warm < cleared
 
-    # creation mode is 0o700
-    d = tmp_path / "fresh"
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(d))
-    got = S._trusted_cache_dir(create=True)
-    assert got == str(d)
-    assert stat.S_IMODE(os.stat(d).st_mode) == 0o700
 
-    # (a) plain file planted at the path -> disk tier off, and the
-    # store path must not raise
-    f = tmp_path / "file"
-    f.write_text("not a dir")
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(f))
-    assert S._trusted_cache_dir() is None
-    assert S._trusted_cache_dir(create=True) is None
-    S._disk_cache_store(("k",), [{"x": 1}])  # no-op, no exception
-    assert S._disk_cache_load(("k",)) is None
+def test_pq_family_builds_cache_no_samples(spark):
+    """The PQ/IVF codebook sample is collected per build: nothing is
+    left in the in-process cache."""
+    from nba_spurs_etl_spark.operators import similarity as S
+    from nba_spurs_etl_spark.plans.catalog import queries
 
-    # (b) symlink parked at the path (even pointing at our own dir)
-    real = tmp_path / "real"
-    real.mkdir()
-    link = tmp_path / "link"
-    link.symlink_to(real)
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(link))
-    assert S._trusted_cache_dir() is None
+    from .conftest import SF_SMOKE
 
-    # (c) directory owned by another uid: simulate via the lstat seam
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(real))
-    if hasattr(os, "getuid"):
-        true_lstat = os.lstat
-
-        def foreign_lstat(p, *a, **kw):
-            r = true_lstat(p, *a, **kw)
-            if str(p) == str(real):
-                vals = list(r)
-                vals[stat.ST_UID] = r.st_uid + 1
-                return os.stat_result(vals)
-            return r
-
-        monkeypatch.setattr(os, "lstat", foreign_lstat)
-        assert S._trusted_cache_dir() is None
-        monkeypatch.setattr(os, "lstat", true_lstat)
-    assert S._trusted_cache_dir() == str(real)
+    S._SAMPLE_CACHE.clear()
+    for _ in range(2):
+        queries()["similarity_topk_ivf_pq"](spark, SF_SMOKE).count()
+    assert S._SAMPLE_CACHE == {}
 
 
 def test_doubles_sql_roundtrips_edge_values_bit_exact(spark):

@@ -841,7 +841,7 @@ def test_recommendations_rank_is_window_group_limited(spark, catalog):
     7 global ROW_NUMBERs, melted to one window partitioned by metric)
     must plan a WindowGroupLimit below the Window (VERDICT r08 item 7):
     InferWindowGroupLimit currently rescues the rank<=5 filter shape,
-    and scripts/topk_replan_probe.py measured 43x on the unprotected
+    and a 10x probe (docs/SCALE.md) measured 43x on the unprotected
     form — this pin catches any conf/upgrade/refactor that drops the
     rescue, instead of the regression surfacing as a full per-metric
     sort of every player at scale."""

@@ -37,6 +37,23 @@ def test_stream_tumbling_matches_batch(spark):
     assert _ms(res) == _ms(batch)
 
 
+def test_drain_leaves_no_checkpoint_behind(spark):
+    """A memory-sink drain's checkpoint is never resumed, so the drain
+    removes it instead of leaving it under the scratch root."""
+    import os
+
+    from nba_spurs_etl_spark.streaming import events
+
+    res = run_stream_to_table(
+        stream_tumbling_agg(read_events_stream(spark, SF_SMOKE)), spark
+    )
+    assert res.count() > 0
+    left = [
+        n for n in os.listdir(events._ckpt_root) if n.startswith("stream_sink_")
+    ]
+    assert left == []
+
+
 def test_stream_sliding_covers_tumbling(spark):
     res = run_stream_to_table(
         stream_sliding_agg(read_events_stream(spark, SF_SMOKE)), spark
