@@ -1,11 +1,15 @@
 """End-to-end pipeline driver: bronze -> silver -> gold -> quality.
 
-Replaces the reference's Airflow DAG + dbt run (SURVEY §3): the three
-task groups become three function calls; Spark's lazy plan + action
-boundaries replace the task DAG; model dependency order is plain call
-order inside ``plans.gold.build_all``. dbt's test step needs no scan of
-its own when gold is materialized: the quality checks are observed
-aggregates on the gold writes (``quality.observe``).
+Replaces the reference's Airflow DAG + dbt run (SURVEY §3): each task
+group becomes one stage, and the stages are barriers, run in order —
+bronze writes, silver loads and PK checks, silver writes, gold writes,
+quality. The tables inside a stage are independent, so their actions
+run concurrently (``session.run_each``, one driver thread per table,
+where dbt ran one model at a time with ``threads: 1``). Model
+dependencies inside gold are Spark's lazy plans over the persisted
+silver, built in ``plans.gold.build_all``. dbt's test step needs no
+scan of its own when gold is materialized: the quality checks are
+observed aggregates on the gold writes (``quality.observe``).
 
 Typical use::
 
@@ -24,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import quality
 from .plans import gold
+from .session import run_each
 from .sources import bronze, silver
 
 
@@ -65,10 +70,12 @@ def run_pipeline(
         to_write = gold_tables
         if run_quality:
             to_write, checked = quality.observe(gold_tables)
-        for name, df in to_write.items():
-            df.write.mode("overwrite").parquet(
-                os.path.join(work_dir, "gold", name)
-            )
+
+        def write(name: str) -> None:
+            path = os.path.join(work_dir, "gold", name)
+            to_write[name].write.mode("overwrite").parquet(path)
+
+        run_each(spark, write, to_write)
 
     if run_quality:
         quality.run_checks(checked)

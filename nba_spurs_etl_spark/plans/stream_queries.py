@@ -9,6 +9,9 @@ oracle-checked (events_tumbling_agg / events_sessionize).
 
 from __future__ import annotations
 
+import atexit
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,12 +26,22 @@ from ..streaming import (
 )
 from .registry import register, registry
 
+#: every scratch dir ``_work_dir`` has handed out in this process
+_WORK_DIRS: set[str] = set()
+
+
+@atexit.register
+def _remove_work_dirs() -> None:
+    for d in _WORK_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
+
 
 def _work_dir(tag: str, sf_dir: str) -> str:
     """Deterministic scratch dir per (query, source dir), CLEARED on
     each invocation: mkdtemp here leaked one changelog/snapshot/index
     copy per invocation (bench + parity re-run these entries many
-    times per round), growing /tmp without bound.
+    times per round), growing /tmp without bound. The last copy of
+    each goes at process exit.
 
     On tmpfs (/dev/shm) where available (r11): the changelog files,
     versioned snapshot parquets, and stream checkpoints these entries
@@ -40,7 +53,6 @@ def _work_dir(tag: str, sf_dir: str) -> str:
     the snapshot classes; nothing here changes those paths."""
     import hashlib
     import os
-    import shutil
     import tempfile
 
     name = (
@@ -77,7 +89,9 @@ def _work_dir(tag: str, sf_dir: str) -> str:
     for b in {"/dev/shm", "/tmp", tmp_default}:
         shutil.rmtree(os.path.join(b, name), ignore_errors=True)
     base = "/dev/shm" if _shm_usable() else tmp_default
-    return os.path.join(base, name)
+    path = os.path.join(base, name)
+    _WORK_DIRS.add(path)
+    return path
 
 
 def _dir_size(path: str) -> int:

@@ -12,13 +12,25 @@ cluster at 100 TB:
 - Arrow enabled for the few pandas-UDF operators (similarity/multimodal).
 - Parquet scans keep default 128 MiB ``maxPartitionBytes`` — at 100 TB
   that is ~800k input splits, which Spark schedules fine; do NOT lower it.
+
+``run_each`` is the Spark counterpart of dbt's ``threads``: the
+pipeline runs the per-table actions of one stage concurrently, one
+driver thread per table, and the scheduler shares the cores between
+their jobs.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+K = TypeVar("K")
+V = TypeVar("V")
 
 
 def default_parallelism() -> int:
@@ -67,3 +79,23 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def run_each(
+    spark: SparkSession, fn: Callable[[K], V], keys: Iterable[K]
+) -> dict[K, V]:
+    """``{key: fn(key)}``, with the calls running concurrently, one
+    thread per key.
+
+    The keys are a stage's tables (at most 7), so the pool is sized by
+    them, never by data. Each call inherits the caller's job group,
+    local properties and tags, captured at submit time, so its Spark
+    jobs are accounted to the caller; this needs PySpark's pinned
+    thread mode, its default. Every call finishes before this returns;
+    the first failure in key order is the one raised."""
+    keys = list(keys)
+    if not keys:
+        return {}
+    with ThreadPoolExecutor(max_workers=min(len(keys), 7)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn), k) for k in keys]
+    return {k: f.result() for k, f in zip(keys, futures)}

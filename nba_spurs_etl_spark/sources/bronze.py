@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
+from ..session import run_each
 
 ENTITY_BUILDERS = {
     "teams": synth.build_teams,
@@ -81,7 +82,10 @@ def write_entity(
 
 
 def write_all(spark: SparkSession, out_dir: str) -> dict[str, str]:
-    """The 8-task bronze group as one loop (dependencies are data-free
-    in the reference — its chain is an artifact of Airflow workers
-    sharing /tmp, not of the data flow)."""
-    return {name: write_entity(spark, name, out_dir) for name in ENTITY_BUILDERS}
+    """The 8-task bronze group as one stage: its 7 writes run
+    concurrently (dependencies are data-free in the reference — its
+    chain is an artifact of Airflow workers sharing /tmp, not of the
+    data flow), and the stage ends when the last write has."""
+    return run_each(
+        spark, lambda name: write_entity(spark, name, out_dir), ENTITY_BUILDERS
+    )

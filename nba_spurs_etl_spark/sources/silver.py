@@ -22,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..normalize import normalize_columns
+from ..session import run_each
 
 # table -> primary key columns (None = no PK), per reference dags:427-435
 LOAD_MAP: dict[str, tuple[str, ...] | None] = {
@@ -112,25 +113,33 @@ def load_silver_table(
 
 
 def load_all(spark: SparkSession, bronze_dir: str) -> dict[str, DataFrame]:
-    """The reference's insert_all_files (drop+reload of all 7 tables)."""
-    return {
-        name: load_silver_table(spark, bronze_dir, name) for name in LOAD_MAP
-    }
+    """The reference's insert_all_files (drop+reload of all 7 tables),
+    the tables loaded and PK-checked concurrently. On duplicates the
+    violation raised is that of the first failing table in LOAD_MAP
+    order."""
+    return run_each(
+        spark, lambda name: load_silver_table(spark, bronze_dir, name), LOAD_MAP
+    )
 
 
 def save_warehouse(
     silver: dict[str, DataFrame], warehouse_dir: str
 ) -> dict[str, str]:
-    """Persist silver as Parquet (full-refresh overwrite, S13/S15).
+    """Persist silver as Parquet (full-refresh overwrite, S13/S15), the
+    tables written concurrently.
 
     games is the only table that grows at scale — partition it by
     season so gold's season-grouped scans prune partitions."""
-    paths = {}
-    for name, df in silver.items():
+
+    def save(name: str) -> str:
         path = os.path.join(warehouse_dir, name)
-        writer = df.write.mode("overwrite")
+        writer = silver[name].write.mode("overwrite")
         if name == "games":
             writer = writer.partitionBy("season")
         writer.parquet(path)
-        paths[name] = path
-    return paths
+        return path
+
+    if not silver:
+        return {}
+    spark = next(iter(silver.values())).sparkSession
+    return run_each(spark, save, silver)

@@ -48,17 +48,19 @@ def _drain_checkpoint_dir(name: str) -> str:
     fraction of a short drain (~0.4 s/query on the bench). Unique per
     process AND per query name, so no drain can ever resume another's
     committed offsets; :func:`run_stream_to_table` removes each one
-    when its drain ends. Production streams (e.g. CdcSnapshot.attach)
-    pass their own durable checkpoint path instead — a memory-sink
-    drain is ephemeral by definition, its checkpoint never outlives
-    the result."""
+    when its drain ends, and the root itself goes at process exit.
+    Production streams (e.g. CdcSnapshot.attach) pass their own durable
+    checkpoint path instead — a memory-sink drain is ephemeral by
+    definition, its checkpoint never outlives the result."""
     global _ckpt_root
     if _ckpt_root is None:
+        import atexit
         import os
         import tempfile
 
         base = "/dev/shm" if os.path.isdir("/dev/shm") else None
         _ckpt_root = tempfile.mkdtemp(prefix="spark_graft_drain_ckpt_", dir=base)
+        atexit.register(shutil.rmtree, _ckpt_root, ignore_errors=True)
     import os
 
     return os.path.join(_ckpt_root, name)

@@ -17,6 +17,7 @@ from nba_spurs_etl_spark import quality, synth
 from nba_spurs_etl_spark.normalize import normalize_columns, project_to_schema
 from nba_spurs_etl_spark.pipeline import run_pipeline
 from nba_spurs_etl_spark.plans import gold
+from nba_spurs_etl_spark.sources import bronze, silver
 from nba_spurs_etl_spark.sources.silver import PrimaryKeyViolation, validate_pk
 
 
@@ -51,30 +52,62 @@ def test_quality_catches_bad_values(spark, gold_tables):
         quality.run_checks(broken)
 
 
+#: run_pipeline's stages, wrapped where run_pipeline looks them up
+STAGES = (
+    (bronze, "write_all"),
+    (silver, "load_all"),
+    (silver, "save_warehouse"),
+    (gold, "build_all"),
+    (quality, "run_checks"),
+)
+
+#: Spark jobs per stage of a materialized run_pipeline. "run_pipeline"
+#: holds the jobs no stage claims: the 6 gold writes.
+JOB_BUDGET = {
+    "write_all": 7,
+    "load_all": 19,
+    "save_warehouse": 7,
+    "build_all": 0,
+    "run_checks": 0,
+    "run_pipeline": 33,
+}
+
+
 def _run_materialized(spark, work, build_all=None):
     """run_pipeline with gold written to Parquet, optionally through a
-    replacement for gold.build_all. Also returns the results of its
-    quality.run_checks call and the Spark jobs that call launched."""
+    replacement for gold.build_all. The call and each of its stages run
+    under a job group of their own. Also returns what each returned,
+    the Spark job ids of each group, and the job group each left
+    behind in the calling thread."""
     sc = spark.sparkContext
-    seen = {}
-    real_checks = quality.run_checks
+    seen = {"returned": {}, "groups": {}, "left": {}, "jobs": {}}
 
-    def counted(tables, checks=None):
-        group = f"test-run-checks-{id(seen)}"
-        prev = sc.getLocalProperty("spark.jobGroup.id")
-        sc.setJobGroup(group, "quality.run_checks")
-        try:
-            seen["results"] = real_checks(tables, checks)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", prev)
-            seen["jobs"] = list(sc.statusTracker().getJobIdsForGroup(group))
-        return seen["results"]
+    def grouped(name, fn):
+        def call(*args, **kwargs):
+            group = seen["groups"][name] = f"test-{name}-{id(seen)}"
+            prev = sc.getLocalProperty("spark.jobGroup.id")
+            sc.setJobGroup(group, name)
+            try:
+                seen["returned"][name] = fn(*args, **kwargs)
+                seen["left"][name] = sc.getLocalProperty("spark.jobGroup.id")
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", prev)
+            return seen["returned"][name]
+
+        return call
 
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(quality, "run_checks", counted)
         if build_all is not None:
             mp.setattr(gold, "build_all", build_all)
-        out = run_pipeline(spark, work, materialize_gold=True)
+        for mod, attr in STAGES:
+            mp.setattr(mod, attr, grouped(attr, getattr(mod, attr)))
+        out = grouped("run_pipeline", run_pipeline)(
+            spark, work, materialize_gold=True
+        )
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    for name, group in seen["groups"].items():
+        seen["jobs"][name] = list(sc.statusTracker().getJobIdsForGroup(group))
     return out, seen
 
 
@@ -93,15 +126,26 @@ def test_materialized_gold_matches_lazy(gold_tables, materialized):
     assert set(written) == set(gold_tables)
     for name, df in written.items():
         assert _ms(df) == _ms(gold_tables[name]), name
-    assert [c.name for c in quality.GOLD_CHECKS] == list(seen["results"])
-    assert all(v == 0 for v in seen["results"].values())
+    results = seen["returned"]["run_checks"]
+    assert [c.name for c in quality.GOLD_CHECKS] == list(results)
+    assert all(v == 0 for v in results.values())
 
 
 def test_materialized_quality_launches_no_jobs(materialized):
     """The checks ride the gold writes as observed aggregates: reading
     them back is a zero-job budget for quality.run_checks."""
     _written, seen = materialized
-    assert seen["jobs"] == []
+    assert seen["jobs"]["run_checks"] == []
+
+
+def test_materialized_pipeline_job_budget(materialized):
+    """Every stage launches exactly its budget of Spark jobs, each in
+    the job group of the thread that called the stage: the tables of a
+    stage run on worker threads, which inherit the caller's job group.
+    Each stage leaves its caller's job group as it was."""
+    _written, seen = materialized
+    assert {k: len(v) for k, v in seen["jobs"].items()} == JOB_BUDGET
+    assert seen["left"] == seen["groups"]
 
 
 def test_materialized_quality_catches_bad_values(spark):
@@ -145,8 +189,9 @@ def test_materialized_quality_on_empty_gold(spark):
     if "err" in box:
         raise box["err"]
     _out, seen = box["out"]
-    assert len(seen["results"]) == 12
-    assert all(v == 0 for v in seen["results"].values())
+    results = seen["returned"]["run_checks"]
+    assert len(results) == 12
+    assert all(v == 0 for v in results.values())
 
 
 def test_pk_validation_raises_on_duplicates(spark):
@@ -155,11 +200,34 @@ def test_pk_validation_raises_on_duplicates(spark):
     dup = teams.unionByName(teams.limit(1))
     assert validate_pk(dup, ("id",)) == 1
     with pytest.raises(PrimaryKeyViolation):
-        from nba_spurs_etl_spark.sources import silver as silver_mod
-
         with tempfile.TemporaryDirectory() as d:
             dup.write.mode("overwrite").json(f"{d}/teams")
-            silver_mod.load_silver_table(spark, d, "teams")
+            silver.load_silver_table(spark, d, "teams")
+
+
+def test_pipeline_pk_violation_is_deterministic(spark, tmp_path):
+    """Two bronze tables with a duplicated PK: every run raises for
+    silver.teams, the first of the two in LOAD_MAP order, whichever
+    check finishes first. No worker thread outlives the failed stage."""
+    import threading
+
+    def duplicated(build):
+        def dup(s):
+            df = build(s)
+            return df.unionByName(df.limit(1))
+
+        return dup
+
+    threads = threading.active_count()
+    with pytest.MonkeyPatch.context() as mp:
+        for name in ("teams", "free_agents"):
+            mp.setitem(
+                bronze.ENTITY_BUILDERS, name, duplicated(bronze.ENTITY_BUILDERS[name])
+            )
+        for i in range(3):
+            with pytest.raises(PrimaryKeyViolation, match=r"^silver\.teams: 1 "):
+                run_pipeline(spark, str(tmp_path / str(i)))
+            assert threading.active_count() == threads
 
 
 def test_normalize_first_wins_and_projection(spark):

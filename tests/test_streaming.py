@@ -54,6 +54,65 @@ def test_drain_leaves_no_checkpoint_behind(spark):
     assert left == []
 
 
+def _run_script(script: str, cwd) -> str:
+    """Run ``script`` in a fresh interpreter that imports this checkout;
+    its last stdout line."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, SPARK_DRIVER_MEMORY="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=cwd, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    return out.stdout.strip().splitlines()[-1]
+
+
+def test_drain_checkpoint_root_removed_at_exit(tmp_path):
+    """The per-process drain checkpoint root goes when the process
+    exits, not only the checkpoints of the drains under it."""
+    import os
+
+    root = _run_script(
+        f"""
+import os
+from nba_spurs_etl_spark.session import get_spark
+from nba_spurs_etl_spark.streaming import events
+spark = get_spark("drain-root-exit", master="local[1]", shuffle_partitions=1)
+df = events.stream_tumbling_agg(events.read_events_stream(spark, {SF_SMOKE!r}))
+assert events.run_stream_to_table(df, spark).count() > 0
+assert os.path.isdir(events._ckpt_root)
+print(events._ckpt_root)
+""",
+        tmp_path,
+    )
+    assert "spark_graft_drain_ckpt_" in root
+    assert not os.path.exists(root)
+
+
+def test_stream_scratch_removed_at_exit(tmp_path):
+    """Each stream entry's scratch dir outlives its call (the next call
+    clears it) but not the process."""
+    import os
+
+    work = _run_script(
+        f"""
+import os
+from nba_spurs_etl_spark.plans.stream_queries import _work_dir
+work = _work_dir("exit", {str(tmp_path)!r})
+os.makedirs(os.path.join(work, "snap"))
+open(os.path.join(work, "snap", "part-0"), "w").close()
+print(work)
+""",
+        tmp_path,
+    )
+    assert "spark_stream_exit_" in work
+    assert not os.path.exists(work)
+
+
 def test_stream_sliding_covers_tumbling(spark):
     res = run_stream_to_table(
         stream_sliding_agg(read_events_stream(spark, SF_SMOKE)), spark
