@@ -11,6 +11,12 @@ silver, built in ``plans.gold.build_all``. dbt's test step needs no
 scan of its own when gold is materialized: the quality checks are
 observed aggregates on the gold writes (``quality.observe``).
 
+Each layer hands the next the schema of what it wrote, so no layer
+scans data only to learn a schema: bronze returns its entities' JSON
+schemas, silver reads the JSON with them (no inference pass) and checks
+all primary keys in one action, and gold reads the persisted silver
+with the schema silver wrote (no Parquet footer read per table).
+
 Typical use::
 
     spark = get_spark()
@@ -49,16 +55,18 @@ def run_pipeline(
     they are observed on the Parquet writes and add no Spark job; on
     lazy gold they cost one aggregate per checked table."""
     bronze_dir = os.path.join(work_dir, "bronze")
-    bronze.write_all(spark, bronze_dir)
+    schemas = bronze.write_all(spark, bronze_dir)
 
-    silver_tables = silver.load_all(spark, bronze_dir)
-    silver.save_warehouse(silver_tables, os.path.join(work_dir, "silver"))
+    silver_tables = silver.load_all(spark, bronze_dir, schemas)
+    paths = silver.save_warehouse(silver_tables, os.path.join(work_dir, "silver"))
 
     # gold reads the persisted silver (column-pruned parquet scans),
-    # not the in-memory lineage — mirrors the reference's layer boundary
+    # not the in-memory lineage — mirrors the reference's layer boundary.
+    # The schema is the one silver wrote (a partition column reads back
+    # last, as it does when inferred), so no footer is read for it.
     persisted = {
-        name: spark.read.parquet(os.path.join(work_dir, "silver", name))
-        for name in silver_tables
+        name: spark.read.schema(silver_tables[name].schema).parquet(path)
+        for name, path in paths.items()
     }
     gold_tables = gold.build_all(persisted)
 

@@ -16,6 +16,10 @@ fetcher is a DataFrame producer + a distributed JSON write:
   S3/MinIO — no separate upload pass, no local staging dir coupling
   (the reference's /tmp handoff between tasks is a hidden same-host
   assumption; SURVEY §3).
+
+``write_all`` also returns what silver needs to read the JSON back
+without a schema-inference pass: each entity's schema as JSON inference
+would report it (``json_schema``).
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .. import synth
 from ..session import run_each
@@ -54,6 +59,30 @@ def fetch_live_teams() -> None:
     )
 
 
+def json_schema(df: DataFrame) -> StructType:
+    """The schema Spark's all-string JSON inference (``primitivesAsString``)
+    reports for the files a flat ``df`` wrote: every field a nullable
+    string, the fields sorted by name. Reading with it skips that
+    inference pass and leaves the frame, and so every query over it,
+    as inference would."""
+    names = sorted(f.name for f in df.schema)
+    return StructType([StructField(n, StringType()) for n in names])
+
+
+def _save(df: DataFrame, path: str, fmt: str) -> None:
+    w = df.write.mode("overwrite")
+    if fmt == "json":
+        w.json(path)
+    elif fmt == "csv":
+        w.option("header", "true").csv(path)
+    elif fmt == "parquet":
+        w.parquet(path)
+    elif fmt == "orc":
+        w.orc(path)
+    else:
+        raise ValueError(f"unsupported bronze format {fmt!r}")
+
+
 def write_entity(
     spark: SparkSession, name: str, out_dir: str, fmt: str = "json"
 ) -> str:
@@ -67,25 +96,22 @@ def write_entity(
     if name not in ENTITY_BUILDERS:
         raise KeyError(f"unknown bronze entity {name!r}")
     path = os.path.join(out_dir, name)
-    w = ENTITY_BUILDERS[name](spark).write.mode("overwrite")
-    if fmt == "json":
-        w.json(path)
-    elif fmt == "csv":
-        w.option("header", "true").csv(path)
-    elif fmt == "parquet":
-        w.parquet(path)
-    elif fmt == "orc":
-        w.orc(path)
-    else:
-        raise ValueError(f"unsupported bronze format {fmt!r}")
+    _save(ENTITY_BUILDERS[name](spark), path, fmt)
     return path
 
 
-def write_all(spark: SparkSession, out_dir: str) -> dict[str, str]:
-    """The 8-task bronze group as one stage: its 7 writes run
+def write_all(spark: SparkSession, out_dir: str) -> dict[str, StructType]:
+    """The 8-task bronze group as one stage: its 7 JSON writes run
     concurrently (dependencies are data-free in the reference — its
     chain is an artifact of Airflow workers sharing /tmp, not of the
-    data flow), and the stage ends when the last write has."""
-    return run_each(
-        spark, lambda name: write_entity(spark, name, out_dir), ENTITY_BUILDERS
-    )
+    data flow), and the stage ends when the last write has.
+
+    Returns each entity's ``json_schema``, keyed by entity, for
+    ``silver.load_all`` to read the JSON under out_dir/<entity> with."""
+
+    def write(name: str) -> StructType:
+        df = ENTITY_BUILDERS[name](spark)
+        _save(df, os.path.join(out_dir, name), "json")
+        return json_schema(df)
+
+    return run_each(spark, write, ENTITY_BUILDERS)

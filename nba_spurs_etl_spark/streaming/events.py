@@ -23,8 +23,12 @@ Scale notes:
 
 from __future__ import annotations
 
+import atexit
 import itertools
+import os
 import shutil
+import stat
+import tempfile
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,27 +46,56 @@ _SCHEMA_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, object]]" = (
 )
 
 
+_CKPT_PREFIX = "spark_graft_drain_ckpt_"
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, another user's
+        return True
+    return True
+
+
+def _sweep_dead_roots(base: str) -> None:
+    """Remove the drain roots under ``base`` that processes of this uid
+    left when they were killed (no exit hook ran): a root is named
+    ``<prefix><pid>_*``, and one whose pid is no longer alive belongs to
+    nobody. Roots of live pids, other users' roots and symlinks stay."""
+    uid = os.getuid()
+    for entry in os.scandir(base):
+        pid = entry.name[len(_CKPT_PREFIX) :].split("_", 1)[0]
+        if not entry.name.startswith(_CKPT_PREFIX) or not pid.isdigit():
+            continue
+        try:
+            st = entry.stat(follow_symlinks=False)
+        except OSError:
+            continue
+        if stat.S_ISDIR(st.st_mode) and st.st_uid == uid and not _pid_alive(int(pid)):
+            shutil.rmtree(entry.path, ignore_errors=True)
+
+
 def _drain_checkpoint_dir(name: str) -> str:
     """Per-process checkpoint root for memory-sink drains, on tmpfs
     where available (/dev/shm) — checkpoint fsync is a measurable
     fraction of a short drain (~0.4 s/query on the bench). Unique per
     process AND per query name, so no drain can ever resume another's
     committed offsets; :func:`run_stream_to_table` removes each one
-    when its drain ends, and the root itself goes at process exit.
+    when its drain ends, and the root itself goes at process exit. The
+    root's name carries the pid, and creating it first sweeps the roots
+    of killed processes (:func:`_sweep_dead_roots`), which never ran
+    their exit hook.
     Production streams (e.g. CdcSnapshot.attach) pass their own durable
     checkpoint path instead — a memory-sink drain is ephemeral by
     definition, its checkpoint never outlives the result."""
     global _ckpt_root
     if _ckpt_root is None:
-        import atexit
-        import os
-        import tempfile
-
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        _ckpt_root = tempfile.mkdtemp(prefix="spark_graft_drain_ckpt_", dir=base)
+        base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+        _sweep_dead_roots(base)
+        _ckpt_root = tempfile.mkdtemp(prefix=f"{_CKPT_PREFIX}{os.getpid()}_", dir=base)
         atexit.register(shutil.rmtree, _ckpt_root, ignore_errors=True)
-    import os
-
     return os.path.join(_ckpt_root, name)
 
 
@@ -80,8 +113,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
       type-tag change, required because watermark arithmetic and the
       downstream unix_micros comparisons reject NTZ).
     """
-    import os
-
     from ..sources.catalog import _events_ts_is_nanos
 
     if _events_ts_is_nanos(os.path.join(sf_dir, "events.parquet")):

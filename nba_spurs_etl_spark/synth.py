@@ -26,18 +26,30 @@ fg_pct, higher tov, higher reb) so team_weaknesses yields both
 Debilidad and Fortaleza rows and players_recommendations is non-empty
 (FIXTURES.md cross-table invariants).
 
-Scale note: fixtures are fixed-size (~13k games rows) regardless of sf —
-they model the reference's one-season dataset. Generation is pure
-column arithmetic over ``spark.range`` (no driver-side loops, no UDFs),
-so the same code would generate arbitrarily large fixtures distributed.
+Size and layout: fixtures are fixed-size (10,800 ``player_stats``
+rows, about 1 MB of JSON, at most) regardless of sf — they model the
+reference's one-season dataset. Each table is therefore generated as
+ONE slice (``spark.range(0, n, 1, 1)``): slicing by core count cut
+every table into ``defaultParallelism`` pieces, so each layer of the
+pipeline wrote that many files per table and ran that many tasks, for
+data far below one input split. ``games`` is one range over both team
+sides (home rows first), not a union of two, so it too stays one slice.
+
+Construction: columns are SQL strings (``selectExpr``), the recipe of
+``plans.gold``'s round-6 construction note. A Column-method chain pays
+one py4j round trip per call, and these builders make hundreds: the
+chains cost 1.3-1.9 s of serial driver time per build of the seven
+tables (0.8 s for ``games`` alone), the strings 0.3-0.5 s. The
+strings parse JVM-side into the same expressions, so schemas
+(nullability included) and rows are those of the chains. Generation is
+pure column arithmetic over ``spark.range`` (no driver-side loops, no
+UDFs), so the same code would generate arbitrarily large fixtures
+distributed — raise the slice count with the row count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from .functions.scalar import md5_long
+from pyspark.sql import DataFrame, SparkSession
 
 N_TEAMS = 30
 N_DAYS = 82
@@ -54,220 +66,230 @@ POSITIONS = ["G", "F", "C", "G-F", "F-C"]
 INJURY_CATALOG = [f"Lesion_{i}" for i in range(10)]
 
 
-def _h(salt: str, key: Column) -> Column:
-    """60-bit hash of salt||key — the cross-engine 'random' source."""
-    return md5_long(F.concat(F.lit(salt), key.cast("string")))
+def _rows(spark: SparkSession, n: int) -> DataFrame:
+    """``id`` 0..n-1 in one slice (fixture tables are far below a split)."""
+    return spark.range(0, n, 1, 1)
 
 
-def _team_id(idx: Column) -> Column:
-    return (F.lit(1610612730) + idx).cast("string")
+def _array(values: list[str]) -> str:
+    return "array(" + ", ".join(f"'{v}'" for v in values) + ")"
 
 
-def _team_name(idx: Column) -> Column:
-    return F.when(idx == SPURS_IDX, F.lit("San Antonio Spurs")).otherwise(
-        F.concat(F.lit("Team "), idx.cast("string"))
+def _h(salt: str, key: str) -> str:
+    """60-bit hash of salt||key — the cross-engine 'random' source
+    (``functions.scalar.md5_long`` as SQL)."""
+    return (
+        f"CAST(conv(substring(md5(concat('{salt}', CAST({key} AS STRING))),"
+        " 1, 15), 16, 10) AS BIGINT)"
     )
 
 
-def _team_abbr(idx: Column) -> Column:
-    return F.when(idx == SPURS_IDX, F.lit("SAS")).otherwise(
-        F.concat(F.lit("T"), F.lpad(idx.cast("string"), 2, "0"))
+def _team_id(idx: str) -> str:
+    return f"CAST(1610612730 + {idx} AS STRING)"
+
+
+def _team_name(idx: str) -> str:
+    return (
+        f"CASE WHEN {idx} = {SPURS_IDX} THEN 'San Antonio Spurs' "
+        f"ELSE concat('Team ', CAST({idx} AS STRING)) END"
     )
 
 
-def _pct_str(base: int, span: int, h: Column) -> Column:
+def _team_abbr(idx: str) -> str:
+    return (
+        f"CASE WHEN {idx} = {SPURS_IDX} THEN 'SAS' "
+        f"ELSE concat('T', lpad(CAST({idx} AS STRING), 2, '0')) END"
+    )
+
+
+def _pct_str(base: int, span: int, h: str) -> str:
     """'0.NNN' string in [base/1000, (base+span-1)/1000]."""
-    return F.concat(F.lit("0."), (F.lit(base) + h % span).cast("string"))
+    return f"concat('0.', CAST({base} + {h} % {span} AS STRING))"
+
+
+def _player_key(t: str, j: str) -> str:
+    return f"CAST(100000 + {t} * 100 + {j} AS STRING)"
+
+
+#: ``pid`` of player index ``i`` (an INT column named i)
+_PID = _player_key(f"CAST(i / {PLAYERS_PER_TEAM} AS INT)", f"i % {PLAYERS_PER_TEAM}")
+_POSITION = f"element_at({_array(POSITIONS)}, CAST(i % {len(POSITIONS)} + 1 AS INT))"
 
 
 def build_teams(spark: SparkSession) -> DataFrame:
-    t = F.col("id").cast("int")
-    return spark.range(N_TEAMS).select(
-        _team_id(t).alias("id"),
-        _team_name(t).alias("full_name"),
-        _team_abbr(t).alias("abbreviation"),
-        F.concat(F.lit("Nick"), t.cast("string")).alias("nickname"),
-        F.concat(F.lit("City"), t.cast("string")).alias("city"),
-        F.concat(F.lit("State"), (t % 50).cast("string")).alias("state"),
-        (F.lit(1946) + _h("yf", t) % 60).cast("string").alias("year_founded"),
-    )
-
-
-def _games_side(games: DataFrame, side: str) -> DataFrame:
-    """Project one team-side row per game (side in {'h','a'})."""
-    is_home = side == "h"
-    me = F.col("home") if is_home else F.col("away")
-    opp = F.col("away") if is_home else F.col("home")
-    my_pts = F.col("pts_h") if is_home else F.col("pts_a")
-    opp_pts = F.col("pts_a") if is_home else F.col("pts_h")
-    # Spurs bias: worse shooting + more turnovers (-> Debilidad rows),
-    # more rebounds (-> Fortaleza row). Applied per-side so only SAS rows move.
-    is_sas = me == SPURS_IDX
-    fg = F.when(is_sas, _pct_str(300, 240, _h("f1" + side, F.col("g")))).otherwise(
-        _pct_str(300, 300, _h("f1" + side, F.col("g")))
-    )
-    tov = F.when(is_sas, F.lit(8) + _h("f3" + side, F.col("g")) % 18).otherwise(
-        F.lit(5) + _h("f3" + side, F.col("g")) % 18
-    )
-    reb = F.when(is_sas, F.lit(36) + _h("f4" + side, F.col("g")) % 31).otherwise(
-        F.lit(30) + _h("f4" + side, F.col("g")) % 31
-    )
-
-    matchup = (
-        F.concat(_team_abbr(me), F.lit(" vs. "), _team_abbr(opp))
-        if is_home
-        else F.concat(_team_abbr(me), F.lit(" @ "), _team_abbr(opp))
-    )
-    return games.select(
-        F.lit("2024-25").alias("season"),
-        _team_id(me).alias("team_id"),
-        _team_name(me).alias("team_name"),
-        _team_abbr(me).alias("team_abbreviation"),
-        F.date_add(F.to_date(F.lit(SEASON_START)), F.col("d"))
-        .cast("string")
-        .alias("game_date"),
-        matchup.alias("matchup"),
-        F.when(my_pts > opp_pts, F.lit("W")).otherwise(F.lit("L")).alias("wl"),
-        my_pts.cast("string").alias("pts"),
-        (my_pts - opp_pts).cast("string").alias("plus_minus"),
-        fg.alias("fg_pct"),
-        _pct_str(250, 200, _h("f2" + side, F.col("g"))).alias("fg3_pct"),
-        tov.cast("string").alias("tov"),
-        reb.cast("string").alias("reb"),
-        (F.lit(1) + _h("f5" + side, F.col("g")) % 10).cast("string").alias("blk"),
-        (F.lit(3) + _h("f6" + side, F.col("g")) % 13).cast("string").alias("stl"),
+    t = "CAST(id AS INT)"
+    return _rows(spark, N_TEAMS).selectExpr(
+        f"{_team_id(t)} AS id",
+        f"{_team_name(t)} AS full_name",
+        f"{_team_abbr(t)} AS abbreviation",
+        f"concat('Nick', CAST({t} AS STRING)) AS nickname",
+        f"concat('City', CAST({t} AS STRING)) AS city",
+        f"concat('State', CAST({t} % 50 AS STRING)) AS state",
+        f"CAST(1946 + {_h('yf', t)} % 60 AS STRING) AS year_founded",
     )
 
 
 def build_games(spark: SparkSession) -> DataFrame:
-    """2 rows per game x 1230 games. Home pts odd, away pts even ->
-    no ties, complementary W/L, plus_minus sums to zero per game."""
-    g = F.col("id").cast("int")
-    base = spark.range(N_GAMES).select(
-        g.alias("g"),
-        (g % GAMES_PER_DAY).alias("k"),
-        (g / GAMES_PER_DAY).cast("int").alias("d"),
+    """2 rows per game x 1230 games: ids below N_GAMES are the home
+    sides of games 0..1229, the rest the away sides. Home pts odd, away
+    pts even -> no ties, complementary W/L, plus_minus sums to zero per
+    game."""
+    base = (
+        _rows(spark, 2 * N_GAMES)
+        .selectExpr(
+            f"CAST(id % {N_GAMES} AS INT) AS g",
+            f"IF(id < {N_GAMES}, 'h', 'a') AS side",
+        )
+        .selectExpr(
+            "g",
+            "side",
+            f"CAST(g / {GAMES_PER_DAY} AS INT) AS d",
+            f"g % {GAMES_PER_DAY} AS k",
+        )
+        .selectExpr(
+            "g",
+            "side",
+            "d",
+            f"(d + k) % {N_TEAMS} AS home",
+            f"(d + {GAMES_PER_DAY} + (k + d) % {GAMES_PER_DAY}) % {N_TEAMS} AS away",
+            f"85 + ({_h('ph', 'g')} % 38) * 2 AS pts_h",
+            f"86 + ({_h('pa', 'g')} % 38) * 2 AS pts_a",
+        )
+        .selectExpr(
+            "g",
+            "side",
+            "d",
+            "IF(side = 'h', home, away) AS me",
+            "IF(side = 'h', away, home) AS opp",
+            "IF(side = 'h', pts_h, pts_a) AS my_pts",
+            "IF(side = 'h', pts_a, pts_h) AS opp_pts",
+        )
     )
-    base = base.select(
-        "g",
-        "d",
-        ((F.col("d") + F.col("k")) % N_TEAMS).alias("home"),
-        (
-            (
-                F.col("d")
-                + GAMES_PER_DAY
-                + (F.col("k") + F.col("d")) % GAMES_PER_DAY
-            )
-            % N_TEAMS
-        ).alias("away"),
-        (F.lit(85) + (_h("ph", F.col("g")) % 38) * 2).alias("pts_h"),
-        (F.lit(86) + (_h("pa", F.col("g")) % 38) * 2).alias("pts_a"),
+
+    def h(salt: str) -> str:
+        # per-side salt: f1h for home rows, f1a for away rows
+        return _h(salt, "concat(side, CAST(g AS STRING))")
+
+    # Spurs bias: worse shooting + more turnovers (-> Debilidad rows),
+    # more rebounds (-> Fortaleza row). Only SAS rows move.
+    sas = f"me = {SPURS_IDX}"
+    return base.selectExpr(
+        "'2024-25' AS season",
+        f"{_team_id('me')} AS team_id",
+        f"{_team_name('me')} AS team_name",
+        f"{_team_abbr('me')} AS team_abbreviation",
+        f"CAST(date_add(to_date('{SEASON_START}'), d) AS STRING) AS game_date",
+        f"concat({_team_abbr('me')}, IF(side = 'h', ' vs. ', ' @ '), "
+        f"{_team_abbr('opp')}) AS matchup",
+        "CASE WHEN my_pts > opp_pts THEN 'W' ELSE 'L' END AS wl",
+        "CAST(my_pts AS STRING) AS pts",
+        "CAST(my_pts - opp_pts AS STRING) AS plus_minus",
+        f"CASE WHEN {sas} THEN {_pct_str(300, 240, h('f1'))} "
+        f"ELSE {_pct_str(300, 300, h('f1'))} END AS fg_pct",
+        f"{_pct_str(250, 200, h('f2'))} AS fg3_pct",
+        f"CAST(CASE WHEN {sas} THEN 8 + {h('f3')} % 18 "
+        f"ELSE 5 + {h('f3')} % 18 END AS STRING) AS tov",
+        f"CAST(CASE WHEN {sas} THEN 36 + {h('f4')} % 31 "
+        f"ELSE 30 + {h('f4')} % 31 END AS STRING) AS reb",
+        f"CAST(1 + {h('f5')} % 10 AS STRING) AS blk",
+        f"CAST(3 + {h('f6')} % 13 AS STRING) AS stl",
     )
-    return _games_side(base, "h").unionByName(_games_side(base, "a"))
-
-
-def _player_key(t: Column, j: Column) -> Column:
-    return (F.lit(100000) + t * 100 + j).cast("string")
 
 
 def build_players(spark: SparkSession) -> DataFrame:
-    i = F.col("id").cast("int")
-    t, j = (i / PLAYERS_PER_TEAM).cast("int"), i % PLAYERS_PER_TEAM
-    pid = _player_key(t, j)
-    pos = F.element_at(
-        F.array(*[F.lit(p) for p in POSITIONS]), (i % len(POSITIONS) + 1).cast("int")
-    )
-    return spark.range(N_PLAYERS).select(
-        pid.alias("player_id"),
-        F.concat(F.lit("Player_"), pid).alias("player"),
-        pos.alias("position"),
-        F.lit("2024").alias("season"),
-        (F.lit(190) + _h("ht", pid) % 40).cast("string").alias("height_cm"),
-        (F.lit(75) + _h("wt", pid) % 50).cast("string").alias("weight_kg"),
-        (F.lit(19) + _h("ag", pid) % 20).cast("string").alias("age"),
+    return (
+        _rows(spark, N_PLAYERS)
+        .selectExpr("CAST(id AS INT) AS i")
+        .selectExpr(f"{_PID} AS pid", f"{_POSITION} AS position")
+        .selectExpr(
+            "pid AS player_id",
+            "concat('Player_', pid) AS player",
+            "position",
+            "'2024' AS season",
+            f"CAST(190 + {_h('ht', 'pid')} % 40 AS STRING) AS height_cm",
+            f"CAST(75 + {_h('wt', 'pid')} % 50 AS STRING) AS weight_kg",
+            f"CAST(19 + {_h('ag', 'pid')} % 20 AS STRING) AS age",
+        )
     )
 
 
 def build_player_stats(spark: SparkSession) -> DataFrame:
-    i = F.col("id").cast("int")
-    p = (i / GAMES_PER_PLAYER).cast("int")  # player index 0..539
-    gnum = i % GAMES_PER_PLAYER
-    t = (p / PLAYERS_PER_TEAM).cast("int")
-    j = p % PLAYERS_PER_TEAM
-    pid = _player_key(t, j)
-    key = F.concat(pid, F.lit("_"), gnum.cast("string"))
-    return spark.range(N_PLAYERS * GAMES_PER_PLAYER).select(
-        pid.alias("player_id"),
-        F.concat(F.lit("Player_"), pid).alias("player_name"),
-        _team_abbr(t).alias("team_abbreviation"),
-        _pct_str(300, 300, _h("q1", key)).alias("fg_pct"),
-        _pct_str(250, 200, _h("q2", key)).alias("fg3_pct"),
-        (_h("q3", key) % 16).cast("string").alias("reb"),
-        (_h("q4", key) % 9).cast("string").alias("tov"),
-        (_h("q5", key) % 6).cast("string").alias("stl"),
-        (_h("q6", key) % 6).cast("string").alias("blk"),
-        (_h("q7", key) % 61 - 30).cast("string").alias("plus_minus"),
+    p = f"CAST(CAST(id AS INT) / {GAMES_PER_PLAYER} AS INT)"  # player 0..539
+    t = f"CAST({p} / {PLAYERS_PER_TEAM} AS INT)"
+    pid = _player_key(t, f"{p} % {PLAYERS_PER_TEAM}")
+    key = f"concat(pid, '_', CAST(CAST(id AS INT) % {GAMES_PER_PLAYER} AS STRING))"
+    return (
+        _rows(spark, N_PLAYERS * GAMES_PER_PLAYER)
+        .selectExpr("id", f"{t} AS t", f"{pid} AS pid")
+        .selectExpr("t", "pid", f"{key} AS key")
+        .selectExpr(
+            "pid AS player_id",
+            "concat('Player_', pid) AS player_name",
+            f"{_team_abbr('t')} AS team_abbreviation",
+            f"{_pct_str(300, 300, _h('q1', 'key'))} AS fg_pct",
+            f"{_pct_str(250, 200, _h('q2', 'key'))} AS fg3_pct",
+            f"CAST({_h('q3', 'key')} % 16 AS STRING) AS reb",
+            f"CAST({_h('q4', 'key')} % 9 AS STRING) AS tov",
+            f"CAST({_h('q5', 'key')} % 6 AS STRING) AS stl",
+            f"CAST({_h('q6', 'key')} % 6 AS STRING) AS blk",
+            f"CAST({_h('q7', 'key')} % 61 - 30 AS STRING) AS plus_minus",
+        )
     )
 
 
 def build_salaries(spark: SparkSession) -> DataFrame:
-    i = F.col("id").cast("int")
-    t, j = (i / PLAYERS_PER_TEAM).cast("int"), i % PLAYERS_PER_TEAM
-    pid = _player_key(t, j)
-    dollars = F.lit(500000) + _h("sd", pid) % 44500001
-    cents = _h("sc", pid) % 100
-    return spark.range(N_PLAYERS).select(
-        pid.alias("player_id"),
-        F.concat(F.lit("Player_"), pid).alias("player_name"),
-        F.lit("2024").alias("season"),
-        F.concat(
-            dollars.cast("string"), F.lit("."), F.lpad(cents.cast("string"), 2, "0")
-        ).alias("salary_usd"),
+    dollars = f"500000 + {_h('sd', 'pid')} % 44500001"
+    cents = f"{_h('sc', 'pid')} % 100"
+    return (
+        _rows(spark, N_PLAYERS)
+        .selectExpr("CAST(id AS INT) AS i")
+        .selectExpr(f"{_PID} AS pid")
+        .selectExpr(
+            "pid AS player_id",
+            "concat('Player_', pid) AS player_name",
+            "'2024' AS season",
+            f"concat(CAST({dollars} AS STRING), '.', "
+            f"lpad(CAST({cents} AS STRING), 2, '0')) AS salary_usd",
+        )
     )
 
 
 def build_free_agents(spark: SparkSession) -> DataFrame:
-    i = F.col("id").cast("int")
-    t, j = (i / PLAYERS_PER_TEAM).cast("int"), i % PLAYERS_PER_TEAM
-    pid = _player_key(t, j)
-    pos = F.element_at(
-        F.array(*[F.lit(p) for p in POSITIONS]), (i % len(POSITIONS) + 1).cast("int")
-    )
     return (
-        spark.range(N_PLAYERS)
-        .select(
-            pid.alias("player_id"),
-            F.concat(F.lit("Player_"), pid).alias("player_name"),
-            pos.alias("position"),
-            (F.lit(19) + _h("fa_age", pid) % 20).cast("string").alias("age"),
-            (F.lit(1) + _h("fa_exp", pid) % 15).cast("string").alias("age_experience"),
-            F.concat((F.lit(2020) + _h("fa_av", pid) % 6).cast("string"), F.lit("-07-01"))
-            .alias("avalaiblefrom"),  # sic — reference column name (dags:242)
-            (_h("fa_sel", pid) % 3).alias("_sel"),
+        _rows(spark, N_PLAYERS)
+        .selectExpr("CAST(id AS INT) AS i")
+        .selectExpr(f"{_PID} AS pid", f"{_POSITION} AS position")
+        .where(f"{_h('fa_sel', 'pid')} % 3 = 0")
+        .selectExpr(
+            "pid AS player_id",
+            "concat('Player_', pid) AS player_name",
+            "position",
+            f"CAST(19 + {_h('fa_age', 'pid')} % 20 AS STRING) AS age",
+            f"CAST(1 + {_h('fa_exp', 'pid')} % 15 AS STRING) AS age_experience",
+            # sic — reference column name (dags:242)
+            f"concat(CAST(2020 + {_h('fa_av', 'pid')} % 6 AS STRING), '-07-01')"
+            " AS avalaiblefrom",
         )
-        .filter(F.col("_sel") == 0)
-        .drop("_sel")
     )
 
 
 def build_injuries(spark: SparkSession) -> DataFrame:
-    r = F.col("id").cast("int")
-    h = _h("inj", r)
-    idx = (h % N_PLAYERS).cast("int")
-    t, j = (idx / PLAYERS_PER_TEAM).cast("int"), idx % PLAYERS_PER_TEAM
-    pid = _player_key(t, j)
-    lesion = F.element_at(
-        F.array(*[F.lit(x) for x in INJURY_CATALOG]),
-        (_h("les", r) % 10 + 1).cast("int"),
-    )
-    yy = (F.lit(2020) + _h("iy", r) % 6).cast("string")
-    mm = F.lpad((F.lit(1) + _h("im", r) % 12).cast("string"), 2, "0")
-    dd = F.lpad((F.lit(1) + _h("id", r) % 28).cast("string"), 2, "0")
-    return spark.range(N_INJURY_ROWS).select(
-        pid.alias("player_id"),
-        F.concat(F.lit("Player_"), pid).alias("player_name"),
-        lesion.alias("lesion"),
-        F.concat_ws("-", yy, mm, dd).alias("date"),
+    idx = f"CAST({_h('inj', 'r')} % {N_PLAYERS} AS INT)"
+    pid = _player_key(f"CAST(idx / {PLAYERS_PER_TEAM} AS INT)", f"idx % {PLAYERS_PER_TEAM}")
+    mm = f"lpad(CAST(1 + {_h('im', 'r')} % 12 AS STRING), 2, '0')"
+    dd = f"lpad(CAST(1 + {_h('id', 'r')} % 28 AS STRING), 2, '0')"
+    return (
+        _rows(spark, N_INJURY_ROWS)
+        .selectExpr("CAST(id AS INT) AS r")
+        .selectExpr("r", f"{idx} AS idx")
+        .selectExpr(
+            f"{pid} AS player_id",
+            f"concat('Player_', {pid}) AS player_name",
+            f"element_at({_array(INJURY_CATALOG)}, CAST({_h('les', 'r')} % 10 + 1 AS INT))"
+            " AS lesion",
+            f"concat_ws('-', CAST(2020 + {_h('iy', 'r')} % 6 AS STRING), {mm}, {dd})"
+            " AS date",
+        )
     )
 
 

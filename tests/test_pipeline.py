@@ -62,14 +62,16 @@ STAGES = (
 )
 
 #: Spark jobs per stage of a materialized run_pipeline. "run_pipeline"
-#: holds the jobs no stage claims: the 6 gold writes.
+#: holds the jobs no stage claims: the 6 gold writes. load_all reads
+#: with the schemas bronze handed over (no inference job) and checks
+#: every PK in one action.
 JOB_BUDGET = {
     "write_all": 7,
-    "load_all": 19,
+    "load_all": 2,
     "save_warehouse": 7,
     "build_all": 0,
     "run_checks": 0,
-    "run_pipeline": 33,
+    "run_pipeline": 26,
 }
 
 
@@ -115,6 +117,7 @@ def _run_materialized(spark, work, build_all=None):
 def materialized(spark):
     with tempfile.TemporaryDirectory() as work:
         out, seen = _run_materialized(spark, work)
+        seen["work"] = work
         written = {
             name: spark.read.parquet(f"{work}/gold/{name}") for name in out
         }
@@ -146,6 +149,81 @@ def test_materialized_pipeline_job_budget(materialized):
     _written, seen = materialized
     assert {k: len(v) for k, v in seen["jobs"].items()} == JOB_BUDGET
     assert seen["left"] == seen["groups"]
+
+
+def test_materialized_layers_hold_one_file_per_table(materialized):
+    """The fixture tables are generated as one slice each, so every
+    bronze and silver table is one data file (games: in its one season
+    partition), not one per core."""
+    import os
+
+    _written, seen = materialized
+    for layer in ("bronze", "silver"):
+        for name in silver.LOAD_MAP:
+            parts = [
+                f
+                for _base, _dirs, files in os.walk(f"{seen['work']}/{layer}/{name}")
+                for f in files
+                if f.startswith("part-")
+            ]
+            assert len(parts) == 1, (layer, name, parts)
+
+
+def test_schema_handoff_equals_inference(spark, materialized):
+    """The schemas bronze hands silver equal what JSON inference reports
+    for the files it wrote, and gold's persisted-silver reads with the
+    schema silver wrote equal the footer-inferred ones: games keeps
+    season last, as its partition column."""
+    _written, seen = materialized
+    work = seen["work"]
+    schemas = seen["returned"]["write_all"]
+    assert set(schemas) == set(silver.LOAD_MAP)
+    for name, schema in schemas.items():
+        inferred = spark.read.option("primitivesAsString", "true").json(
+            f"{work}/bronze/{name}"
+        )
+        assert schema == inferred.schema, name
+    inferring = silver.load_all(spark, f"{work}/bronze")  # no schemas given
+    for name, df in seen["returned"]["load_all"].items():
+        assert df.schema == inferring[name].schema, name
+        path = f"{work}/silver/{name}"
+        got = spark.read.schema(df.schema).parquet(path).schema
+        assert got == spark.read.parquet(path).schema, name
+    assert spark.read.schema(
+        seen["returned"]["load_all"]["games"].schema
+    ).parquet(f"{work}/silver/games").columns[-1] == "season"
+
+
+def test_explicit_schema_json_load(spark, tmp_path):
+    """Bronze JSON read through the schema path. Under PERMISSIVE a
+    corrupt line is an all-NULL row and no _corrupt_record column
+    appears; a field NULL in every record (the JSON writer omits it)
+    stays an all-NULL column, where inference drops it."""
+    from nba_spurs_etl_spark.sources.bronze import json_schema
+    from nba_spurs_etl_spark.sources.silver import read_entity
+
+    p = tmp_path / "ent"
+    p.mkdir()
+    (p / "part-0.json").write_text(
+        '{"id": "1", "name": "ok"}\n'
+        "THIS IS NOT JSON\n"
+        '{"id": "2", "name": "also ok"}\n'
+    )
+    schema = json_schema(spark.createDataFrame([], "name string, id string"))
+    perm = read_entity(spark, str(p), schema=schema)
+    assert perm.columns == ["id", "name"]
+    assert sorted(perm.collect(), key=str) == sorted(
+        [("1", "ok"), (None, None), ("2", "also ok")], key=str
+    )
+
+    df = spark.createDataFrame([("1", None), ("2", None)], "id string, note string")
+    df.write.json(str(tmp_path / "sparse"))
+    assert read_entity(spark, str(tmp_path / "sparse")).columns == ["id"]
+    kept = read_entity(spark, str(tmp_path / "sparse"), schema=json_schema(df))
+    assert kept.columns == ["id", "note"]
+    assert sorted(tuple(r) for r in kept.collect()) == [("1", None), ("2", None)]
+    with pytest.raises(ValueError, match="explicit schema"):
+        read_entity(spark, str(p), fmt="csv", schema=schema)
 
 
 def test_materialized_quality_catches_bad_values(spark):
@@ -203,6 +281,30 @@ def test_pk_validation_raises_on_duplicates(spark):
         with tempfile.TemporaryDirectory() as d:
             dup.write.mode("overwrite").json(f"{d}/teams")
             silver.load_silver_table(spark, d, "teams")
+
+
+def test_check_pks_one_action_first_in_load_map_order(spark):
+    """check_pks counts every table's duplicated PK tuples in one action
+    and raises for the first failing table in LOAD_MAP order, NULL keys
+    grouping together as in validate_pk."""
+    tables = synth.build_silver(spark)
+    silver.check_pks(tables)
+    players = tables["players"]
+    salaries = tables["salaries"]
+    bad = dict(
+        tables,
+        salaries=salaries.unionByName(salaries.limit(2)),
+        players=players.unionByName(players.limit(1)),
+    )
+    with pytest.raises(PrimaryKeyViolation, match=r"^silver\.players: 1 "):
+        silver.check_pks(bad)
+    del bad["players"]
+    with pytest.raises(PrimaryKeyViolation, match=r"^silver\.salaries: 2 "):
+        silver.check_pks(bad)
+    nulls = spark.createDataFrame([(None,), (None,), ("x",)], "id string")
+    assert validate_pk(nulls, ("id",)) == 1
+    with pytest.raises(PrimaryKeyViolation, match=r"^silver\.teams: 1 "):
+        silver.check_pks({"teams": nulls})
 
 
 def test_pipeline_pk_violation_is_deterministic(spark, tmp_path):

@@ -71,18 +71,6 @@ def test_salted_agg_two_phases(spark, catalog):
     assert plan.count("HashAggregate") >= 2, plan
 
 
-# Queries whose semantics genuinely pair every row with every row of a
-# (broadcast) side: tiny scalar assemblies and the exact all-pairs
-# similarity baselines. Everything else must not cartesian.
-_NESTED_LOOP_OK = {
-    "similarity_topk_bruteforce",  # exact baseline: |Q| x |C| by design
-    "scalar_snapshot",             # 1-row x 1-row scalar assembly
-    "gold_streaks_and_rivals",     # 1-row scalar crossJoin assembly
-    "streaks_gaps_islands",
-    "approx_sketches",
-}
-
-
 def test_simhash_pairing_is_banded_not_all_pairs(spark, catalog):
     """SimHash candidate generation must be a bucket EQUI-join keyed on
     (band, bval) — never a cartesian / nested-loop over the corpus.
@@ -93,21 +81,6 @@ def test_simhash_pairing_is_banded_not_all_pairs(spark, catalog):
         assert "BroadcastNestedLoopJoin" not in plan, plan
         keys = [ln for ln in plan.splitlines() if "Left keys" in ln]
         assert keys and "band" in keys[0], plan
-
-
-def test_no_accidental_cartesian(spark, catalog):
-    offenders = []
-    for name, fn in catalog.items():
-        if name in _NESTED_LOOP_OK or name.startswith("stream_"):
-            continue
-        try:
-            plan = fmt_plan(fn(spark, SF_SMOKE))
-        except Exception as e:  # pragma: no cover - surface build errors
-            offenders.append(f"{name}: failed to build plan: {e}")
-            continue
-        if "CartesianProduct" in plan:
-            offenders.append(f"{name}: CartesianProduct")
-    assert not offenders, "\n".join(offenders)
 
 
 def test_ivf_assignment_is_narrow(spark, catalog):
@@ -695,11 +668,16 @@ def test_advisor_catalog_is_flag_free(spark, catalog):
     entries execute drains at build time and are covered by their own
     batch twins). Per-entry suppressions (registry advisor_allow) are
     honored but each must carry a written bounded-cardinality
-    justification — register() enforces the non-empty allow_why."""
+    justification — register() enforces the non-empty allow_why.
+
+    No entry may suppress CARTESIAN, so this is also the catalog-wide
+    no-accidental-cartesian check: every batch plan is audited for a
+    CartesianProduct with no exemption."""
     from nba_spurs_etl_spark.plans.advisor import audit_plan
     from nba_spurs_etl_spark.plans.catalog import registry
 
     reg = registry()
+    assert not [n for n, q in reg.items() if "CARTESIAN" in q.advisor_allow]
     offenders = {}
     for name, fn in catalog.items():
         if name.startswith("stream_"):

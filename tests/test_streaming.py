@@ -93,6 +93,58 @@ print(events._ckpt_root)
     assert not os.path.exists(root)
 
 
+def test_killed_process_drain_root_swept(tmp_path):
+    """A process killed after a drain leaves its root behind (no exit
+    hook runs on SIGKILL); the next process's first drain removes it,
+    and keeps the root of a live pid."""
+    import os
+    import signal
+    import subprocess
+    import sys
+
+    root_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root_dir, SPARK_DRIVER_MEMORY="1g")
+    killed = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            f"""
+import os, signal
+from nba_spurs_etl_spark.session import get_spark
+from nba_spurs_etl_spark.streaming import events
+spark = get_spark("drain-root-killed", master="local[1]", shuffle_partitions=1)
+df = events.stream_tumbling_agg(events.read_events_stream(spark, {SF_SMOKE!r}))
+assert events.run_stream_to_table(df, spark).count() > 0
+print(os.getpid(), events._ckpt_root, flush=True)
+os.kill(os.getpid(), signal.SIGKILL)
+""",
+        ],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert killed.returncode == -signal.SIGKILL, killed.stderr[-2000:]
+    pid, dead = killed.stdout.strip().splitlines()[-1].split(" ", 1)
+    assert os.path.basename(dead).startswith(f"spark_graft_drain_ckpt_{pid}_")
+    assert os.path.isdir(dead)
+    live = os.path.join(
+        os.path.dirname(dead), f"spark_graft_drain_ckpt_{os.getpid()}_live"
+    )
+    os.makedirs(live)
+    try:
+        root = _run_script(
+            """
+from nba_spurs_etl_spark.streaming import events
+events._drain_checkpoint_dir("first")
+print(events._ckpt_root)
+""",
+            tmp_path,
+        )
+        assert root != dead
+        assert not os.path.exists(dead)
+        assert os.path.isdir(live)
+    finally:
+        os.rmdir(live)
+
+
 def test_stream_scratch_removed_at_exit(tmp_path):
     """Each stream entry's scratch dir outlives its call (the next call
     clears it) but not the process."""
