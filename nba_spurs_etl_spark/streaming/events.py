@@ -55,7 +55,7 @@ def _pid_alive(pid: int) -> bool:
     except ProcessLookupError:
         return False
     except PermissionError:  # alive, another user's
-        return True
+        pass
     return True
 
 
@@ -65,16 +65,18 @@ def _sweep_dead_roots(base: str) -> None:
     ``<prefix><pid>_*``, and one whose pid is no longer alive belongs to
     nobody. Roots of live pids, other users' roots and symlinks stay."""
     uid = os.getuid()
-    for entry in os.scandir(base):
-        pid = entry.name[len(_CKPT_PREFIX) :].split("_", 1)[0]
-        if not entry.name.startswith(_CKPT_PREFIX) or not pid.isdigit():
-            continue
-        try:
-            st = entry.stat(follow_symlinks=False)
-        except OSError:
-            continue
-        if stat.S_ISDIR(st.st_mode) and st.st_uid == uid and not _pid_alive(int(pid)):
-            shutil.rmtree(entry.path, ignore_errors=True)
+    with os.scandir(base) as entries:
+        for entry in entries:
+            pid = entry.name[len(_CKPT_PREFIX) :].split("_", 1)[0]
+            if not entry.name.startswith(_CKPT_PREFIX) or not pid.isdigit():
+                continue
+            try:
+                st = entry.stat(follow_symlinks=False)
+            except OSError:
+                continue
+            mine = stat.S_ISDIR(st.st_mode) and st.st_uid == uid
+            if mine and not _pid_alive(int(pid)):
+                shutil.rmtree(entry.path, ignore_errors=True)
 
 
 def _drain_checkpoint_dir(name: str) -> str:

@@ -184,14 +184,13 @@ def test_schema_handoff_equals_inference(spark, materialized):
         )
         assert schema == inferred.schema, name
     inferring = silver.load_all(spark, f"{work}/bronze")  # no schemas given
+    read = {}
     for name, df in seen["returned"]["load_all"].items():
         assert df.schema == inferring[name].schema, name
         path = f"{work}/silver/{name}"
-        got = spark.read.schema(df.schema).parquet(path).schema
-        assert got == spark.read.parquet(path).schema, name
-    assert spark.read.schema(
-        seen["returned"]["load_all"]["games"].schema
-    ).parquet(f"{work}/silver/games").columns[-1] == "season"
+        read[name] = spark.read.schema(df.schema).parquet(path).schema
+        assert read[name] == spark.read.parquet(path).schema, name
+    assert read["games"].names[-1] == "season"
 
 
 def test_explicit_schema_json_load(spark, tmp_path):

@@ -54,9 +54,9 @@ def test_drain_leaves_no_checkpoint_behind(spark):
     assert left == []
 
 
-def _run_script(script: str, cwd) -> str:
+def _run_script(script: str, cwd, returncode: int = 0) -> str:
     """Run ``script`` in a fresh interpreter that imports this checkout;
-    its last stdout line."""
+    its last stdout line. The interpreter must end with ``returncode``."""
     import os
     import subprocess
     import sys
@@ -67,7 +67,7 @@ def _run_script(script: str, cwd) -> str:
         [sys.executable, "-c", script],
         cwd=cwd, env=env, capture_output=True, text=True, timeout=300,
     )
-    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.returncode == returncode, out.stderr[-2000:]
     return out.stdout.strip().splitlines()[-1]
 
 
@@ -99,16 +99,9 @@ def test_killed_process_drain_root_swept(tmp_path):
     and keeps the root of a live pid."""
     import os
     import signal
-    import subprocess
-    import sys
 
-    root_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, PYTHONPATH=root_dir, SPARK_DRIVER_MEMORY="1g")
-    killed = subprocess.run(
-        [
-            sys.executable,
-            "-c",
-            f"""
+    pid, dead = _run_script(
+        f"""
 import os, signal
 from nba_spurs_etl_spark.session import get_spark
 from nba_spurs_etl_spark.streaming import events
@@ -118,11 +111,9 @@ assert events.run_stream_to_table(df, spark).count() > 0
 print(os.getpid(), events._ckpt_root, flush=True)
 os.kill(os.getpid(), signal.SIGKILL)
 """,
-        ],
-        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
-    )
-    assert killed.returncode == -signal.SIGKILL, killed.stderr[-2000:]
-    pid, dead = killed.stdout.strip().splitlines()[-1].split(" ", 1)
+        tmp_path,
+        returncode=-signal.SIGKILL,
+    ).split(" ", 1)
     assert os.path.basename(dead).startswith(f"spark_graft_drain_ckpt_{pid}_")
     assert os.path.isdir(dead)
     live = os.path.join(
