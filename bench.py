@@ -2,13 +2,14 @@
 """Benchmark harness: runs every catalog query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line:  {"metric": ..., "value": N, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}
+"queries": {name: sec, ...}, "sf": ..., "cpus": ...}
 
 The driver captures only the tail of stdout (~2 KB observed in round 1,
 where a 115-query dict overflowed it and the line went unparsed), so the
 stdout line carries a priority-ordered subset of per-query timings
 trimmed to fit; the FULL per-query map is always written to
-``BENCH_DETAIL.json`` next to this script.
+``BENCH_DETAIL.json`` next to this script (besides the untimed
+repacked layout, see main(), the only file a run writes).
 
 Per-query time is wall time of FULL execution: results are drained to
 the noop sink (``df.write.format("noop")``), which materializes every
@@ -17,15 +18,13 @@ expressions that don't change cardinality (projections, window
 functions), silently timing only scan+count for those queries —
 measured e.g. window_dist_functions 0.15 s via count vs the real
 expression cost via noop. Session startup is amortized across the
-suite, matching BASELINE.md's interpretation; per-query Janino JIT is
-amortized the same way (each query runs twice, the warm run is
-reported, the cold run is recorded in BENCH_DETAIL.json's
-cold_queries — see the comment at the timing loop). Queries with a
-stable committed timing history (``bench_history.json``) run once and
-are gated against their trailing median — deviations escalate to the
-full warm protocol in the SAME invocation — keeping bench wall
-sub-linear in catalog size without ever hiding a regression (see the
-tiering comment at the timing loop).
+suite (:func:`warm_up`), matching BASELINE.md's interpretation;
+per-query Janino JIT is amortized the same way: every query runs
+twice, the warm run is reported, the cold run is recorded in
+BENCH_DETAIL.json's cold_queries (:func:`time_entries`). No timing
+state carries over from one run to the next, so a run's numbers depend
+only on the code, the data and the machine window (``vm_speed_factor``,
+``cpus``).
 """
 
 from __future__ import annotations
@@ -37,36 +36,6 @@ import sys
 import time
 
 MAX_LINE = 1750  # stay comfortably under the driver's stdout tail buffer
-
-# Plan fingerprints pin each entry's timing history to the plan it
-# measured: a committed median must never gate (or be reported for) an
-# implementation that changed since it was recorded. The fingerprint is
-# the optimized logical plan string with per-session volatile tokens
-# normalized out — expression IDs (#123), HOF lambda-variable counters,
-# plan ids, object addresses, and file paths (stream entries drain
-# through per-run scratch dirs; the data dir itself is keyed by sf
-# already). A mismatch only ever costs a conservative full warm re-run,
-# so normalization misses are safe; stability across sessions is pinned
-# by tests/test_bench_fingerprint.py.
-_FP_VOLATILE = [
-    (re.compile(r"#\d+"), "#"),
-    # higher-order-function lambda vars carry a session counter in the
-    # NAME (lambda x_9# vs x_21#), not just the expr id
-    (re.compile(r"\b(lambda\s+\w+?)_\d+#"), r"\1_#"),
-    (re.compile(r"plan_id=\d+"), "plan_id="),
-    (re.compile(r"@[0-9a-fA-F]{6,}"), "@"),
-    (re.compile(r"(file|viewfs|s3a?|hdfs):/[^\s,\)\]]*"), "path:/X"),
-    (re.compile(r"/[-\w./]*(tmp|testdata|scratch)[-\w./]*"), "/X"),
-]
-
-
-def plan_fingerprint(df) -> str:
-    import hashlib
-
-    s = df._jdf.queryExecution().optimizedPlan().toString()
-    for pat, repl in _FP_VOLATILE:
-        s = pat.sub(repl, s)
-    return hashlib.sha256(s.encode()).hexdigest()[:16]
 
 # Queries whose timings go on the stdout line first (BASELINE.md's gold
 # models, the TPC-H suite, then flagship data-prep/stream operators).
@@ -101,29 +70,21 @@ def _priority(name: str) -> tuple[int, str]:
 # Three fixed probes mirroring the suite's cost shapes — a parquet
 # scan-agg and a shuffle-agg over the repacked lineitem, plus a pure
 # codegen CPU hash — timed (min of 3 post-JIT runs each) at suite
-# start and end. The geometric mean of their ratios to the COMMITTED
-# per-sf references (bench_history.json "calib_ref", seeded once and
-# committed like the medians) is the vm_speed_factor published on the
-# stdout line and in BENCH_DETAIL — >1 means this VM window ran the
-# probes slower than the reference window. A single probe shape is not
-# enough: a pure-CPU probe measured FLAT across a window where every
-# real query (controls included) ran 1.5-2x slow (r09 adjudication
-# session), so the factor blends the IO/decode, shuffle, and codegen
-# components that real entries are made of.
-#
-# The escalation protocol divides each cold run by the GATING factor
-# before comparing to the committed medians, and normalizes warm runs
-# by it before appending to history, so a throttled VM window neither
-# triggers false escalations nor pollutes the medians. The gating
-# factor is clamped to [1, 4] — ASYMMETRICALLY: a slow window only
-# ever *loosens* the band (that failure mode costs a redundant warm
-# re-run), while an over-measured factor below 1 could *hide* a real
-# regression behind "the VM is fast", which is the failure mode the
-# bench exists to prevent. The unclamped ratio is published alongside.
-# Reported per-query timings stay RAW wall seconds of this session —
-# the factor on the line is what makes them comparable across rounds.
-_CALIB_CLAMP_HI = 4.0
+# start and end. The geometric mean of their ratios to a FROZEN
+# reference window (_CALIB_REF, recorded at sf0.1) is the
+# vm_speed_factor published on the stdout line and in BENCH_DETAIL —
+# >1 means this VM window ran the probes slower than the reference
+# window. A single probe shape is not enough: a pure-CPU probe measured
+# FLAT across a window where every real query (controls included) ran
+# 1.5-2x slow (r09 adjudication session), so the factor blends the
+# IO/decode, shuffle, and codegen components that real entries are made
+# of. The factor only annotates: reported per-query timings stay RAW
+# wall seconds of this session. Probes are data-sized, so other sfs
+# have no reference and read 1.0.
 _CALIB_CPU_N = 256_000_000
+_CALIB_REF = {
+    0.1: {"cpu_hash": 0.0989, "scan_agg": 0.1585, "shuffle_agg": 0.3705},
+}
 
 
 def _calib_probes(spark, sf_dir: str) -> dict:
@@ -173,11 +134,9 @@ def _calib_probes(spark, sf_dir: str) -> dict:
     return out
 
 
-def _vm_speed_factor(cur: dict, ref: dict) -> tuple[float, float]:
-    """(raw, gating) factor from current vs reference probe timings.
-    raw = geometric mean of the per-probe ratios (annotation value);
-    gating = raw clamped to [1, _CALIB_CLAMP_HI] (see module comment).
-    Pure so tests can pin the throttled-VM behavior directly."""
+def _vm_speed_factor(cur: dict, ref: dict) -> float:
+    """Geometric mean of the per-probe cur/ref ratios over the probes
+    both sides measured; 1.0 when none is shared."""
     import math
 
     common = [
@@ -185,41 +144,10 @@ def _vm_speed_factor(cur: dict, ref: dict) -> tuple[float, float]:
         if k in ref and ref.get(k, 0) > 0 and cur.get(k, 0) > 0
     ]
     if not common:
-        return 1.0, 1.0
-    raw = math.exp(
-        sum(math.log(cur[k] / ref[k]) for k in common) / len(common)
-    )
-    return round(raw, 4), min(_CALIB_CLAMP_HI, max(1.0, round(raw, 4)))
-
-
-def _rebase_ratio(old_ref: dict, new_ref: dict) -> float:
-    """Unit shift when the committed calibration reference improves:
-    geomean of the per-probe new/old ratios — the same aggregation
-    _vm_speed_factor uses, so multiplying committed history rows by
-    this expresses them exactly in the NEW ref's units (ADVICE r09:
-    without the rescale a trailing-5 list mixes two units whenever
-    min-convergence finds a faster window). 1.0 when nothing changed
-    or no probe is shared. (Pure so tests can pin it directly.)"""
-    import math
-
-    common = [
-        k for k in old_ref
-        if k in new_ref and old_ref.get(k, 0) > 0 and new_ref.get(k, 0) > 0
-    ]
-    if not common:
         return 1.0
-    return math.exp(
-        sum(math.log(new_ref[k] / old_ref[k]) for k in common)
-        / len(common)
-    )
-
-
-def _band(first: float, med: float, factor: float) -> bool:
-    """Single-run gate: is this session's cold run consistent with the
-    committed warm median once the VM window's speed is factored out?
-    (Pure so tests can pin the throttled-VM behavior directly.)"""
-    adj = first / factor
-    return med / 1.5 <= adj <= med * 1.6 or abs(adj - med) <= 0.3
+    return round(math.exp(
+        sum(math.log(cur[k] / ref[k]) for k in common) / len(common)
+    ), 4)
 
 
 def _stream_reader_shape(fn) -> str:
@@ -298,17 +226,129 @@ def _stream_drain_overheads(spark, sf_dir: str) -> dict:
     return out
 
 
+
+
+def drain(df) -> None:
+    """Run ``df`` to completion through the noop sink (see module
+    docstring: never count())."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def warm_up(spark, sf_dir: str | None = None) -> None:
+    """Untimed session warm-up shared by bench.py and the scripts in
+    scripts/, so their per-entry numbers are comparable.
+
+    Always: executors, and the Python-worker fork. With ``sf_dir`` (a
+    dir holding the catalog's tables) also: the per-table file index
+    and parquet footers, the NBA silver fixture caches, the one
+    model->model ref() cache and one full noop query; corpora without
+    the NBA tables pass ``sf_dir=None``."""
+    from nba_spurs_etl_spark.session import default_parallelism
+
+    spark.range(1_000_000).selectExpr("sum(id)").collect()  # executors
+    if sf_dir is not None:
+        from nba_spurs_etl_spark.plans.catalog import queries
+        from nba_spurs_etl_spark.sources.catalog import (
+            TESTDATA_TABLES,
+            load_table,
+        )
+
+        qs = queries()
+        # warm the shared per-path file index + parquet footers so the
+        # first timed query isn't charged session-level listing costs
+        # (BASELINE.md amortizes session startup across the suite)
+        for t in TESTDATA_TABLES:
+            load_table(spark, sf_dir, t).limit(1).count()
+        # materialize the NBA silver fixture caches once: BASELINE.md's
+        # dbt timings measure gold model builds over ALREADY-LOADED
+        # silver tables, so charging silver synthesis to whichever gold
+        # query runs first would not be apples-to-apples (caches are
+        # lazy — count the heavy tables explicitly)
+        for t in ("silver_games", "silver_player_stats", "silver_players",
+                  "silver_teams", "silver_salaries", "silver_free_agents",
+                  "silver_injuries"):
+            qs[t](spark, sf_dir).count()
+        # materialize the one model->model ref() cache (weaknesses ->
+        # recommendations): dbt runs the upstream model as a TABLE
+        # before the downstream starts, and BASELINE.md's per-model
+        # timings follow that accounting — the upstream subtree is
+        # charged to the upstream model's own row, never recomputed
+        # inside the downstream's.
+        qs["gold_players_recommendations"](spark, sf_dir).count()
+        # One untimed full-query execution to absorb first-query
+        # session costs (whole-stage-codegen Janino JIT, broadcast
+        # thread pool): measured 1.24s first run vs 0.50s warm for the
+        # same plan — summary_rank's r01->r02 "regression" was exactly
+        # this attribution. Drained through the SAME noop sink as the
+        # timed runs: count() lets Catalyst prune the window/projection
+        # subtree, so a count-based warm-up never JITs the window
+        # codegen the timed run executes.
+        drain(qs["summary_rank"](spark, sf_dir))
+
+    # Python-worker warm-up: the first mapInPandas of a session forks
+    # one Python worker per core and imports numpy/pandas in each —
+    # measured ~2.4s at local[32], a one-time session cost any
+    # long-lived deployment amortizes to zero (workers are reused,
+    # spark.python.worker.reuse default). Without this, whichever
+    # Arrow-path query runs first eats it (round 4's
+    # similarity_topk_arrow "3.8x regression" was exactly this cost).
+    def _py_warm(batches):
+        import numpy  # noqa: F401
+        import pandas  # noqa: F401
+
+        yield from batches
+
+    n_warm = 2 * default_parallelism()
+    drain(spark.range(n_warm).repartition(n_warm).mapInPandas(
+        _py_warm, "id long"
+    ))
+
+
+def _timed_drain(fn, spark, sf_dir: str) -> float:
+    t0 = time.perf_counter()
+    drain(fn(spark, sf_dir))
+    return round(time.perf_counter() - t0, 4)
+
+
+def time_entries(spark, sf_dir: str, entries: dict) -> tuple[dict, dict]:
+    """(warm, cold) wall seconds per entry; -1.0 in both for an entry
+    that raises.
+
+    A query's first execution pays per-query Janino JIT of its
+    generated whole-stage-codegen classes — a fixed session cost that
+    any long-lived deployment amortizes to zero and that measured 2-4x
+    of steady-state on sub-second queries, drowning round-over-round
+    plan comparisons in compile-time attribution. BASELINE.md's
+    "session amortized" framing (its dbt timings run against a warm
+    Postgres backend) is implemented literally: each entry is built and
+    drained twice, and the SECOND (warm) drain is reported. Streams
+    re-drain fully on the second run (fresh checkpoint per drain), so
+    stream timings stay full-execution both times."""
+    warm: dict[str, float] = {}
+    cold: dict[str, float] = {}
+    for name, fn in entries.items():
+        try:
+            cold[name] = _timed_drain(fn, spark, sf_dir)
+            warm[name] = _timed_drain(fn, spark, sf_dir)
+        except Exception as e:  # keep the suite going; surface on stderr
+            print(f"bench: {name} FAILED: {e}", file=sys.stderr)
+            warm[name] = cold[name] = -1.0
+        print(f"bench: {name} cold={cold[name]} warm={warm[name]}",
+              file=sys.stderr)
+    return warm, cold
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
     from nba_spurs_etl_spark.plans.catalog import queries
-    from nba_spurs_etl_spark.session import get_spark
-    from nba_spurs_etl_spark.sources.catalog import TESTDATA_TABLES, load_table
+    from nba_spurs_etl_spark.session import default_parallelism, get_spark
+    from nba_spurs_etl_spark.sources.repack import ensure_repacked
 
     spark = get_spark("nba-spurs-etl-spark-bench")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm executors
+    cpus = default_parallelism()
     # Ingest-layout step (one-time, reported, untimed): the driver's
     # testdata ships each table as ONE parquet row group, which is
     # indivisible to the vectorized reader — every scan serializes on a
@@ -318,68 +358,14 @@ def main() -> int:
     # and time queries against that layout — the same accounting as
     # BASELINE.md, whose dbt timings run over tables already loaded
     # (laid out) in Postgres.
-    from nba_spurs_etl_spark.session import default_parallelism
-    from nba_spurs_etl_spark.sources.repack import ensure_repacked
-
     t0 = time.perf_counter()
-    sf_dir = ensure_repacked(sf_dir, default_parallelism())
+    sf_dir = ensure_repacked(sf_dir, cpus)
     print(
         f"bench: repacked testdata layout -> {sf_dir} "
         f"({time.perf_counter() - t0:.2f}s, untimed ingest step)",
         file=sys.stderr,
     )
-    # warm the shared per-path file index + parquet footers so the first
-    # timed query isn't charged session-level listing costs (BASELINE.md
-    # amortizes session startup across the suite)
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).limit(1).count()
-    # materialize the NBA silver fixture caches once: BASELINE.md's dbt
-    # timings measure gold model builds over ALREADY-LOADED silver
-    # tables, so charging silver synthesis to whichever gold query runs
-    # first would not be apples-to-apples (caches are lazy — count the
-    # heavy tables explicitly)
-    for t in ("silver_games", "silver_player_stats", "silver_players",
-              "silver_teams", "silver_salaries", "silver_free_agents",
-              "silver_injuries"):
-        queries()[t](spark, sf_dir).count()
-    # materialize the one model->model ref() cache (weaknesses ->
-    # recommendations): dbt runs the upstream model as a TABLE before
-    # the downstream starts, and BASELINE.md's per-model timings follow
-    # that accounting — the upstream subtree is charged to the upstream
-    # model's own row, never recomputed inside the downstream's.
-    queries()["gold_players_recommendations"](spark, sf_dir).count()
-    # One untimed full-query execution to absorb first-query session
-    # costs (whole-stage-codegen Janino JIT, broadcast thread pool):
-    # measured 1.24s first run vs 0.50s warm for the same plan. Without
-    # this, whichever query runs first eats ~0.7s of session warm-up —
-    # summary_rank's r01->r02 "regression" was exactly this attribution.
-    # Drain through the SAME noop sink as the timed runs: count() lets
-    # Catalyst prune the window/projection subtree, so a count-based
-    # warm-up never JITs the window codegen the timed run executes
-    # (measured: 1.15s first noop run after a count warm-up vs 0.35s
-    # steady-state for summary_rank at sf0.1).
-    queries()["summary_rank"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # Python-worker warm-up: the first mapInPandas of a session forks
-    # one Python worker per core and imports numpy/pandas in each —
-    # measured ~2.4s at local[32], a one-time session cost any
-    # long-lived deployment amortizes to zero (workers are reused,
-    # spark.python.worker.reuse default). Without this, whichever
-    # Arrow-path query runs first eats it: round 4's
-    # similarity_topk_arrow "3.8x regression" (2.31s reported vs 0.68s
-    # true warm) was exactly this cost landing on a single-run entry.
-    def _py_warm(batches):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        for b in batches:
-            yield b
-
-    n_warm = 2 * default_parallelism()
-    spark.range(n_warm).repartition(n_warm).mapInPandas(
-        _py_warm, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, sf_dir)
 
     # VM speed calibration (untimed; see _calib_probes). Measured
     # after the warm-ups so it reads steady-state executor speed, and
@@ -387,281 +373,10 @@ def main() -> int:
     # BENCH_DETAIL. Runs over the REPACKED sf_dir — same layout the
     # timed queries read.
     calib_start = _calib_probes(spark, sf_dir)
+    calib_ref = _CALIB_REF.get(sf, {})
+    factor = _vm_speed_factor(calib_start, calib_ref)
 
-    # Warm-run protocol: a query's first execution pays per-query
-    # Janino JIT of its generated whole-stage-codegen classes — a fixed
-    # session cost that any long-lived 100 TB deployment amortizes to
-    # zero and that measured 2-4x of steady-state on sub-second queries
-    # here, drowning round-over-round plan comparisons in compile-time
-    # attribution. BASELINE.md's "session amortized" framing (its dbt
-    # timings run against a warm Postgres backend) is implemented
-    # literally: the full protocol runs each query twice and reports
-    # the SECOND (warm) run; the first is kept in BENCH_DETAIL's
-    # cold_queries. Streams re-drain fully on the second run (fresh
-    # checkpoint per drain), so stream timings stay full-execution both
-    # times.
-    #
-    # Tiering (sub-linear bench wall as the catalog grows — the wall
-    # was outgrowing the driver margin at 2 runs/query): a committed
-    # per-entry trailing-median table (bench_history.json, last 5 TRUE
-    # warm timings per entry per sf) decides noise vs drift by data.
-    # Every entry's history is pinned to a fingerprint of its optimized
-    # logical plan (normalized of per-session ids/paths): the moment an
-    # implementation changes its plan, the old history is evicted and
-    # the entry escalates to the full warm protocol — a changed query
-    # can never report a median measured for code that no longer exists.
-    #   - Entries with NO history (new this round) and the headline
-    #     comparison set (gold models + flagship — everything
-    #     BASELINE.md is compared against) run the full warm protocol.
-    #   - A rotating ~20% refresh slice of historied entries also runs
-    #     the full protocol (slice = crc32(name)+run_counter mod 5), so
-    #     every entry's history is at most 5 rounds stale by
-    #     construction — the mechanical answer to "is this delta noise
-    #     or drift": stale medians can't accumulate.
-    #   - The stable tail runs ONCE. If the run lands inside the band
-    #     [median/1.5, median*1.6] (or within 0.3s absolute — sub-
-    #     second queries jitter 2-4x on this VM), the reported value is
-    #     min(run, trailing median): both are true measurements of this
-    #     plan, cold >= warm bounds the truth from above, and the
-    #     median is the closest committed warm measurement. If the run
-    #     lands OUTSIDE the band — faster or slower — the entry
-    #     escalates to the full protocol in the SAME invocation and the
-    #     fresh warm run is reported: a real regression is re-measured
-    #     warm immediately (never reported from a cold artifact, never
-    #     hidden behind a stale median), and a real improvement
-    #     refreshes the history just as fast.
-    hist_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "bench_history.json")
-    history: dict = {"run_counter": 0, "warm": {}}
-    try:
-        with open(hist_path) as f:
-            history = json.load(f)
-    except (OSError, ValueError):
-        # seed from the last committed detail file's warm_basis (true
-        # warm timings carried across rounds) at the SAME scale factor
-        try:
-            with open(os.path.join(os.path.dirname(hist_path),
-                                   "BENCH_DETAIL.json")) as f:
-                prev = json.load(f)
-            if prev.get("sf") == sf and sf is not None:
-                history["warm"][str(sf)] = {
-                    k: [v] for k, v in prev.get("warm_basis", {}).items()
-                    if v and v > 0
-                }
-        except (OSError, ValueError):
-            pass
-    # an unparseable data dir (sf None) would bucket all such runs under
-    # the history key 'None' — medians from a DIFFERENT dataset could
-    # then gate single-run reporting. Mirror the seed-path guard: skip
-    # tiering entirely (every entry runs the full warm protocol) and
-    # neither read nor persist history for the run.
-    tiering_enabled = sf is not None
-    if tiering_enabled:
-        sf_hist: dict[str, list] = history.setdefault("warm", {}).setdefault(
-            str(sf), {}
-        )
-    else:
-        sf_hist = {}  # detached scratch: never persisted
-    run_counter = int(history.get("run_counter", 0))
-
-    import statistics
-    import zlib
-
-    if tiering_enabled:
-        fp_table: dict[str, str] = history.setdefault(
-            "plan_fp", {}
-        ).setdefault(str(sf), {})
-    else:
-        fp_table = {}
-
-    # vm_speed_factor = this window's probes over the committed per-sf
-    # references (seeded on first run at that sf; committed like the
-    # medians). Probes are data-sized, so refs are keyed by sf; when
-    # tiering is disabled (unparseable sf) no ref is read or written
-    # and the factor annotates only.
-    if tiering_enabled:
-        calib_ref = history.setdefault("calib_ref", {}).setdefault(
-            str(sf), {}
-        )
-        old_ref = dict(calib_ref)
-        for k, v in calib_start.items():
-            # the reference converges to the FASTEST window ever
-            # observed (min), so the factor reads 'how much slower
-            # than best-known' — a ref first seeded in a slow window
-            # would otherwise read every later quiet window as <1 and
-            # every equally-slow window as 1.0, re-enabling the false
-            # escalations the factor exists to prevent
-            calib_ref[k] = min(calib_ref.get(k, v), v)
-        # ADVICE r09: a min-convergence improvement RE-BASES the
-        # normalization unit — rows already committed at this sf were
-        # recorded as warm/factor against the OLD ref, so without a
-        # rescale the same trailing-5 list would mix two units and
-        # skew the gate medians. Express every committed row in the
-        # NEW ref's units; applied on every improvement, however
-        # small, so lists can never drift epochs apart.
-        _rebase = _rebase_ratio(old_ref, calib_ref)
-        if _rebase != 1.0:
-            for _n in list(sf_hist):
-                sf_hist[_n] = [
-                    round(r * _rebase, 4) for r in sf_hist[_n]
-                ]
-    else:
-        calib_ref = dict(calib_start)
-    factor_raw, factor = _vm_speed_factor(calib_start, calib_ref)
-    # ADVICE r09: beyond the gating clamp the ref itself is suspect —
-    # med*factor would report min(first, med*4), a value below any
-    # measurement obtainable in a >4x-throttled session ('never a
-    # number the current plan hasn't earned'). Escalate EVERYTHING to
-    # the full warm protocol (raw earned runs only) and neither append
-    # history rows nor publish warm_basis: a broken normalization must
-    # not leak into the medians or the seed fallback.
-    calib_broken = factor_raw > _CALIB_CLAMP_HI
-    if calib_broken:
-        print(
-            f"bench: calibration factor {factor_raw} exceeds clamp "
-            f"{_CALIB_CLAMP_HI}; full protocol, history writes off",
-            file=sys.stderr,
-        )
-        # recovery path (r10 review find): min-convergence can never
-        # RAISE the ref, so a single spuriously-fast committed probe
-        # (timer glitch) would otherwise leave calib_broken sticky
-        # forever — full protocol every run, history frozen, no way
-        # back without hand-editing. One over-clamp window is treated
-        # as a genuinely throttled VM (conservative); THREE
-        # consecutive ones mean the committed ref, not the machine, is
-        # the outlier (a real throttle lifts between runs), so the ref
-        # re-seeds to the current probes and committed history rows
-        # rescale into the new units (the same geomean shift as the
-        # improvement re-base above). Tiering resumes next run.
-        streak = int(history.get("calib_broken_streak", 0)) + 1
-        history["calib_broken_streak"] = streak
-        if streak >= 3 and tiering_enabled:
-            rebase = _rebase_ratio(calib_ref, calib_start)
-            for k, v in calib_start.items():
-                calib_ref[k] = v
-            for _n in list(sf_hist):
-                sf_hist[_n] = [
-                    round(r * rebase, 4) for r in sf_hist[_n]
-                ]
-            history["calib_broken_streak"] = 0
-            print(
-                "bench: 3 consecutive over-clamp windows — "
-                f"re-seeded calib_ref (history rescaled x{rebase:.3f})",
-                file=sys.stderr,
-            )
-    else:
-        history["calib_broken_streak"] = 0
-
-    def _always_double(name: str) -> bool:
-        # gold/flagship = the BASELINE.md comparison set; the hybrid
-        # is the r09/r10 headline perf item (adaptive champion bind —
-        # VERDICT r09 item 1's ≤3.6 s warm bar), so the bench of
-        # record always carries a TRUE warm run for it rather than a
-        # single-run cold bound
-        return name.startswith(
-            ("gold_", "summary_rank", "pricing_summary",
-             "search_hybrid_rrf_topk")
-        )
-
-    def _in_refresh_slice(name: str) -> bool:
-        return (zlib.crc32(name.encode()) + run_counter) % 5 == 0
-
-    def _run(fn):
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 4), df
-
-    timings: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    warm_basis: dict[str, float] = {}
-    single_run: list[str] = []
-    escalated: list[str] = []
-    refreshed: list[str] = []
-    invalidated: list[str] = []
-    for name, fn in queries().items():
-        try:
-            cold[name] = first = (res := _run(fn))[0]
-            # fingerprint check (untimed, after the cold run): history
-            # recorded for a DIFFERENT plan must not gate this entry —
-            # a changed implementation always escalates to the full
-            # warm protocol, and its fresh warm run reseeds history.
-            try:
-                fp = plan_fingerprint(res[1])
-            except Exception:
-                fp = None
-            if fp is None or fp_table.get(name) != fp:
-                if name in sf_hist:
-                    invalidated.append(name)
-                    del sf_hist[name]
-            if fp is not None:
-                fp_table[name] = fp
-            else:
-                # ADVICE r06: drop the stale fingerprint too — leaving
-                # it would let a later session that reverts to the OLD
-                # plan match it while its history rows were reseeded by
-                # the CURRENT plan, gating one plan with another's
-                # medians. Both tables reseed together or not at all.
-                fp_table.pop(name, None)
-            hist = sf_hist.get(name, [])
-            med = statistics.median(hist) if hist else None
-            full = _always_double(name) or med is None or calib_broken
-            if not full and _in_refresh_slice(name):
-                full = True
-                refreshed.append(name)
-            if not full:
-                # the band test factors out the VM window's speed
-                # (first/factor vs med) so a uniformly slow window
-                # doesn't escalate every stable entry — escalations
-                # should fire on ENTRY-SPECIFIC deviation only
-                if _band(first, med, factor):
-                    # both operands are measurements of THIS plan (the
-                    # fingerprint gate above evicts history the moment
-                    # an implementation changes): med is the committed
-                    # trailing-median of true warm runs (REFERENCE-
-                    # window units since r09 — multiply by factor to
-                    # express it in this session's wall seconds), and
-                    # first is this session's cold run (>= this
-                    # session's warm), so min(first, med * factor) is
-                    # an upper bound on this session's true warm
-                    # timing of the current code — never a number the
-                    # current plan hasn't earned, and in the SAME raw
-                    # units as every escalated/full entry (review
-                    # find: min(first, med) mixed units on throttled
-                    # windows, double-correcting under the stdout
-                    # line's divide-by-factor instruction).
-                    timings[name] = round(min(first, med * factor), 4)
-                    warm_basis[name] = med
-                    single_run.append(name)
-                    # a cold run BELOW the median is a tighter upper
-                    # bound on warm — record it (speed-normalized, as
-                    # all history rows are); an in-band cold above the
-                    # median would only drag the median toward
-                    # cold-run territory, so it stays out
-                    if first / factor < med:
-                        sf_hist[name] = (hist + [round(first / factor,
-                                                       4)])[-5:]
-                    continue
-                escalated.append(name)
-            warm = _run(fn)[0]
-            timings[name] = warm
-            # history rows AND warm_basis are kept in REFERENCE-window
-            # units (warm / factor) so a slow VM window can't drag the
-            # medians that gate future rounds, and so the BENCH_DETAIL
-            # seed fallback (which copies warm_basis into history)
-            # stays unit-consistent; reported timings stay raw. In a
-            # calib-broken window (factor_raw beyond the clamp) the
-            # normalization itself is untrusted: report the raw earned
-            # warm run but keep it out of history and warm_basis.
-            if not calib_broken:
-                warm_basis[name] = round(warm / factor, 4)
-                sf_hist[name] = (sf_hist.get(name, [])
-                                 + [round(warm / factor, 4)])[-5:]
-        except Exception as e:  # keep the suite going; surface on stderr
-            print(f"bench: {name} FAILED: {e}", file=sys.stderr)
-            timings[name] = -1.0
-            cold.setdefault(name, -1.0)
-
+    timings, cold = time_entries(spark, sf_dir, queries())
     total = round(sum(t for t in timings.values() if t >= 0), 4)
     n_failed = sum(1 for t in timings.values() if t < 0)
 
@@ -676,10 +391,6 @@ def main() -> int:
             if oh is not None:
                 stream_net[name] = round(max(0.0, timings[name] - oh), 4)
 
-    history["run_counter"] = run_counter + 1
-    with open(hist_path, "w") as f:
-        json.dump(history, f, indent=1, sort_keys=True)
-
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_DETAIL.json")
     with open(detail_path, "w") as f:
@@ -690,20 +401,14 @@ def main() -> int:
                 "unit": "sec",
                 "queries": timings,
                 "cold_queries": cold,
-                "warm_basis": warm_basis,
-                "single_run": sorted(single_run),
-                "escalated": sorted(escalated),
-                "refreshed": sorted(refreshed),
-                "plan_invalidated": sorted(invalidated),
                 "vm_speed_factor": factor,
-                "vm_speed_factor_raw": factor_raw,
-                "calib_broken": calib_broken,
                 "calib_start": calib_start,
                 "calib_end": calib_end,
-                "calib_ref": dict(calib_ref),
+                "calib_ref": calib_ref,
                 "stream_drain_overhead": overheads,
                 "stream_net": stream_net,
                 "sf": sf,
+                "cpus": cpus,
                 "n_queries": len(timings),
                 "n_failed": n_failed,
             },
@@ -719,11 +424,12 @@ def main() -> int:
         "unit": "sec",
         "queries": {},
         "sf": sf,
+        "cpus": cpus,
         "n_queries": len(timings),
         "n_failed": n_failed,
-        # >1 = this VM window ran the fixed CPU calibration slower
-        # than the committed reference window; divide timings by it
-        # to compare across rounds (full decomposition in detail file)
+        # >1 = this VM window ran the calibration probes slower than
+        # the frozen reference window; divide timings by it to compare
+        # across rounds (full decomposition in detail file)
         "vm_speed_factor": round(factor, 3),
         "detail": "BENCH_DETAIL.json",
     }

@@ -146,21 +146,7 @@ def kmeans_lloyd(
     # the feature frame across iterations is the standard Lloyd shape
     # (Spark MLlib's KMeans caches its input the same way); the first
     # action (seed) materializes it as a side effect.
-    # A checkpoint erases upstream lineage from bench.py's plan
-    # fingerprint (LogicalRDD leaf) — embed a hash of the
-    # pre-checkpoint plan as a marker COLUMN NAME so upstream changes
-    # still evict timing history (the bm25 pruned-path idiom,
-    # operators/search.py).
-    from .similarity import lineage_token
-
-    pre = _kmeans_base_pre(df, id_col, vec_col)
-    # lineage_token degrades to a per-call UNIQUE value (always-evict)
-    # when canonicalization fails — a constant fallback would freeze
-    # the fingerprint and stop evicting stale medians (ADVICE r11)
-    _lin = lineage_token(pre)
-    base = pre.withColumn(
-        f"_lineage_{_lin}", F.lit(1).cast("tinyint")
-    ).localCheckpoint(eager=False).drop(f"_lineage_{_lin}")
+    base = _kmeans_base_pre(df, id_col, vec_col).localCheckpoint(eager=False)
     # centroid ids keep the seed id column's NATIVE type: string doc
     # ids cast to long would all become NULL (frozen clustering)
     cid_type = df.schema[id_col].dataType.simpleString()

@@ -928,13 +928,14 @@ def connected_components(
     # lazy+count fusion, VERDICT r11 item 1): the lazy variant ran one
     # job per round instead of two, but the driver's r11 PERF measured
     # three consumer entries 15-30% slower, and the repo's interleaved
-    # paired A/B (scripts/ab_cc.py, 6 ABBA pairs per entry, one
-    # session) confirmed it — lazy+count medians were 1.04-1.13x the
-    # eager+isEmpty shape on 6 of 7 consumer entries. The fused probe
-    # is a full-scan count() whose aggregate sits on the critical
-    # path every round; the eager shape's extra job is an isEmpty
-    # over already-materialized rows (~one empty task) and the
-    # materialization job itself pipelines better. Fewer jobs did NOT
+    # paired A/B (6 ABBA pairs per entry, one session; per-entry
+    # ratios in revert commit 0d14f39) confirmed it — lazy+count
+    # medians were 1.04-1.13x the eager+isEmpty shape on 6 of 7
+    # consumer entries. The fused probe is a full-scan count() whose
+    # aggregate sits on the critical path every round; the eager
+    # shape's extra job is an isEmpty over already-materialized rows
+    # (~one empty task) and the materialization job itself pipelines
+    # better. Fewer jobs did NOT
     # mean less wall-clock here; reverted on measurement.
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1095,10 +1096,10 @@ def connected_components_star(
     # r11 lazy variant piggybacked materialization on the fingerprint
     # probe (one job per round instead of two), but the driver
     # measured dedup_components_star 0.70x and the repo's interleaved
-    # paired A/B (scripts/ab_cc.py) confirmed lazy+fused-probe medians
-    # 1.08x this eager shape — the full-scan fingerprint aggregate on
-    # the critical path costs more than the extra cheap probe job.
-    # Reverted on measurement; see connected_components for the full
+    # paired A/B (revert commit 0d14f39) confirmed lazy+fused-probe
+    # medians 1.08x this eager shape — the full-scan fingerprint
+    # aggregate on the critical path costs more than the extra cheap
+    # probe job. Reverted on measurement; see connected_components for the full
     # adjudication note.
     base = (
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))

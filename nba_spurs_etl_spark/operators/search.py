@@ -259,30 +259,7 @@ def bm25_topk(
         # connected_components_star's un-checkpointed nodes frame
         # (r08 find). The checkpointed frame is hit-sized (query-term
         # matches only), never corpus-sized.
-        #
-        # A checkpoint erases upstream lineage from the optimized
-        # plan (the leaf prints as a bare LogicalRDD), which would
-        # blind bench.py's plan fingerprint to upstream changes —
-        # history medians for OLD tokenization could gate NEW code
-        # (review find). Embed a fingerprint of the pre-checkpoint
-        # plans as a marker COLUMN NAME: attribute names survive in
-        # the LogicalRDD leaf's printed output (only expr ids are
-        # normalized), so any upstream change renames the column and
-        # evicts the history. One constant tinyint per row —
-        # negligible in the checkpoint, projected away downstream.
-        import hashlib
-
-        from .similarity import canon_plan_str
-
-        _lin = hashlib.sha256(
-            (
-                (canon_plan_str(matched) or "?")
-                + (canon_plan_str(stats) or "?")
-            ).encode()
-        ).hexdigest()[:12]
-        matched = matched.withColumn(
-            f"_lineage_{_lin}", F.lit(1).cast("tinyint")
-        ).localCheckpoint(eager=True)
+        matched = matched.localCheckpoint(eager=True)
         dfreq = matched.groupBy("term").agg(
             F.count(F.lit(1)).alias("df")
         )

@@ -919,32 +919,6 @@ def canon_plan_str(df: DataFrame):
         return None
 
 
-def lineage_token(*frames: DataFrame, extra: str = "") -> str:
-    """12-hex fingerprint of the frames' canonicalized plans, for the
-    checkpoint sentinel-column idiom (a localCheckpoint erases upstream
-    lineage from bench.py's plan fingerprint — embedding this token in
-    a COLUMN NAME keeps timing history change-sensitive, because
-    attribute names survive in the printed LogicalRDD leaf).
-
-    When canonicalization fails the token degrades to a per-call
-    UNIQUE value, not a constant: a constant fallback would freeze the
-    fingerprint and silently stop evicting stale bench medians —
-    exactly the hazard the marker exists to prevent (ADVICE r11).
-    Always-evict is the safe direction."""
-    import hashlib
-    import uuid
-
-    parts = []
-    for f in frames:
-        c = canon_plan_str(f)
-        if c is None:
-            return uuid.uuid4().hex[:12]
-        parts.append(c)
-    return hashlib.sha256(
-        ("\x00".join(parts) + "\x00" + extra).encode()
-    ).hexdigest()[:12]
-
-
 def _index_cache_key(candidates: DataFrame, *params):
     try:
         files = tuple(sorted(candidates.inputFiles()))

@@ -459,30 +459,7 @@ def bpe_merge_table(
     # lazy: round 1's winner job materializes it (r11 — saves the
     # separate eager-materialization job; rounds 2+ read the cache)
     base = pre.localCheckpoint(eager=False)
-    # Fingerprint lineage (r11 review find): the output below is a
-    # LOCAL relation, which prints only its schema in the optimized
-    # plan — bench.py's plan fingerprint would go blind to upstream
-    # changes (tokenization, prefix_chars, round count) and stale
-    # timing medians could gate new code. Same hazard class as the
-    # bm25 pruned-path checkpoint (operators/search.py): embed a hash
-    # of the PRE-checkpoint sample plan + the round count as a marker
-    # COLUMN NAME on an empty checkpointed sentinel unioned into the
-    # result — LogicalRDD leaves keep their attribute names in the
-    # plan string, and the empty union changes no rows.
-    from .similarity import lineage_token
-
-    # lineage_token degrades to a per-call UNIQUE value (always-evict)
-    # when canonicalization fails — a constant fallback would freeze
-    # the fingerprint and stop evicting stale medians (ADVICE r11)
-    _lin = lineage_token(pre, extra=f"rounds={rounds}")
     out_schema = "round int, merged string, cnt bigint"
-    sentinel = (
-        spark.createDataFrame(
-            [], out_schema + f", _lineage_{_lin} tinyint"
-        )
-        .localCheckpoint(eager=True)
-        .drop(f"_lineage_{_lin}")
-    )
 
     def counts(merges: list[str]) -> DataFrame:
         st = F.col("st0")
@@ -542,6 +519,4 @@ def bpe_merge_table(
         out_rows.append(
             (r, row["pr"].replace(sep, ""), row["cnt"])
         )
-    return spark.createDataFrame(out_rows, out_schema).unionByName(
-        sentinel
-    )
+    return spark.createDataFrame(out_rows, out_schema)

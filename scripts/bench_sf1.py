@@ -3,12 +3,12 @@
 
 Upgrades the per-operator 10x probes (rows in docs/SCALE.md) to
 whole-suite scaling evidence: every catalog query
-runs at the replicated-10x scale under the same warm protocol as
-bench.py (two runs, second reported; noop sink; python-worker +
-scan warm-up), and the per-query table is written to
-``BENCH_SF1.json`` at the repo root together with the sf0.1 timings
-from the committed BENCH_DETAIL.json so slopes are reviewable in one
-artifact.
+runs at the replicated-10x scale through bench.py's own warm-up and
+timing loop (``bench.warm_up``, ``bench.time_entries``: two runs,
+second reported; noop sink), and the per-query table is written to
+``BENCH_SF1.json`` at the repo root together with the sf0.1 warm
+timings from the committed BENCH_DETAIL.json so slopes are reviewable
+in one artifact.
 
 The 10x corpus is the same deliberately adversarial replication the
 probes used (``build``): key-offset facts, dims unchanged — every
@@ -30,13 +30,10 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from nba_spurs_etl_spark.plans.catalog import queries  # noqa: E402
-from nba_spurs_etl_spark.session import default_parallelism, get_spark  # noqa: E402
-from nba_spurs_etl_spark.sources.catalog import (  # noqa: E402
-    DEFAULT_SF_DIR as SRC,
-    TESTDATA_TABLES,
-    load_table,
-)
+from nba_spurs_etl_spark.session import get_spark  # noqa: E402
+from nba_spurs_etl_spark.sources.catalog import DEFAULT_SF_DIR as SRC  # noqa: E402
 
 K = 10
 DST = f"/tmp/sfx{K}"
@@ -85,51 +82,9 @@ def main() -> int:
         build(spark, DST, K)
         print(f"built {DST} in {time.perf_counter()-t0:.1f}s", file=sys.stderr)
 
-    # same untimed session warm-ups as bench.py: executors, parquet
-    # footers, silver fixture caches, one full query (Janino), python
-    # workers (numpy/pandas import per core)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for t in TESTDATA_TABLES:
-        load_table(spark, DST, t).limit(1).count()
-    qs = queries()
-    for t in ("silver_games", "silver_player_stats", "silver_players",
-              "silver_teams", "silver_salaries", "silver_free_agents",
-              "silver_injuries"):
-        qs[t](spark, DST).count()
-    qs["gold_players_recommendations"](spark, DST).count()
-    qs["summary_rank"](spark, DST).write.format("noop").mode("overwrite").save()
-
-    def _py_warm(batches):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        for b in batches:
-            yield b
-
-    n_warm = 2 * default_parallelism()
-    spark.range(n_warm).repartition(n_warm).mapInPandas(
-        _py_warm, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    timings: dict[str, float] = {}
-    cold: dict[str, float] = {}
+    bench.warm_up(spark, DST)
     suite_t0 = time.perf_counter()
-    for name, fn in qs.items():
-        try:
-            t0 = time.perf_counter()
-            fn(spark, DST).write.format("noop").mode("overwrite").save()
-            cold[name] = round(time.perf_counter() - t0, 4)
-            t0 = time.perf_counter()
-            fn(spark, DST).write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 4)
-        except Exception as e:
-            print(f"bench_sf1: {name} FAILED: {e}", file=sys.stderr)
-            timings[name] = -1.0
-            cold.setdefault(name, -1.0)
-        print(
-            f"bench_sf1: {name} cold={cold[name]} warm={timings[name]}",
-            file=sys.stderr,
-        )
+    timings, cold = bench.time_entries(spark, DST, queries())
     real_wall = round(time.perf_counter() - suite_t0, 1)
 
     sf01: dict[str, float] = {}
@@ -137,7 +92,7 @@ def main() -> int:
         with open(os.path.join(REPO, "BENCH_DETAIL.json")) as f:
             prev = json.load(f)
         if prev.get("sf") == 0.1:
-            sf01 = prev.get("warm_basis", {})
+            sf01 = prev.get("queries", {})
     except (OSError, ValueError):
         pass
 

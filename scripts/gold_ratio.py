@@ -24,6 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from nba_spurs_etl_spark.plans.catalog import queries  # noqa: E402
 from nba_spurs_etl_spark.session import default_parallelism, get_spark  # noqa: E402
 from nba_spurs_etl_spark.sources.repack import ensure_repacked  # noqa: E402
@@ -58,22 +59,16 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("gold-ratio")
     sf_dir = ensure_repacked(sf_dir, default_parallelism())
+    # bench.py's untimed warm-up, incl. its dbt accounting: silver
+    # fixtures + the upstream ref() materialized before anything is timed
+    bench.warm_up(spark, sf_dir)
     qs = queries()
-    # same dbt accounting as bench.py: silver fixtures + the upstream
-    # ref() materialized before anything is timed
-    for t in ("silver_games", "silver_player_stats", "silver_players",
-              "silver_teams", "silver_salaries", "silver_free_agents",
-              "silver_injuries"):
-        qs[t](spark, sf_dir).count()
-    qs["gold_players_recommendations"](spark, sf_dir).count()
 
     times: dict[str, list[float]] = {g: [] for g in GOLD}
     for rnd in range(N_ROUNDS):
         for g in GOLD:
             t0 = time.perf_counter()
-            qs[g](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            bench.drain(qs[g](spark, sf_dir))
             times[g].append(time.perf_counter() - t0)
 
     med = {g: statistics.median(ts[2:]) for g, ts in times.items()}

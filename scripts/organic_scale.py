@@ -48,6 +48,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from nba_spurs_etl_spark.plans.catalog import queries  # noqa: E402
 from nba_spurs_etl_spark.session import default_parallelism, get_spark  # noqa: E402
 
@@ -199,19 +200,9 @@ def main() -> int:
                   file=sys.stderr)
         dirs[k] = dst
 
-    # python-worker + executor warm-up, as bench.py does
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def _py_warm(batches):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        yield from batches
-
-    n_warm = 2 * default_parallelism()
-    spark.range(n_warm).repartition(n_warm).mapInPandas(
-        _py_warm, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    # executor + python-worker warm-up; these corpora hold no NBA
+    # tables, so bench.warm_up's table/silver part does not apply
+    bench.warm_up(spark)
 
     qs = queries()
 
@@ -223,9 +214,7 @@ def main() -> int:
         # shuffles still run, so the timed noop run below stays warm)
         rows = qs[name](spark, sf_dir).count()
         t0 = time.perf_counter()
-        qs[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        bench.drain(qs[name](spark, sf_dir))
         wall = time.perf_counter() - t0
         return round(wall, 2), rows
 

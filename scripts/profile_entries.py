@@ -3,7 +3,7 @@
 
 Usage:  python scripts/profile_entries.py [--plans-out DIR] [--runs N] name...
 
-Reproduces bench.py's session + warm-up protocol (repacked layout,
+Runs bench.py's session warm-up (repacked layout, ``bench.warm_up``:
 silver caches, JIT/py-worker warm-up), then for each named catalog
 entry: runs the query to the noop sink ``--runs`` times (cold first,
 then warm), reporting wall seconds plus job/stage/task counts from the
@@ -11,13 +11,6 @@ status tracker (scheduling overhead shows up as job count x fixed
 cost), and optionally dumps ``explain("formatted")`` to
 ``<plans-out>/<name>.txt`` for the before/after evidence the round
 deliverables require.
-
-NOTE: the session + warm-up block below deliberately MIRRORS
-bench.py's protocol (repack, table/silver warm-ups, summary_rank noop,
-python-worker fork, cpu_hash probe shape) so per-entry numbers are
-comparable to bench results — keep the two in sync when the bench
-protocol changes (they are separate because bench.py's warm-up is
-inline in its main() and the bench file is driver-contract-sensitive).
 """
 
 from __future__ import annotations
@@ -39,9 +32,9 @@ def main() -> int:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
+    import bench
     from nba_spurs_etl_spark.plans.catalog import queries
     from nba_spurs_etl_spark.session import default_parallelism, get_spark
-    from nba_spurs_etl_spark.sources.catalog import TESTDATA_TABLES, load_table
     from nba_spurs_etl_spark.sources.repack import ensure_repacked
 
     qs = queries()
@@ -52,27 +45,8 @@ def main() -> int:
 
     spark = get_spark("profile-entries")
     sc = spark.sparkContext
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
     sf_dir = ensure_repacked(args.sf_dir, default_parallelism())
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).limit(1).count()
-    for t in ("silver_games", "silver_player_stats", "silver_players",
-              "silver_teams", "silver_salaries", "silver_free_agents",
-              "silver_injuries"):
-        qs[t](spark, sf_dir).count()
-    qs["gold_players_recommendations"](spark, sf_dir).count()
-    qs["summary_rank"](spark, sf_dir).write.format("noop").mode(
-        "overwrite").save()
-
-    def _py_warm(batches):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-        for b in batches:
-            yield b
-
-    n_warm = 2 * default_parallelism()
-    spark.range(n_warm).repartition(n_warm).mapInPandas(
-        _py_warm, "id long").write.format("noop").mode("overwrite").save()
+    bench.warm_up(spark, sf_dir)
 
     st = sc.statusTracker()
 
@@ -94,8 +68,7 @@ def main() -> int:
             group = f"prof_{name}_{i}"
             sc.setJobGroup(group, name)
             t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            bench.drain(fn(spark, sf_dir))
             times.append(time.perf_counter() - t0)
             sc.setJobGroup(None, None)
             if i == args.runs - 1:  # warm-run shape

@@ -1,236 +1,67 @@
-"""Stability pin for bench.py's plan fingerprints.
-
-bench.py gates single-run timing entries on a committed trailing median
-ONLY when the entry's optimized-plan fingerprint matches the one the
-history was recorded under (ADVICE r05: a changed plan must never
-report a median measured for code that no longer exists). That gate is
-useless if the fingerprint itself churns between sessions — every
-entry would silently escalate to the full warm protocol and the bench
-wall would double. This test double-builds a representative sample of
-catalog entries (expression-ID counters advance between builds, the
-same variance a new session produces) and asserts the normalized
-fingerprint is identical.
-
-Known-unstable, by design: q21_waiting_supplier and (r10)
-table_profile_orders — their multi-count(DISTINCT) aggregates go
-through RewriteDistinctAggregates, whose Expand `gid` labels are
-assigned in hash-set order (seeded by expr IDs), permuting the
-projection list text, the grouping-key order, AND the Expand struct
-rows between builds (diffed live in r10: value_str/value_num swap
-gid 1<->2). Identical physical work; the only cost of the mismatch is
-that these entries always run bench's full warm protocol
-(conservative, never wrong). A text-level normalization would need a
-nested-bracket parser to sort Expand rows without conflating
-genuinely different aggregate sets — under-discrimination (stale
-history gating changed code) is the dangerous failure mode, so the
-gid class stays on the conservative side. Any NEW unstable entry
-outside this class should get a normalization rule in
-bench._FP_VOLATILE rather than widening this allowlist.
-"""
+"""Pins for bench.py: the per-entry cold/warm loop, the VM speed
+factor, and that the committed bench of record covers the registry."""
 
 from __future__ import annotations
 
-import pytest
+import time
 
 import bench
-from nba_spurs_etl_spark.plans.catalog import queries
-
-from .conftest import SF_SMOKE
-
-# one entry per plan-shape family that has bitten before: HOF lambdas
-# (similarity), streams (scratch paths), caches (gold fixture), window
-# group limits, Expand/grouping sets, subqueries, Python Arrow paths
-SAMPLE = [
-    "summary_rank",
-    "pricing_summary",
-    "q6_forecast_revenue",
-    "q17_small_quantity_revenue",  # scalar subquery
-    "similarity_topk_bruteforce",  # HOF lambda counters
-    "similarity_topk_ivf_pq",  # collected codebook literals
-    "dedup_minhash_lsh",
-    "stream_dedup",  # streaming drain + scratch dir
-    "gold_summary_by_season",  # cached silver fixture
-    "vocab_encode_docs",  # window-group-limit rewrite
-    "rollup_orders",  # Expand / grouping sets
-    "events_sessionize",
-    "corpus_dsir_topk",
-    "multimodal_features",  # mapInPandas
-]
 
 
-@pytest.mark.parametrize("name", SAMPLE)
-def test_fingerprint_stable_across_builds(spark, name):
-    fn = queries()[name]
-    a = bench.plan_fingerprint(fn(spark, SF_SMOKE))
-    b = bench.plan_fingerprint(fn(spark, SF_SMOKE))
-    assert a == b, f"{name}: plan fingerprint unstable across builds"
+def test_time_entries_reports_second_drain_and_failures():
+    """Each entry is built and drained twice and the SECOND drain is
+    reported; an entry that raises reads -1.0 in both maps, even when
+    its cold run succeeded."""
+    builds: list[str] = []
+    # jit's cold drain pays, its warm drain does not
+    naps = {"jit": [0.3, 0.0], "flaky": [0.0]}
 
+    class Frame:  # the noop-drain surface of a DataFrame
+        def __init__(self, name):
+            self.name = name
+            self.write = self
 
-def test_fingerprint_detects_plan_change(spark):
-    """The gate must actually fire on a real plan change: the same
-    source with a different filter constant is a different plan."""
-    df1 = spark.range(100).filter("id > 1").groupBy().sum("id")
-    df2 = spark.range(100).filter("id > 2").groupBy().sum("id")
-    assert bench.plan_fingerprint(df1) != bench.plan_fingerprint(df2)
-    assert bench.plan_fingerprint(df1) == bench.plan_fingerprint(
-        spark.range(100).filter("id > 1").groupBy().sum("id")
+        def format(self, fmt):
+            assert fmt == "noop"
+            return self
+
+        def mode(self, _):
+            return self
+
+        def save(self):
+            time.sleep(naps[self.name].pop(0))
+
+    def entry(name, fail_on_build=None):
+        def build(spark, sf_dir):
+            builds.append(name)
+            if builds.count(name) == fail_on_build:
+                raise RuntimeError("boom")
+            return Frame(name)
+
+        return build
+
+    warm, cold = bench.time_entries(
+        None, "/nowhere",
+        {"jit": entry("jit"), "flaky": entry("flaky", fail_on_build=2)},
     )
+    assert builds == ["jit", "jit", "flaky", "flaky"]
+    assert cold["jit"] >= 0.3 > warm["jit"] >= 0
+    assert warm["flaky"] == cold["flaky"] == -1.0
 
 
-def test_band_normalizes_by_vm_speed_factor():
-    """The escalation gate (VERDICT r08 item 3): a uniformly throttled
-    VM window — every cold run k x its committed median — produces NO
-    false escalations once the calibration factor reads the same k,
-    while a genuine entry-specific regression still escalates."""
-    med = 1.0
-    # quiet window (factor 1): the historical band is unchanged
-    assert bench._band(1.5, med, 1.0)       # inside the 1.6x cap
-    assert not bench._band(1.7, med, 1.0)   # over the cap, over floor
-    # 2.5x-throttled window, factor correctly measured: the same
-    # plans' cold runs land at ~2.5x their medians and stay IN band
-    for cold in (2.0, 2.5, 3.5, 4.0):       # adj 0.8 .. 1.6
-        assert bench._band(cold, med, 2.5), cold
-    # an entry-specific 4x regression escalates even in that window
-    assert not bench._band(10.0, med, 2.5)  # adj 4.0
-    # fast window (factor < 1): merely MATCHING the old median on a
-    # 2x-faster VM is a 2x normalized regression — escalate and
-    # re-measure warm
-    assert not bench._band(1.0, med, 0.5)   # adj 2.0 > 1.6
-    assert bench._band(0.55, med, 0.5)      # adj 1.1 — in band
-
-
-def test_checkpointed_bm25_fingerprint_sees_upstream_changes(spark):
-    """localCheckpoint erases upstream lineage from the optimized plan
-    (the leaf prints as a bare LogicalRDD), which would let history
-    medians recorded for OLD tokenization gate NEW code (review find).
-    bm25_topk's pruned path embeds a hash of the pre-checkpoint plans
-    as a marker column NAME on the checkpointed frame: the fingerprint
-    must be stable across rebuilds and MUST change when the upstream
-    plan changes, even though the change is behind the checkpoint."""
-    from nba_spurs_etl_spark.operators.search import bm25_topk
-
-    docs = spark.createDataFrame(
-        [(i, "alpha beta gamma delta") for i in range(8)],
-        "doc_id long, text string",
-    )
-    q = spark.createDataFrame(
-        [(1, "alpha")], "query_id long, term string"
-    )
-
-    def fp(d):
-        return bench.plan_fingerprint(
-            bm25_topk(d, q, "doc_id", "text", k=2,
-                      max_postings_per_term=4)
-        )
-
-    a1, a2 = fp(docs), fp(docs)
-    assert a1 == a2, "fingerprint unstable across rebuilds"
-    # an upstream-only change (extra filter feeding the checkpointed
-    # token aggregation) must surface in the fingerprint
-    b = fp(docs.filter("doc_id >= 0"))
-    assert a1 != b, (
-        "fingerprint blind to upstream change behind localCheckpoint"
-    )
-    # and the marker must not leak into results
-    cols = bm25_topk(docs, q, "doc_id", "text", k=2,
-                     max_postings_per_term=4).columns
-    assert cols == ["query_id", "doc", "rank"]
-
-
-def test_vm_speed_factor_geomean_and_asymmetric_clamp():
-    """raw = geometric mean of per-probe ratios; the GATING factor
-    never drops below 1 (a 'fast VM' reading must not tighten the
-    band into hiding regressions) and caps at 4 (beyond that the ref
-    itself is broken, not the VM 10x off)."""
+def test_vm_speed_factor_geomean():
+    """Geometric mean of per-probe ratios to the reference, unclamped;
+    probes missing on either side drop out, none shared reads 1.0."""
     ref = {"scan_agg": 0.4, "shuffle_agg": 0.8, "cpu_hash": 0.3}
-    # uniformly 2x slow window
-    cur = {k: v * 2 for k, v in ref.items()}
-    raw, gate = bench._vm_speed_factor(cur, ref)
-    assert abs(raw - 2.0) < 1e-6 and gate == 2.0
-    # uniformly 2x FAST window: annotate 0.5, gate clamps to 1.0
-    cur = {k: v / 2 for k, v in ref.items()}
-    raw, gate = bench._vm_speed_factor(cur, ref)
-    assert abs(raw - 0.5) < 1e-6 and gate == 1.0
-    # absurd ratio caps at 4
-    cur = {k: v * 10 for k, v in ref.items()}
-    assert bench._vm_speed_factor(cur, ref)[1] == 4.0
-    # probes missing on either side drop out; none shared -> neutral
-    raw, gate = bench._vm_speed_factor({"scan_agg": 0.8}, ref)
-    assert abs(raw - 2.0) < 1e-6
-    assert bench._vm_speed_factor({}, ref) == (1.0, 1.0)
-    assert bench._vm_speed_factor({"new_probe": 1.0}, {}) == (1.0, 1.0)
-
-
-def test_band_absolute_floor_and_edges():
-    # the 0.3s absolute floor rescues sub-second jitter, applied to
-    # the speed-ADJUSTED value
-    assert bench._band(0.38, 0.1, 1.0)      # ratio 3.8x but |d| < 0.3
-    assert not bench._band(0.45, 0.1, 1.0)  # |d| = 0.35 and 4.5x: out
-    assert bench._band(0.76, 0.1, 2.0)      # adj 0.38 -> floor saves
-    assert bench._band(8.0, 2.1, 4.0)       # adj 2.0 < 2.1 * 1.6
-
-
-def test_rebase_ratio_rescales_history_units():
-    """ADVICE r09: when min-convergence improves calib_ref, committed
-    history rows (recorded as warm/factor against the OLD ref) must
-    shift into the new ref's units by exactly the geomean of the
-    per-probe ref ratios — otherwise one trailing-5 list mixes units
-    and the gate medians skew."""
-    old = {"scan_agg": 0.4, "shuffle_agg": 0.8, "cpu_hash": 0.3}
-    # uniformly 20% faster best-known window
-    new = {k: v * 0.8 for k, v in old.items()}
-    r = bench._rebase_ratio(old, new)
-    assert abs(r - 0.8) < 1e-9
-    # consistency with the factor: a window measured at `cur` reads
-    # factor_old against old and factor_new against new, and
-    # factor_new == factor_old / r (unclamped) — so multiplying rows
-    # by r is exactly the unit shift the factor normalization applies
-    cur = {k: v * 2 for k, v in old.items()}
-    raw_old, _ = bench._vm_speed_factor(cur, old)
-    raw_new, _ = bench._vm_speed_factor(cur, new)
-    assert abs(raw_new - raw_old / r) < 1e-6
-    # no-op cases: identical refs, no shared probes
-    assert bench._rebase_ratio(old, dict(old)) == 1.0
-    assert bench._rebase_ratio(old, {"other": 1.0}) == 1.0
-    assert bench._rebase_ratio({}, new) == 1.0
-    # non-uniform improvement: geomean, matching _vm_speed_factor's
-    # aggregation
-    new2 = dict(old)
-    new2["scan_agg"] = old["scan_agg"] / 2  # one probe halves
-    import math
-    assert abs(bench._rebase_ratio(old, new2)
-               - math.exp(math.log(0.5) / 3)) < 1e-9
-
-
-def test_calib_broken_threshold_matches_clamp():
-    """ADVICE r09: past the gating clamp the ref itself is suspect —
-    med*factor would report a value below anything measurable in the
-    throttled session. bench.main escalates everything and stops
-    history writes when factor_raw exceeds the clamp; pin that the
-    threshold is exactly the clamp constant and that the gating value
-    saturates there."""
-    ref = {"scan_agg": 0.4, "shuffle_agg": 0.8, "cpu_hash": 0.3}
-    at_clamp = {k: v * bench._CALIB_CLAMP_HI for k, v in ref.items()}
-    raw, gate = bench._vm_speed_factor(at_clamp, ref)
-    assert raw <= bench._CALIB_CLAMP_HI + 1e-6  # boundary: NOT broken
-    beyond = {k: v * (bench._CALIB_CLAMP_HI + 1) for k, v in ref.items()}
-    raw2, gate2 = bench._vm_speed_factor(beyond, ref)
-    assert raw2 > bench._CALIB_CLAMP_HI and gate2 == bench._CALIB_CLAMP_HI
-    # the in-main decision is `factor_raw > _CALIB_CLAMP_HI`; the
-    # source is pinned so a refactor can't silently drop the gate —
-    # or its RECOVERY path (r10 review: min-convergence can never
-    # raise the ref, so without the 3-streak re-seed a single
-    # spuriously-fast committed probe would leave calib_broken sticky
-    # forever)
-    import inspect
-    src = inspect.getsource(bench.main)
-    assert "calib_broken = factor_raw > _CALIB_CLAMP_HI" in src
-    assert "if not calib_broken:" in src
-    assert "calib_broken_streak" in src
-    assert "if streak >= 3 and tiering_enabled:" in src
-    # and the re-seed direction is the upward re-base (old ref ->
-    # current probes), the inverse shift of the improvement re-base
-    assert "_rebase_ratio(calib_ref, calib_start)" in src
+    assert bench._vm_speed_factor({k: v * 2 for k, v in ref.items()},
+                                  ref) == 2.0
+    assert bench._vm_speed_factor({k: v / 2 for k, v in ref.items()},
+                                  ref) == 0.5
+    # one probe 8x slow, two flat: geomean 8^(1/3) = 2
+    assert bench._vm_speed_factor(dict(ref, scan_agg=3.2), ref) == 2.0
+    assert bench._vm_speed_factor({"scan_agg": 0.8}, ref) == 2.0
+    assert bench._vm_speed_factor({}, ref) == 1.0
+    assert bench._vm_speed_factor({"new_probe": 1.0}, {}) == 1.0
 
 
 def test_bench_records_are_fresh_for_every_registered_entry():
@@ -238,11 +69,8 @@ def test_bench_records_are_fresh_for_every_registered_entry():
     the way COVERAGE.md does — BENCH_DETAIL.json is rewritten
     wholesale by every bench run, so a registered entry with no row
     means the bench has not run since the entry was added (stale bench
-    of record), and an entry with no bench_history median at the
-    detail's sf means the tiering gate has nothing to gate with
-    post-reseed (e.g. a calib-broken window suppressed writes). Both
-    fail loudly here instead of surfacing as an unexplained hole in
-    the round's BENCH_r{N}.json."""
+    of record). Fail loudly here instead of surfacing as an
+    unexplained hole in the round's BENCH_r{N}.json."""
     import json
     import os
 
@@ -260,10 +88,4 @@ def test_bench_records_are_fresh_for_every_registered_entry():
         "BENCH_DETAIL rows for entries no longer registered (stale "
         f"bench of record; run bench.py): {sorted(detail_q - qs)[:10]}"
     )
-    hist = json.load(open(os.path.join(root, "bench_history.json")))
-    warm = hist.get("warm", {}).get(str(detail["sf"]), {})
-    nohist = {q for q in qs if not warm.get(q)}
-    assert not nohist, (
-        "entries with no committed bench_history median at sf="
-        f"{detail['sf']} (reseed via bench.py): {sorted(nohist)[:10]}"
-    )
+    assert set(detail["cold_queries"]) == detail_q
