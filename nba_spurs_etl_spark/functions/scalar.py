@@ -136,6 +136,12 @@ def md5_long(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
+def md5_long_expr(x: str) -> str:
+    """``md5_long`` as Spark SQL text over the expression ``x``
+    (``md5_long_sql`` below is the DuckDB spelling)."""
+    return f"CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
+
+
 MD5_LONG_SQL = "CAST(('0x' || substr(md5({x}), 1, 15)) AS UBIGINT)::BIGINT"
 
 

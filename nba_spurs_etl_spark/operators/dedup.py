@@ -34,7 +34,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scalar import md5_long
+from ..functions.scalar import md5_long, md5_long_expr
 
 # ---------------------------------------------------------------------------
 # shingling
@@ -534,11 +534,14 @@ def minhash_signatures(
     the shuffle carries k longs per doc, not the shingles.
     """
     pairs = exploded_shingles(df, id_col, text_col, n, max_shingle_freq)
-    base = (md5_long(F.col("shingle")) % MH_PRIME).alias("base")
-    hashed = pairs.select("doc", base)
+    # SQL text, not Column chains (see the SQL-text note in
+    # operators/similarity.py)
+    hashed = pairs.selectExpr(
+        "doc", f"{md5_long_expr('shingle')} % {MH_PRIME} AS base"
+    )
     return hashed.groupBy("doc").agg(
         *[
-            F.min((F.lit(a) * F.col("base") + F.lit(b)) % MH_PRIME).alias(f"mh_{i}")
+            F.expr(f"min(({a} * base + {b}) % {MH_PRIME}) AS mh_{i}")
             for i, (a, b) in enumerate(mh_coeffs(num_hashes))
         ]
     )
@@ -574,16 +577,15 @@ def minhash_bands(
     sig = minhash_signatures(df, id_col, text_col, num_hashes, n, max_shingle_freq)
     band_structs = []
     for b in range(num_hashes // band_size):
-        cols = [f"mh_{b * band_size + j}" for j in range(band_size)]
-        key = md5_long(
-            F.concat_ws("_", F.lit(str(b)), *[F.col(c).cast("string") for c in cols])
+        cols = ", ".join(
+            f"CAST(mh_{b * band_size + j} AS STRING)" for j in range(band_size)
         )
-        band_structs.append(
-            F.struct(F.lit(b).alias("band"), key.alias("bkey"))
-        )
-    return sig.select(
-        "doc", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
+        key = md5_long_expr(f"concat_ws('_', '{b}', {cols})")
+        band_structs.append(f"struct({b} AS band, {key} AS bkey)")
+    # one SQL string (see the SQL-text note in operators/similarity.py)
+    return sig.selectExpr(
+        "doc", f"explode(array({', '.join(band_structs)})) AS bb"
+    ).selectExpr("doc", "bb.band AS band", "bb.bkey AS bkey")
 
 
 def minhash_lsh_pairs(
@@ -839,18 +841,16 @@ def simhash_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product in double — deterministic and
-    reproducible by DuckDB's list_reduce (same fold order)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _dot_sql(a: str, b: str) -> str:
+    """Sequential left-fold dot product in double over the array
+    expressions ``a`` and ``b`` — deterministic and reproducible by
+    DuckDB's list_reduce (same fold order). SQL text (see the SQL-text
+    note in operators/similarity.py)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (dot_x, dot_y) -> "
+        "CAST(dot_x AS DOUBLE) * CAST(dot_y AS DOUBLE)), "
+        "0.0D, (dot_acc, dot_t) -> dot_acc + dot_t)"
     )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
 def embedding_dup_pairs(
@@ -875,7 +875,7 @@ def embedding_dup_pairs(
     cols = [
         F.col(id_col).alias("doc"),
         v.alias("v"),
-        F.sqrt(_dot(v, v)).alias("nrm"),
+        F.expr(f"sqrt({_dot_sql(vec_col, vec_col)})").alias("nrm"),
     ]
     if lsh_planes is not None:
         cols.append(lsh_bucket(v, lsh_planes).alias("bucket"))
@@ -892,10 +892,9 @@ def embedding_dup_pairs(
         .select(
             F.col("a.doc").alias("doc_a"),
             F.col("b.doc").alias("doc_b"),
-            (
-                _dot(F.col("a.v"), F.col("b.v"))
-                / (F.col("a.nrm") * F.col("b.nrm"))
-            ).alias("cos_sim"),
+            F.expr(f"{_dot_sql('a.v', 'b.v')} / (a.nrm * b.nrm)").alias(
+                "cos_sim"
+            ),
         )
         .filter(F.col("cos_sim") >= threshold)
     )

@@ -18,8 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalar import md5_long
-from .dedup import _dot, spread_for_compute
+from ..functions.scalar import md5_long, md5_long_expr
+from .dedup import _dot_sql, spread_for_compute
 
 
 def lsh_bucket(vec: Column, planes: int = 8, offset: int = 0) -> Column:
@@ -91,7 +91,7 @@ def _sides(
         return df.select(
             F.col(id_col).alias(f"{role}_id"),
             v.alias(f"{role}v"),
-            F.sqrt(_dot(v, v)).alias(f"{role}n"),
+            F.expr(f"sqrt({_dot_sql(vec_col, vec_col)})").alias(f"{role}n"),
         ).filter(F.col(f"{role}n") > 0)
 
     # the candidate side carries the per-pair fold work; a single-split
@@ -99,6 +99,10 @@ def _sides(
     return prep(spread_for_compute(candidates, id_col), "cand"), prep(
         queries, "query"
     )
+
+
+#: cosine of a (query, candidate) row with both norms hoisted
+_PAIR_COS_SQL = f"{_dot_sql('queryv', 'candv')} / (queryn * candn) AS cos_sim"
 
 
 def _empty_topk(corpus: DataFrame, score_col: str = "cos_sim") -> DataFrame:
@@ -150,14 +154,7 @@ def brute_force_topk(
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (
-                _dot(F.col("queryv"), F.col("candv"))
-                / (F.col("queryn") * F.col("candn"))
-            ).alias("cos_sim"),
-        )
+        .selectExpr("query_id", "cand_id", _PAIR_COS_SQL)
     )
     return _rank_topk(scored, k)
 
@@ -255,9 +252,29 @@ def brute_force_topk_arrow(
     )
 
 
-def _cell_cos(c: Column, vec_c: str, nrm_c: str) -> Column:
-    """cosine(centroid struct c, row vector) with the row norm hoisted."""
-    return _dot(c["cv"], F.col(vec_c)) / (c["cn"] * F.col(nrm_c))
+def _cell_cos(c: str, vec_c: str, nrm_c: str) -> str:
+    """cosine(centroid struct c, row vector) with the row norm hoisted,
+    as SQL text (see the note below)."""
+    return f"{_dot_sql(f'{c}.cv', vec_c)} / ({c}.cn * {nrm_c})"
+
+
+# SQL-text builders. Every F.* call, Column operator and Python lambda
+# costs one or more Py4J round trips, so a Column-API fold over a few
+# hundred nodes costs hundreds of calls per plan build; the same
+# expression rendered as ONE string costs one call (F.expr / selectExpr
+# / a filter string). The string must parse to the expression the
+# Column chain built (the optimized plans compare equal), which takes
+# two rules:
+# - write double literals as ``0.0D`` (``_double_sql``), never ``0.0``:
+#   Spark SQL parses a bare ``0.0`` as DECIMAL, so folds would change type;
+# - give every lambda variable a builder-prefixed name (``pq_s``,
+#   ``dot_x``, ...) that no column and no enclosing lambda uses: a SQL
+#   lambda variable shadows both, where the Column API drew fresh names.
+# Structs are spelled ``struct(x AS name)``, as F.struct prints.
+# Builders that follow the idiom: _dot_sql, _cell_cos, _PAIR_COS_SQL,
+# _centroid_literal, _pq_codebook_literal, _pq_subvec, _pq_encode,
+# _pq_lut, _ADC_SQL, and minhash_signatures / minhash_bands in
+# operators/dedup.py.
 
 
 def _double_sql(x: float) -> str:
@@ -287,13 +304,13 @@ def _doubles_sql(payload) -> str:
     return _double_sql(payload)
 
 
-def _centroid_literal(cent_rows) -> Column:
-    """(cid, cv, cn) centroid structs inlined as ONE array literal —
-    index metadata shipped inside the plan, so corpus->cell assignment
-    stays a narrow map (shared by ivf_topk / ivf_pq_topk). Rendered as
-    a single parsed expression, not per-element F.lit Py4J calls
+def _centroid_literal(cent_rows) -> str:
+    """(cid, cv, cn) centroid structs inlined as ONE array literal, as
+    SQL text — index metadata shipped inside the plan, so corpus->cell
+    assignment stays a narrow map (shared by ivf_topk / ivf_pq_topk).
+    Rendered as one parsed expression, not per-element F.lit Py4J calls
     (see _doubles_sql)."""
-    return F.expr(
+    return (
         "array("
         + ",".join(
             "named_struct('cid', {cid}L, 'cv', {cv}, 'cn', {cn})".format(
@@ -307,38 +324,13 @@ def _centroid_literal(cent_rows) -> Column:
     )
 
 
-def _best_cell(cents: Column, vec_c: str, nrm_c: str) -> Column:
-    """Nearest-centroid id by cosine argmax fold, ties to smallest cid.
-
-    Each centroid is scored ONCE (transform), then the fold compares
-    precomputed (cos, cid) structs — the naive fold re-evaluates the
-    dot product in every comparison branch (3x the fold work and a
-    3x-wider codegen tree) for identical values.
-    """
-    init = F.struct(F.lit(-2.0).alias("cos"), F.lit(None).cast("long").alias("cid"))
-    cell_scores = F.transform(
-        cents,
-        lambda c: F.struct(
-            _cell_cos(c, vec_c, nrm_c).alias("cos"), c["cid"].alias("cid")
-        ),
-    )
-    return F.aggregate(
-        cell_scores,
-        init,
-        lambda acc, s: F.when(
-            (s["cos"] > acc["cos"])
-            | ((s["cos"] == acc["cos"]) & (s["cid"] < acc["cid"])),
-            s,
-        ).otherwise(acc),
-    )["cid"]
-
-
 def _assign_cells_arrow(
     df: DataFrame, vec_c: str, nrm_c: str, cent_rows, cell_col: str = "cell"
 ) -> DataFrame:
     """Corpus→nearest-cell assignment as one Arrow ``mapInPandas``
     batch product — the same narrow zero-shuffle map as the
-    ``_best_cell`` literal fold, ~20× faster per row (measured 1.8 s →
+    literal cosine-argmax fold it replaced (kept as the executable spec
+    in tests/test_operators.py), ~20× faster per row (measured 1.8 s →
     0.1 s over sf0.1; the interpreted HOF fold costs ~50 µs per
     64-dim centroid comparison, the numpy batch product ~µs per row
     including Arrow transfer — decisive at corpus scale).
@@ -346,7 +338,7 @@ def _assign_cells_arrow(
     Bit-identical to the JVM fold (the ``brute_force_topk_arrow``
     contract): the accumulation is vectorized ACROSS rows but
     SEQUENTIAL across dims — the exact left-to-right float64 add order
-    of ``_dot`` — and cosine denominators multiply in the fold's
+    of ``_dot_sql`` — and cosine denominators multiply in the fold's
     operand order, so every cosine matches bit-for-bit and the argmax
     cannot diverge. Tie-break parity: the fold keeps (max cos, then
     smallest cid); centroids here sort by cid ascending and
@@ -452,8 +444,7 @@ def _assign_cells_arrow(
 def _nonzero_norm(df: DataFrame, vec_col: str) -> DataFrame:
     """Exclude zero-norm vectors — no defined cosine direction; under
     ANSI mode the division aborts the job. Oracles mirror the predicate."""
-    v = F.col(vec_col)
-    return df.filter(_dot(v, v) > 0)
+    return df.filter(f"{_dot_sql(vec_col, vec_col)} > 0")
 
 
 def ivf_topk(
@@ -488,12 +479,10 @@ def ivf_topk(
     (~nprobe/n_cells of the corpus), joined cell-to-cell with the
     probe side broadcast.
     """
-    v = F.col(vec_col)
+    nrm = f"sqrt({_dot_sql(vec_col, vec_col)})"
     candidates = _nonzero_norm(candidates, vec_col)
-    corpus = spread_for_compute(candidates, id_col).select(
-        F.col(id_col).alias("cand_id"),
-        v.alias("candv"),
-        F.sqrt(_dot(v, v)).alias("candn"),
+    corpus = spread_for_compute(candidates, id_col).selectExpr(
+        f"{id_col} AS cand_id", f"{vec_col} AS candv", f"{nrm} AS candn"
     )
     cent_rows = (
         train_ivf_centroids(
@@ -508,25 +497,23 @@ def ivf_topk(
         return _empty_topk(corpus)
     cents = _centroid_literal(cent_rows)
     # corpus-side assignment: Arrow batch product (bit-identical to the
-    # _best_cell fold, ~20× faster per row — see _assign_cells_arrow);
-    # the literal-fold form stays on the tiny query-side probe ranking
+    # literal argmax fold, ~20× faster per row — see _assign_cells_arrow);
+    # the literal cells stay on the tiny query-side probe ranking
     # below, where |Q| × n_cells rows don't justify a Python stage
     assigned = _assign_cells_arrow(corpus, "candv", "candn", cent_rows)
 
-    q = _nonzero_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        v.alias("queryv"),
-        F.sqrt(_dot(v, v)).alias("queryn"),
+    q = _nonzero_norm(queries, vec_col).selectExpr(
+        f"{id_col} AS query_id", f"{vec_col} AS queryv", f"{nrm} AS queryn"
     )
     pw = Window.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("cell"))
     probes = (
-        q.select("*", F.explode(cents).alias("c"))
-        .select(
+        q.selectExpr("*", f"explode({cents}) AS c")
+        .selectExpr(
             "query_id",
             "queryv",
             "queryn",
-            F.col("c.cid").alias("cell"),
-            _cell_cos(F.col("c"), "queryv", "queryn").alias("ccos"),
+            "c.cid AS cell",
+            f"{_cell_cos('c', 'queryv', 'queryn')} AS ccos",
         )
         .withColumn("prn", F.row_number().over(pw))
         .filter(F.col("prn") <= nprobe)
@@ -535,14 +522,7 @@ def ivf_topk(
     scored = (
         assigned.join(F.broadcast(probes), "cell")
         .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (
-                _dot(F.col("queryv"), F.col("candv"))
-                / (F.col("queryn") * F.col("candn"))
-            ).alias("cos_sim"),
-        )
+        .selectExpr("query_id", "cand_id", _PAIR_COS_SQL)
     )
     # pair grain ("each cand_id at most once per query"), the family
     # contract shared with lsh_topk: duplicate input rows — candidate,
@@ -608,14 +588,7 @@ def lsh_topk(
         with_tables(c, "candv")
         .join(F.broadcast(with_tables(q, "queryv")), ["tbl", "bucket"])
         .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (
-                _dot(F.col("queryv"), F.col("candv"))
-                / (F.col("queryn") * F.col("candn"))
-            ).alias("cos_sim"),
-        )
+        .selectExpr("query_id", "cand_id", _PAIR_COS_SQL)
     )
     # unconditional (not just n_tables > 1): the pair grain is the
     # contract — "each cand_id at most once per query" — and duplicate
@@ -864,13 +837,12 @@ def mislabel_flags(
             if len(_SAMPLE_CACHE) >= _SAMPLE_CACHE_MAX:
                 _SAMPLE_CACHE.clear()
             _SAMPLE_CACHE[key] = cent_rows
-    v = F.col(vec_col)
     base = _nonzero_norm(df.filter(F.col(group_col).isNotNull()), vec_col)
-    corpus = spread_for_compute(base, id_col).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(group_col).alias("own_label"),
-        v.alias("v"),
-        F.sqrt(_dot(v, v)).alias("vn"),
+    corpus = spread_for_compute(base, id_col).selectExpr(
+        f"{id_col} AS vec_id",
+        f"{group_col} AS own_label",
+        f"{vec_col} AS v",
+        f"sqrt({_dot_sql(vec_col, vec_col)}) AS vn",
     )
     assigned = _assign_cells_arrow(corpus, "v", "vn", cent_rows, cell_col="best")
     # best_label carries the INPUT label type (cell ids are the labels
@@ -964,10 +936,9 @@ def _pq_sample_rows(
     (a prefix-closed ordering — the first n_cells of a max(n_cells,
     n_codes) collect ARE the n_cells sample, so composed indexes pay
     one collect, not one per quantizer)."""
-    v = F.col(vec_col)
-    cols = [F.col(id_col).alias("cid"), v.alias("cv")]
+    cols = [f"{id_col} AS cid", f"{vec_col} AS cv"]
     if with_norm:
-        cols.append(F.sqrt(_dot(v, v)).alias("cn"))
+        cols.append(f"sqrt({_dot_sql(vec_col, vec_col)}) AS cn")
     # NULL ids are excluded from the sample: they have no stable md5
     # sample position (Spark sorts NULLS FIRST, DuckDB LAST) and the
     # rendered literal / Arrow matrix build requires int ids —
@@ -975,29 +946,25 @@ def _pq_sample_rows(
     # ANN oracles' cents CTEs mirror the predicate.
     return (
         candidates.filter(F.col(id_col).isNotNull())
-        .select(*cols)
-        .orderBy(md5_long(F.col("cid").cast("string")), F.col("cid"))
+        .selectExpr(*cols)
+        .orderBy(F.expr(md5_long_expr("CAST(cid AS STRING)")), F.col("cid"))
         .limit(n)
         .collect()
     )
 
 
-def _pq_codebook_literal(code_rows, m: int, sub: int):
+def _pq_codebook_literal(code_rows, m: int, sub: int) -> str:
     """ONE nested literal [m][n_codes][sub] and data-driven HOF loops:
     unrolling m x n_codes separate fold expressions in Python blew
     past the whole-stage-codegen method limit and fell back to
     interpreted evaluation — measured 33s vs ~1s for identical math
-    at sf0.1. Rendered as one parsed expression (F.lit on the nested
-    list cost 2.1 s of Py4J round-trips per plan BUILD — see
-    _doubles_sql)."""
-    return F.expr(
-        _doubles_sql(
-            [
-                [[float(x) for x in r["cv"][s * sub:(s + 1) * sub]]
-                 for r in code_rows]
-                for s in range(m)
-            ]
-        )
+    at sf0.1. Rendered as SQL text (F.lit on the nested list cost 2.1 s
+    of Py4J round-trips per plan BUILD — see _doubles_sql)."""
+    return _doubles_sql(
+        [
+            [[float(x) for x in r["cv"][s * sub:(s + 1) * sub]] for r in code_rows]
+            for s in range(m)
+        ]
     )
 
 
@@ -1111,76 +1078,57 @@ def train_ivf_centroids(
     ]
 
 
-def _pq_subvec(vec, s, sub: int):
-    # element_at arithmetic instead of slice(): start offsets are
-    # lambda-variable Columns, which slice() does not accept
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(sub)),
-        lambda i: F.element_at(vec, (s * sub + i).cast("int")).cast(
-            "double"
-        ),
+def _pq_subvec(vec: str, s: str, sub: int) -> str:
+    # element_at arithmetic over the lambda variable ``s``, 1-based
+    return (
+        f"transform(sequence(1, {sub}), pq_i -> "
+        f"CAST(element_at({vec}, CAST({s} * {sub} + pq_i AS INT)) AS DOUBLE))"
     )
 
 
-def _pq_encode(vec, cb_lit, m: int, n_codes: int, sub: int):
-    """argmin-L2 fold per subspace over the literal codebook — the
-    narrow map that compresses a vector to m small codes; ties break
-    to the smallest code index."""
-    init = F.struct(
-        F.lit(float("inf")).alias("d2"), F.lit(-1).alias("j")
+def _pq_codeword(cb: str) -> str:
+    # codeword pq_j of subspace pq_s (both 0-based lambda variables)
+    return f"element_at(element_at({cb}, CAST(pq_s + 1 AS INT)), CAST(pq_j + 1 AS INT))"
+
+
+def _pq_encode(vec: str, cb: str, m: int, n_codes: int, sub: int) -> str:
+    """argmin-L2 fold per subspace over the literal codebook ``cb`` —
+    the narrow map that compresses a vector to m small codes; ties
+    break to the smallest code index. SQL text (see the note above
+    _double_sql)."""
+    d2 = (
+        f"aggregate(zip_with({_pq_subvec(vec, 'pq_s', sub)}, {_pq_codeword(cb)}, "
+        "(pq_x, pq_c) -> (pq_x - pq_c) * (pq_x - pq_c)), "
+        "0.0D, (pq_a, pq_t) -> pq_a + pq_t)"
     )
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.aggregate(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_codes - 1)),
-                lambda j: F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            _pq_subvec(vec, s, sub),
-                            F.element_at(
-                                F.element_at(cb_lit, (s + 1).cast("int")),
-                                (j + 1).cast("int"),
-                            ),
-                            lambda x, c: (x - c) * (x - c),
-                        ),
-                        F.lit(0.0),
-                        lambda a, t: a + t,
-                    ).alias("d2"),
-                    j.cast("int").alias("j"),
-                ),
-            ),
-            init,
-            lambda acc, sc: F.when(
-                (sc["d2"] < acc["d2"])
-                | ((sc["d2"] == acc["d2"]) & (sc["j"] < acc["j"])),
-                sc,
-            ).otherwise(acc),
-        )["j"],
+    return (
+        f"transform(sequence(0, {m - 1}), pq_s -> aggregate("
+        f"transform(sequence(0, {n_codes - 1}), pq_j -> "
+        f"struct({d2} AS d2, CAST(pq_j AS INT) AS j)), "
+        f"struct({_double_sql(float('inf'))} AS d2, -1 AS j), "
+        "(pq_acc, pq_sc) -> CASE WHEN pq_sc.d2 < pq_acc.d2 OR "
+        "(pq_sc.d2 = pq_acc.d2 AND pq_sc.j < pq_acc.j) "
+        "THEN pq_sc ELSE pq_acc END).j)"
     )
 
 
-def _pq_lut(vec, cb_lit, m: int, n_codes: int, sub: int):
+def _pq_lut(vec: str, cb: str, m: int, n_codes: int, sub: int) -> str:
     """Per-query ADC lookup table: m x n_codes subspace dot products
-    from the same codebook literals, computed row-locally."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.transform(
-            F.sequence(F.lit(0), F.lit(n_codes - 1)),
-            lambda j: F.aggregate(
-                F.zip_with(
-                    _pq_subvec(vec, s, sub),
-                    F.element_at(
-                        F.element_at(cb_lit, (s + 1).cast("int")),
-                        (j + 1).cast("int"),
-                    ),
-                    lambda x, c: x * c,
-                ),
-                F.lit(0.0),
-                lambda a, t: a + t,
-            ),
-        ),
+    from the same codebook literal, computed row-locally. SQL text."""
+    return (
+        f"transform(sequence(0, {m - 1}), pq_s -> "
+        f"transform(sequence(0, {n_codes - 1}), pq_j -> "
+        f"aggregate(zip_with({_pq_subvec(vec, 'pq_s', sub)}, {_pq_codeword(cb)}, "
+        "(pq_x, pq_c) -> pq_x * pq_c), 0.0D, (pq_a, pq_t) -> pq_a + pq_t)))"
     )
+
+
+#: ADC score of a (code, lut) row: m table lookups summed left to right
+_ADC_SQL = (
+    "aggregate(zip_with(code, lut, (adc_c, adc_row) -> "
+    "element_at(adc_row, adc_c + 1)), 0.0D, (adc_a, adc_t) -> adc_a + adc_t) "
+    "AS adc_score"
+)
 
 
 def pq_topk(
@@ -1217,7 +1165,6 @@ def pq_topk(
     sequential left-folds in double, so adc_score is bit-reproducible
     by the oracle.
     """
-    v = F.col(vec_col)
     # NULL / zero-norm vectors cannot be encoded: a NULL vec leaves the
     # argmin fold at its -1 sentinel and the ADC lookup indexes 0
     # (INVALID_INDEX_OF_ZERO — differential-fuzzer find). Same
@@ -1236,7 +1183,7 @@ def pq_topk(
                 score_col="adc_score",
             )
         n_codes, sub = len(books[0]), len(books[0][0])
-        cb_lit = F.expr(_doubles_sql(books))
+        cb = _doubles_sql(books)
     else:
         code_rows = sorted(
             _pq_sample_rows(candidates, id_col, vec_col, n_codes),
@@ -1251,33 +1198,21 @@ def pq_topk(
         if d % m != 0:
             raise ValueError(f"dim {d} not divisible by m={m} subspaces")
         sub = d // m
-        cb_lit = _pq_codebook_literal(code_rows, m, sub)
+        cb = _pq_codebook_literal(code_rows, m, sub)
 
-    cands = spread_for_compute(candidates, id_col).select(
-        F.col(id_col).alias("cand_id"),
-        _pq_encode(v, cb_lit, m, n_codes, sub).alias("code"),
+    cands = spread_for_compute(candidates, id_col).selectExpr(
+        f"{id_col} AS cand_id",
+        f"{_pq_encode(vec_col, cb, m, n_codes, sub)} AS code",
     )
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _pq_lut(v, cb_lit, m, n_codes, sub).alias("lut"),
+    q = queries.selectExpr(
+        f"{id_col} AS query_id",
+        f"{_pq_lut(vec_col, cb, m, n_codes, sub)} AS lut",
     )
     scored = (
         cands.crossJoin(F.broadcast(q))
         .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.aggregate(
-                F.zip_with(
-                    F.col("code"),
-                    F.col("lut"),
-                    lambda c, row: F.element_at(row, c + 1),
-                ),
-                F.lit(0.0),
-                lambda a, t: a + t,
-            ).alias("adc_score"),
-        )
+        .selectExpr("query_id", "cand_id", _ADC_SQL)
     )
     # pair grain ("each cand_id at most once per query"), the family
     # contract shared with lsh_topk: duplicate input rows — candidate,
@@ -1317,7 +1252,6 @@ def ivf_pq_topk(
     codebooks — an index build with zero corpus shuffle. The only
     exchange is the broadcast probe join keyed by cell.
     """
-    v = F.col(vec_col)
     # cosine cell assignment is undefined for zero-norm vectors (and
     # aborts under ANSI): both sides — including the shared codebook
     # sample — draw from the norm-filtered corpus, like ivf_topk.
@@ -1354,7 +1288,7 @@ def ivf_pq_topk(
         cell_rows = cent_rows
         cents = _centroid_literal(cell_rows)
         n_codes, sub = len(books[0]), len(books[0][0])
-        cb_lit = F.expr(_doubles_sql(books))
+        cb = _doubles_sql(books)
     else:
         # ---- IVF coarse quantizer (cosine argmax, ivf_topk convention)
         cell_rows = sample_rows[:n_cells]
@@ -1366,65 +1300,45 @@ def ivf_pq_topk(
         if d % m != 0:
             raise ValueError(f"dim {d} not divisible by m={m} subspaces")
         sub = d // m
-        cb_lit = _pq_codebook_literal(code_rows, m, sub)
+        cb = _pq_codebook_literal(code_rows, m, sub)
 
     # coarse assignment via the Arrow batch product (bit-identical to
-    # the _best_cell fold — see _assign_cells_arrow), then the PQ
+    # the literal fold — see _assign_cells_arrow), then the PQ
     # encode fold JVM-side: two chained narrow maps, zero shuffle
+    vecs = [
+        f"{vec_col} AS v", f"sqrt({_dot_sql(vec_col, vec_col)}) AS nrm"
+    ]
     assigned = _assign_cells_arrow(
-        spread_for_compute(candidates, id_col).select(
-            F.col(id_col).alias("cand_id"),
-            v.alias("v"),
-            F.sqrt(_dot(v, v)).alias("nrm"),
+        spread_for_compute(candidates, id_col).selectExpr(
+            f"{id_col} AS cand_id", *vecs
         ),
         "v",
         "nrm",
         cell_rows,
-    ).select(
-        "cand_id",
-        "cell",
-        _pq_encode(F.col("v"), cb_lit, m, n_codes, sub).alias("code"),
+    ).selectExpr(
+        "cand_id", "cell", f"{_pq_encode('v', cb, m, n_codes, sub)} AS code"
     )
 
-    q = _nonzero_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        v.alias("v"),
-        F.sqrt(_dot(v, v)).alias("nrm"),
-    )
+    q = _nonzero_norm(queries, vec_col).selectExpr(f"{id_col} AS query_id", *vecs)
     pw = Window.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("cell"))
     probes = (
-        q.select("query_id", "v", F.explode(cents).alias("c"),
-                 F.col("nrm"))
-        .select(
+        q.selectExpr("query_id", "v", f"explode({cents}) AS c", "nrm")
+        .selectExpr(
             "query_id",
             "v",
-            F.col("c.cid").alias("cell"),
-            _cell_cos(F.col("c"), "v", "nrm").alias("ccos"),
+            "c.cid AS cell",
+            f"{_cell_cos('c', 'v', 'nrm')} AS ccos",
         )
         .withColumn("prn", F.row_number().over(pw))
         .filter(F.col("prn") <= nprobe)
-        .select(
-            "query_id",
-            "cell",
-            _pq_lut(F.col("v"), cb_lit, m, n_codes, sub).alias("lut"),
+        .selectExpr(
+            "query_id", "cell", f"{_pq_lut('v', cb, m, n_codes, sub)} AS lut"
         )
     )
     scored = (
         assigned.join(F.broadcast(probes), "cell")
         .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.aggregate(
-                F.zip_with(
-                    F.col("code"),
-                    F.col("lut"),
-                    lambda c, row: F.element_at(row, c + 1),
-                ),
-                F.lit(0.0),
-                lambda a, t: a + t,
-            ).alias("adc_score"),
-        )
+        .selectExpr("query_id", "cand_id", _ADC_SQL)
     )
     # pair grain ("each cand_id at most once per query"), the family
     # contract shared with lsh_topk: duplicate input rows — candidate,

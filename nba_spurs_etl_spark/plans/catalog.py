@@ -132,42 +132,46 @@ ENTRY_QUERY = "summary_rank"
 # Round-12 rotation queue: split_assign, stratified_sample,
 # key_skew_profile, then the r07 greens, plus any entry whose plan
 # changes in r12.
+# ROTATED for the SQL-text kernels: slots 1-26 are every entry built
+# through a rewritten builder (minhash, _dot_sql, _nonzero_norm, PQ/IVF);
+# the 16 longest-standing r11 entries dropped out rejoin the queue.
 set_priority([
-    # ---- plans changed in r11 (re-prove under the new plans) ----
-    "search_bm25_topk",
-    "search_hybrid_rrf_topk",
-    "search_rrf_fuse_3",
-    "search_qld_topk",
-    "lineitem_median_twophase",
-    "orders_equidepth_price_histogram",
-    "orders_abc_classification",
-    "orders_ks_statistic",
-    "dedup_components_star",
+    # ---- built through a rewritten SQL-text builder ----
+    "dedup_minhash_lsh",
+    "dedup_incremental_batch",
+    "dedup_lsh_eval",
     "dedup_minhash_components",
+    "dedup_components_star",
     "dedup_keep_best_per_cluster",
+    "dedup_filtered_corpus",
+    "dedup_embedding_cosine",
+    "corpus_decontaminate_neardup",
     "corpus_split_leakage_safe",
     "semantic_dedup_corpus",
-    "customer_entity_resolution",
-    "dedup_filtered_corpus",
+    "graph_label_propagation",
+    "graph_pagerank_dups",
+    "graph_triangles_dups",
+    "stream_dedup_lsh_index",
+    "similarity_topk_ivf_pq",
+    "similarity_topk_pq",
+    "similarity_topk_ivf",
+    "similarity_topk_bruteforce",
+    "similarity_topk_arrow",
+    "similarity_topk_lsh",
+    "similarity_topk_lsh_multi",
+    "similarity_recall_eval",
+    "embedding_mislabel_flags",
+    "search_hybrid_rrf_topk",
+    "search_rrf_fuse_3",
+    # ---- kept from the r11 prefix ----
+    "search_bm25_topk",
     "embedding_kmeans_lloyd",
     "text_bpe_merges",
-    # ---- last green r06 (stalest oracled evidence, 33 of 36) ----
     "contrastive_negatives",
     "corpus_pack_bins",
     "corpus_quality_floor",
     "corpus_shard_plan",
     "corpus_source_quota",
-    "events_drift_chi2",
-    "events_ohlc_hourly",
-    "events_rfm_segments",
-    "events_sliding_agg",
-    "events_twap",
-    "events_user_profile_batch",
-    "events_value_mad",
-    "filter_in_like",
-    "graph_triangles_dups",
-    "join_dim_broadcast",
-    "priority_class_split",
     "q10_returned_items",
     "q14_promo_share",
     "q16_supplier_breadth",
@@ -175,7 +179,6 @@ set_priority([
     "q4_late_shipments",
     "q5_local_supplier_volume",
     "scalar_snapshot",
-    "similarity_topk_lsh_multi",
     "stream_dedup_within_watermark",
     "stream_sliding_agg",
     "stream_static_enrich",

@@ -43,6 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.merge import latest_by_key, merge_cdc
+from ..sources.catalog import read_parquet
 
 
 class VersionStore:
@@ -78,7 +79,7 @@ class VersionStore:
         vs = self.versions()
         if not vs:
             raise FileNotFoundError(f"no committed snapshot under {self.root}")
-        return self.spark.read.parquet(self.vdir(vs[-1]))
+        return read_parquet(self.spark, self.vdir(vs[-1]))
 
     def read_at_or_before(self, v: int) -> DataFrame:
         """Highest committed version <= v — the retry-safe input read
@@ -89,7 +90,7 @@ class VersionStore:
                 f"no committed version <= v{v} under {self.root}; "
                 "seed the store (init/seed) before attaching the stream"
             )
-        return self.spark.read.parquet(self.vdir(vs[-1]))
+        return read_parquet(self.spark, self.vdir(vs[-1]))
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
         """Drop all but the newest ``keep_last`` committed versions.

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import incremental_pairs_from_bands, minhash_bands
+from ..sources.catalog import read_parquet
 
 
 class StreamingLshDedup:
@@ -130,8 +131,8 @@ class StreamingLshDedup:
 def read_documents_stream(
     spark: SparkSession, sf_dir: str, files_per_trigger: int = 1
 ) -> DataFrame:
-    """Streaming read of <sf_dir>/documents.parquet (schema from a batch
-    footer read — streams cannot infer).
+    """Streaming read of <sf_dir>/documents.parquet (schema from the
+    footer, ``sources.catalog.read_parquet`` — streams cannot infer).
 
     Layout-aware (round 5): a single FILE named documents.parquet
     streams via a leaf pathGlobFilter on sf_dir (the pristine driver
@@ -153,7 +154,7 @@ def read_documents_stream(
     """
     fpt = str(int(files_per_trigger))
     path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     if os.path.isdir(path):
         reader = (
             spark.readStream.schema(schema)

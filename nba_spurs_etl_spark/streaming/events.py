@@ -29,7 +29,6 @@ import os
 import shutil
 import stat
 import tempfile
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,13 +36,6 @@ from pyspark.sql import functions as F
 _name_counter = itertools.count()
 
 _ckpt_root: str | None = None
-
-#: session -> {sf_dir: raw events schema} (footer read, once). Weakly
-#: keyed by the session object — id(spark) can be reused after GC and
-#: would serve a stale schema to an unrelated new session.
-_SCHEMA_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, object]]" = (
-    weakref.WeakKeyDictionary()
-)
 
 
 _CKPT_PREFIX = "spark_graft_drain_ckpt_"
@@ -104,10 +96,11 @@ def _drain_checkpoint_dir(name: str) -> str:
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming read of <sf_dir>/events.parquet.
 
-    Streams cannot infer schemas, so the raw schema comes from a batch
-    footer read; the same normalization as the batch loader
-    (sources.catalog._load_events) then yields a session-tz TimestampType
-    ``ts`` whichever physical form the file carries:
+    Streams cannot infer schemas, so the raw schema comes from the
+    footer (``sources.catalog.read_parquet``, no Spark job); the same
+    normalization as the batch loader (sources.catalog._load_events)
+    then yields a session-tz TimestampType ``ts`` whichever physical
+    form the file carries:
 
     - TIMESTAMP(NANOS) + nanosAsLong -> bigint ns -> integer-div to us
       (ns magnitudes ~1.7e18 overflow double, so never float math);
@@ -115,9 +108,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
       type-tag change, required because watermark arithmetic and the
       downstream unix_micros comparisons reject NTZ).
     """
-    from ..sources.catalog import _events_ts_is_nanos
+    from ..sources.catalog import _events_ts_is_nanos, read_footer, read_parquet
 
-    if _events_ts_is_nanos(os.path.join(sf_dir, "events.parquet")):
+    ev_path = os.path.join(sf_dir, "events.parquet")
+    footer = read_footer(ev_path)
+    if _events_ts_is_nanos(footer):
         # only for the round-1 nanos layout — the conf is session-wide
         # and the lazy stream plan needs it in effect at execution, so
         # it cannot be restored; the footer sniff keeps µs-layout
@@ -126,16 +121,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NTZ->timestamp cast below is value-preserving only under UTC; the
     # driver's session carries no conf pins, so set it here.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # footer-read once per (session, path): 13 stream queries re-deriving
-    # the same schema cost a batch listing + footer read each (~0.2-0.3s
-    # per query on the bench suite)
-    per_session = _SCHEMA_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
-        per_session[sf_dir] = spark.read.parquet(
-            os.path.join(sf_dir, "events.parquet")
-        ).schema
-    raw_schema = per_session[sf_dir]
-    ev_path = os.path.join(sf_dir, "events.parquet")
+    raw_schema = read_parquet(spark, ev_path, footer).schema
     if os.path.isdir(ev_path):
         # part-file directory (repacked/replica layout, round 5):
         # stream from inside it — the leaf glob on sf_dir would match

@@ -64,6 +64,21 @@ def test_vm_speed_factor_geomean():
     assert bench._vm_speed_factor({"new_probe": 1.0}, {}) == 1.0
 
 
+def test_vm_speed_factor_takes_probe_minimum_of_both_windows():
+    """The factor reads the per-probe minimum of the suite-start and
+    suite-end windows: a start window slowed by JVM warm-up must not
+    inflate it, and a probe measured in one window only still counts."""
+    ref = {"scan_agg": 0.4, "shuffle_agg": 0.8, "cpu_hash": 0.3}
+    start = {"scan_agg": 0.8, "shuffle_agg": 1.6, "cpu_hash": 0.3}
+    end = {"scan_agg": 0.4, "shuffle_agg": 0.8, "cpu_hash": 0.6}
+    assert bench._probe_min(start, end) == ref
+    assert bench._vm_speed_factor(bench._probe_min(start, end), ref) == 1.0
+    assert bench._probe_min({"scan_agg": 0.5}, {"cpu_hash": 0.2}) == {
+        "scan_agg": 0.5, "cpu_hash": 0.2,
+    }
+    assert bench._probe_min({}, {}) == {}
+
+
 def test_bench_records_are_fresh_for_every_registered_entry():
     """VERDICT r09 item 6: the bench of record must track the registry
     the way COVERAGE.md does — BENCH_DETAIL.json is rewritten

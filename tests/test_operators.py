@@ -826,6 +826,23 @@ def test_topk_arrow_empty_query_set_returns_empty(spark):
     assert out.count() == 0
 
 
+def _best_cell(cents: str, vec_c: str, nrm_c: str) -> str:
+    """Nearest-centroid id by cosine argmax fold over the literal
+    centroid array, ties to smallest cid (SQL text): the executable
+    spec of similarity._assign_cells_arrow. Each centroid is scored
+    once, then the fold compares precomputed (cos, cid) structs."""
+    from nba_spurs_etl_spark.operators import similarity as S
+
+    return (
+        f"aggregate(transform({cents}, bc_c -> struct("
+        f"{S._cell_cos('bc_c', vec_c, nrm_c)} AS cos, bc_c.cid AS cid)), "
+        "struct(-2.0D AS cos, CAST(NULL AS BIGINT) AS cid), "
+        "(bc_acc, bc_s) -> CASE WHEN bc_s.cos > bc_acc.cos OR "
+        "(bc_s.cos = bc_acc.cos AND bc_s.cid < bc_acc.cid) "
+        "THEN bc_s ELSE bc_acc END).cid"
+    )
+
+
 def test_assign_cells_arrow_matches_best_cell_fold(spark):
     """_assign_cells_arrow (r08: the Arrow batch-product coarse
     quantizer behind ivf_topk / ivf_pq_topk) must agree with the
@@ -857,7 +874,7 @@ def test_assign_cells_arrow_matches_best_cell_fold(spark):
         .select(
             F.col("vec_id").alias("cand_id"),
             F.col("embedding").alias("candv"),
-            F.sqrt(S._dot(F.col("embedding"), F.col("embedding"))).alias(
+            F.expr(f"sqrt({S._dot_sql('embedding', 'embedding')})").alias(
                 "candn"
             ),
         )
@@ -866,7 +883,7 @@ def test_assign_cells_arrow_matches_best_cell_fold(spark):
     fold = {
         r["cand_id"]: r["cell"]
         for r in corpus.withColumn(
-            "cell", S._best_cell(cents, "candv", "candn")
+            "cell", F.expr(_best_cell(cents, "candv", "candn"))
         ).collect()
     }
     arrow = {
@@ -3299,37 +3316,20 @@ def test_canon_plan_str_stable_across_lambda_builds(spark):
     assert canon_plan_str(a) == canon_plan_str(b)
 
 
-def _jobs_of_build_and_drain(spark, name):
-    """Spark jobs one build + noop drain of a catalog entry launches."""
-    from nba_spurs_etl_spark.plans.catalog import queries
-
-    from .conftest import SF_SMOKE
-
-    sc = spark.sparkContext
-    group = f"test-jobs-{name}-{id(sc)}"
-    prev = sc.getLocalProperty("spark.jobGroup.id")
-    sc.setJobGroup(group, name)
-    try:
-        queries()[name](spark, SF_SMOKE).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", prev)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_mislabel_label_centroids_cached_across_builds(spark):
     """The label-centroid cache earns its keep: a second build of
     embedding_mislabel_flags reuses the collected centroids and
     launches fewer jobs than a build with the cache cleared."""
     from nba_spurs_etl_spark.operators import similarity as S
 
+    from .conftest import jobs_of_build_and_drain
+
     S._SAMPLE_CACHE.clear()
-    _jobs_of_build_and_drain(spark, "embedding_mislabel_flags")
+    jobs_of_build_and_drain(spark, "embedding_mislabel_flags")
     assert len(S._SAMPLE_CACHE) == 1
-    warm = _jobs_of_build_and_drain(spark, "embedding_mislabel_flags")
+    warm = jobs_of_build_and_drain(spark, "embedding_mislabel_flags")
     S._SAMPLE_CACHE.clear()
-    cleared = _jobs_of_build_and_drain(spark, "embedding_mislabel_flags")
+    cleared = jobs_of_build_and_drain(spark, "embedding_mislabel_flags")
     assert warm < cleared
 
 

@@ -637,10 +637,13 @@ def test_load_events_nanos_layout_sniffed_and_truncated(spark, tmp_path):
     from nba_spurs_etl_spark.sources.catalog import (
         _events_ts_is_nanos,
         _load_events,
+        read_footer,
     )
 
     # µs layout (current testdata): no sniff hit, conf untouched
-    assert not _events_ts_is_nanos("/root/testdata/sf0.001/events.parquet")
+    assert not _events_ts_is_nanos(
+        read_footer("/root/testdata/sf0.001/events.parquet")
+    )
 
     ts = pd.to_datetime(
         ["2024-01-01 00:00:00.123456789", "2024-01-02 00:00:00.000000001"],
@@ -653,7 +656,7 @@ def test_load_events_nanos_layout_sniffed_and_truncated(spark, tmp_path):
         version="2.6",
         coerce_timestamps=None,
     )
-    assert _events_ts_is_nanos(path)
+    assert _events_ts_is_nanos(read_footer(path))
     got = sorted(
         (r["event_id"], str(r["ts"])) for r in _load_events(spark, path).collect()
     )
@@ -661,3 +664,77 @@ def test_load_events_nanos_layout_sniffed_and_truncated(spark, tmp_path):
         (1, "2024-01-01 00:00:00.123456"),  # ns truncated to µs
         (2, "2024-01-02 00:00:00"),
     ]
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_load_table_footer_schema_equals_inferred_without_jobs(spark, sf):
+    """load_table reads every table with the schema of its footer: equal
+    to what spark.read.parquet infers (nullability and metadata
+    included, so .json() too), on the pristine single files and on the
+    repacked part-file dirs, and building the read launches 0 jobs."""
+    import os
+
+    from nba_spurs_etl_spark.sources.catalog import TESTDATA_TABLES, load_table
+    from nba_spurs_etl_spark.sources.repack import ensure_repacked
+
+    from .conftest import jobs_during
+
+    src = f"/root/testdata/{sf}"
+    for d in (src, ensure_repacked(src, 8, min_rows=1000)):
+        for t in TESTDATA_TABLES:
+            df, jobs = jobs_during(spark, lambda: load_table(spark, d, t))
+            assert jobs == 0, (d, t)
+            inferred = spark.read.parquet(os.path.join(d, f"{t}.parquet")).schema
+            assert df.schema == inferred, (d, t)
+            assert df.schema.json() == inferred.json(), (d, t)
+
+
+def test_read_parquet_falls_back_where_inference_may_differ(spark, tmp_path):
+    """Unmapped footer types (decimal, nanosecond timestamps) and
+    non-default inference confs read inferred; a Spark-written dir
+    reads the schema its footer stores, with no job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nba_spurs_etl_spark.sources.catalog import (
+        footer_schema,
+        read_footer,
+        read_parquet,
+    )
+
+    from .conftest import jobs_during
+
+    dec = str(tmp_path / "dec.parquet")
+    pq.write_table(
+        pa.table({"d": pa.array([1, 2]).cast(pa.decimal128(25, 2))}), dec
+    )
+    assert footer_schema(spark, read_footer(dec)) is None
+    assert read_parquet(spark, dec).schema == spark.read.parquet(dec).schema
+
+    ns = str(tmp_path / "ns.parquet")
+    pq.write_table(
+        pa.table({"ts": pa.array([1, 2], pa.timestamp("ns"))}),
+        ns, version="2.6", coerce_timestamps=None,
+    )
+    assert footer_schema(spark, read_footer(ns)) is None
+
+    plain = str(tmp_path / "plain.parquet")
+    pq.write_table(pa.table({"b": [b"x"], "i": pa.array([1], pa.int8())}), plain)
+    assert footer_schema(spark, read_footer(plain)) is not None
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        assert footer_schema(spark, read_footer(plain)) is None
+        assert dict(read_parquet(spark, plain).dtypes)["b"] == "string"
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+
+    written = str(tmp_path / "written")
+    spark.sql(
+        "SELECT CAST(id AS INT) AS a, array(CAST(id AS FLOAT)) AS v, "
+        "named_struct('x', id) AS s, CAST(id AS DECIMAL(10, 2)) AS d "
+        "FROM range(3)"
+    ).write.parquet(written)
+    df, jobs = jobs_during(spark, lambda: read_parquet(spark, written))
+    assert jobs == 0
+    assert df.schema.json() == spark.read.parquet(written).schema.json()
+    assert read_footer(str(tmp_path / "missing")) is None

@@ -923,3 +923,26 @@ def test_stream_scratch_sweeps_default_tmp(monkeypatch, tmp_path):
         assert not os.path.exists(stale)
     finally:
         shutil.rmtree(stale, ignore_errors=True)
+
+
+#: Spark jobs one build + noop drain launches at SF_SMOKE, for the
+#: entries of perfbench's ``query`` workload. Plan building reads table
+#: schemas from Parquet footers, so build launches no job except the
+#: ANN codebook sample collect and dedup's batch checkpoint. A change
+#: that adds a job fails here; one that removes a job lowers its pin.
+QUERY_JOB_BUDGET = {
+    "search_bm25_topk": 12,
+    "text_repetition": 1,
+    "dedup_incremental_batch": 7,
+    "similarity_topk_ivf_pq": 7,
+    "pricing_summary": 2,
+    "q5_local_supplier_volume": 7,
+    "q18_large_orders": 4,
+}
+
+
+@pytest.mark.parametrize("name", sorted(QUERY_JOB_BUDGET))
+def test_query_entry_job_budget(spark, name):
+    from .conftest import jobs_of_build_and_drain
+
+    assert jobs_of_build_and_drain(spark, name) == QUERY_JOB_BUDGET[name]
