@@ -109,11 +109,9 @@ def _empty_topk(corpus: DataFrame, score_col: str = "cos_sim") -> DataFrame:
     """The empty top-k relation in the family's contract schema.
 
     Used when the codebook/centroid sample collects ZERO rows (empty
-    or all-NULL/zero-norm corpus — edge-fuzz find, r06): building the
-    centroid literal from an empty list types as array<void>, which
-    the lambda scorers cannot field-extract. The sample is empty
-    exactly when the prepared corpus is, so deriving the frame from
-    ``corpus`` keeps the id column's NATIVE type.
+    or all-NULL/zero-norm corpus — edge-fuzz find, r06). The sample is
+    empty exactly when the prepared corpus is, so deriving the frame
+    from ``corpus`` keeps the id column's NATIVE type.
     """
     return corpus.select(
         F.col("cand_id").alias("query_id"),
@@ -133,6 +131,20 @@ def _rank_topk(scored: DataFrame, k: int, score_col: str = "cos_sim") -> DataFra
         .select(
             "query_id", "cand_id", score_col, F.col("rnk").cast("int").alias("rnk")
         )
+    )
+
+
+def _pair_topk(scored: DataFrame, k: int, score_col: str = "cos_sim") -> DataFrame:
+    """``_rank_topk`` at pair grain, the approximate scorers' contract:
+    each cand_id at most once per query. Duplicate input rows —
+    candidate, query, or sampled-centroid duplicates doubling a probed
+    cell — would otherwise occupy several top-k slots, and the oracles'
+    row-collapsing argmin assignments would disagree on the grain
+    (differential-fuzzer find); scalar rows, map-combined."""
+    return _rank_topk(
+        scored.groupBy("query_id", "cand_id").agg(F.max(score_col).alias(score_col)),
+        k,
+        score_col,
     )
 
 
@@ -201,13 +213,7 @@ def brute_force_topk_arrow(
     qids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
     qm = np.array([r["qv"] for r in q_rows], dtype=np.float32).astype(np.float64)
 
-    def _seq_dot(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
-        # rows x rows fold: acc_d+1 = acc_d + a[:,d]*b[:,d] — the exact
-        # order F.aggregate / list_reduce use, vectorized over axis 0
-        acc = np.zeros((a.shape[0], b.shape[0]))
-        for d in range(a.shape[1]):
-            acc += np.multiply.outer(a[:, d], b[:, d])
-        return acc
+    cosines = _np_kernels()[2]  # F.aggregate / list_reduce's add order
 
     def _seq_norm(m: "np.ndarray") -> "np.ndarray":
         acc = np.zeros(m.shape[0])
@@ -234,7 +240,7 @@ def brute_force_topk_arrow(
                 pdf, cm, cn = pdf[ck], cm[ck], cn[ck]
                 if not len(pdf):
                     continue
-            cos = _seq_dot(cm, qm) / np.multiply.outer(cn, qn)
+            cos = cosines(cm, cn, qm, qn)
             n, m = cos.shape
             yield pd.DataFrame(
                 {
@@ -252,12 +258,6 @@ def brute_force_topk_arrow(
     )
 
 
-def _cell_cos(c: str, vec_c: str, nrm_c: str) -> str:
-    """cosine(centroid struct c, row vector) with the row norm hoisted,
-    as SQL text (see the note below)."""
-    return f"{_dot_sql(f'{c}.cv', vec_c)} / ({c}.cn * {nrm_c})"
-
-
 # SQL-text builders. Every F.* call, Column operator and Python lambda
 # costs one or more Py4J round trips, so a Column-API fold over a few
 # hundred nodes costs hundreds of calls per plan build; the same
@@ -265,112 +265,26 @@ def _cell_cos(c: str, vec_c: str, nrm_c: str) -> str:
 # / a filter string). The string must parse to the expression the
 # Column chain built (the optimized plans compare equal), which takes
 # two rules:
-# - write double literals as ``0.0D`` (``_double_sql``), never ``0.0``:
-#   Spark SQL parses a bare ``0.0`` as DECIMAL, so folds would change type;
-# - give every lambda variable a builder-prefixed name (``pq_s``,
+# - write double literals as ``0.0D``, never ``0.0``: Spark SQL parses
+#   a bare ``0.0`` as DECIMAL, so folds would change type;
+# - give every lambda variable a builder-prefixed name (``adc_c``,
 #   ``dot_x``, ...) that no column and no enclosing lambda uses: a SQL
 #   lambda variable shadows both, where the Column API drew fresh names.
-# Structs are spelled ``struct(x AS name)``, as F.struct prints.
-# Builders that follow the idiom: _dot_sql, _cell_cos, _PAIR_COS_SQL,
-# _centroid_literal, _pq_codebook_literal, _pq_subvec, _pq_encode,
-# _pq_lut, _ADC_SQL, and minhash_signatures / minhash_bands in
-# operators/dedup.py.
+# Builders that follow the idiom: _dot_sql, _PAIR_COS_SQL, _ADC_SQL, and
+# minhash_signatures / minhash_bands in operators/dedup.py. Index
+# metadata (centroids, codebooks) never enters a plan: Spark analyzes a
+# literal on every build (~0.3 s per select for a [16][32][4]
+# codebook), so the Arrow kernels below hold it as numpy arrays.
 
 
-def _double_sql(x: float) -> str:
-    """One double as SQL literal text, bit-exact round-trip: Python
-    repr is the shortest decimal that re-parses to the same bits, and
-    Java's Double.parseDouble is correctly rounded too; non-finite
-    values go through their CAST spellings."""
-    x = float(x)
-    if x != x:
-        return "CAST('NaN' AS DOUBLE)"
-    if x == float("inf"):
-        return "CAST('Infinity' AS DOUBLE)"
-    if x == float("-inf"):
-        return "CAST('-Infinity' AS DOUBLE)"
-    return repr(x) + "D"
-
-
-def _doubles_sql(payload) -> str:
-    """Nested float lists rendered as one SQL array(...) literal
-    expression. F.lit on a nested list issues one Py4J round-trip PER
-    ELEMENT (~1 ms each — measured 2.1 s for a [16][32][4] codebook,
-    the dominant cost of BUILDING the PQ plans); parsing a single
-    rendered expression is ~10 ms for the identical, bit-exact
-    Literal tree (verified down to subnormals/-0.0/±inf/NaN)."""
-    if isinstance(payload, (list, tuple)):
-        return "array(" + ",".join(_doubles_sql(x) for x in payload) + ")"
-    return _double_sql(payload)
-
-
-def _centroid_literal(cent_rows) -> str:
-    """(cid, cv, cn) centroid structs inlined as ONE array literal, as
-    SQL text — index metadata shipped inside the plan, so corpus->cell
-    assignment stays a narrow map (shared by ivf_topk / ivf_pq_topk).
-    Rendered as one parsed expression, not per-element F.lit Py4J calls
-    (see _doubles_sql)."""
-    return (
-        "array("
-        + ",".join(
-            "named_struct('cid', {cid}L, 'cv', {cv}, 'cn', {cn})".format(
-                cid=int(r["cid"]),
-                cv=_doubles_sql(list(r["cv"])),
-                cn=_double_sql(r["cn"]),
-            )
-            for r in cent_rows
-        )
-        + ")"
-    )
-
-
-def _assign_cells_arrow(
-    df: DataFrame, vec_c: str, nrm_c: str, cent_rows, cell_col: str = "cell"
-) -> DataFrame:
-    """Corpus→nearest-cell assignment as one Arrow ``mapInPandas``
-    batch product — the same narrow zero-shuffle map as the
-    literal cosine-argmax fold it replaced (kept as the executable spec
-    in tests/test_operators.py), ~20× faster per row (measured 1.8 s →
-    0.1 s over sf0.1; the interpreted HOF fold costs ~50 µs per
-    64-dim centroid comparison, the numpy batch product ~µs per row
-    including Arrow transfer — decisive at corpus scale).
-
-    Bit-identical to the JVM fold (the ``brute_force_topk_arrow``
-    contract): the accumulation is vectorized ACROSS rows but
-    SEQUENTIAL across dims — the exact left-to-right float64 add order
-    of ``_dot_sql`` — and cosine denominators multiply in the fold's
-    operand order, so every cosine matches bit-for-bit and the argmax
-    cannot diverge. Tie-break parity: the fold keeps (max cos, then
-    smallest cid); centroids here sort by cid ascending and
-    ``argmax`` returns the first maximum = the smallest cid. Spark's
-    non-IEEE NaN ordering (NaN above +inf, NaN == NaN) is mirrored
-    explicitly — see the kernel comment. Rows the fold could never
-    assign (vector length ≠ centroid dim → NULL products; all
-    cosines genuinely -inf) get a NULL cell exactly like the fold's
-    untouched init accumulator.
-
-    Callers must pre-apply ``_nonzero_norm`` (NULL elements / NULL
-    vectors / zero norms are excluded there — a None inside an Arrow
-    batch would break the matrix build, the documented
-    ``brute_force_topk_arrow`` contract).
-    """
+def _centroid_arrays(cent_rows):
+    """(cids, vectors, norms) of the IVF centroids in cid order, float64.
+    NULL-norm rows are dropped: no cosine to them is defined."""
     import numpy as np
-    import pandas as pd
 
-    # keep zero-norm centroids (the fold's ±inf/NaN division semantics
-    # are IEEE, same as numpy's); drop only NULL-norm rows, which the
-    # fold can never select (NULL comparisons are never true)
     rows = sorted(
-        (r for r in cent_rows if r["cn"] is not None),
-        key=lambda r: r["cid"],
+        (r for r in cent_rows if r["cn"] is not None), key=lambda r: r["cid"]
     )
-    spark_fields = df.schema.fields
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in spark_fields]
-        + [f"`{cell_col}` bigint"]
-    )
-    if not rows:
-        return df.withColumn(cell_col, F.lit(None).cast("long"))
     dims = {len(r["cv"]) for r in rows}
     if len(dims) > 1:
         # fail with a NAMED error instead of numpy's opaque
@@ -382,63 +296,276 @@ def _assign_cells_arrow(
             f"{sorted(dims)}; the embedding corpus must be "
             "uniform-dimension to build an ANN index"
         )
-    cids = np.array([r["cid"] for r in rows], dtype=np.int64)
     cm = np.array([list(r["cv"]) for r in rows], dtype=np.float64)
-    cn = np.array([r["cn"] for r in rows], dtype=np.float64)
-    d = cm.shape[1]
+    return (
+        np.array([r["cid"] for r in rows], dtype=np.int64),
+        cm.reshape(len(rows), dims.pop() if dims else 0),
+        np.array([r["cn"] for r in rows], dtype=np.float64),
+    )
+
+
+def _pq_codebook(code_rows, m: int, sub: int):
+    """The [m][k][sub] float64 codebook of the cid-ordered sample rows:
+    codeword j of subspace s is row j's slice s. A slice the row is too
+    short to fill is NaN, so it is never chosen and never looked up."""
+    import numpy as np
+
+    cb = np.full((len(code_rows), m * sub), np.nan)
+    for j, r in enumerate(code_rows):
+        v = list(r["cv"])[: m * sub]
+        cb[j, : len(v)] = v
+    return cb.reshape(len(code_rows), m, sub).transpose(1, 0, 2)
+
+
+def _np_kernels():
+    """The numpy pieces the Arrow kernels share, defined in a function
+    so cloudpickle ships them by value: a Python worker then needs only
+    numpy and pyarrow, not this package on its path."""
+    import numpy as np
+    import pyarrow as pa
+
+    def batch_matrix(col, width: int):
+        """An Arrow list column as a float64 (rows, width) matrix, each
+        vector cut or NaN-padded to ``width``, plus each row's length."""
+        lens = col.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
+        flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+        if (lens == width).all():
+            return flat.reshape(len(lens), width), lens
+        out = np.full((len(lens), width), np.nan)
+        start = np.cumsum(lens) - lens
+        for i, n in enumerate(np.minimum(lens, width)):
+            out[i, :n] = flat[start[i]:start[i] + n]
+        return out, lens
+
+    def list_array(values, width: int):
+        """Consecutive runs of ``width`` values as one Arrow list array.
+        Built from numpy, so NaN stays NaN: the pandas route would turn
+        every NaN inside a nested array into NULL."""
+        offsets = np.arange(len(values) // width + 1, dtype=np.int32) * width
+        return pa.ListArray.from_arrays(pa.array(offsets), values)
+
+    def cosines(vm, nrm, cm, cn):
+        """(rows, centroids) cosines, the dot products accumulated dim by
+        dim from 0.0: ``_dot_sql``'s add order, bit-for-bit."""
+        acc = np.zeros((len(vm), len(cm)))
+        for d in range(cm.shape[1]):
+            acc += np.multiply.outer(vm[:, d], cm[:, d])
+        with np.errstate(invalid="ignore", over="ignore", divide="ignore"):
+            return acc / np.multiply.outer(nrm, cn)
+
+    def pq_codes(vm, cb):
+        """(rows, m) int32 codes against ``cb`` [m][k][sub]: per subspace,
+        squared L2 distances folded over the ``sub`` dims from 0.0, then
+        the first strict minimum (ties to the smallest j). NaN and +inf
+        are never chosen, as under Spark's ``<``; a subspace with no
+        distance below +inf gets -1, on which the ADC lookup fails."""
+        m, k, sub = cb.shape
+        x = vm[:, : m * sub].reshape(len(vm), m, sub)
+        d2 = np.zeros((len(vm), m, k))
+        with np.errstate(invalid="ignore", over="ignore"):
+            for i in range(sub):
+                diff = x[:, :, i, None] - cb[:, :, i]
+                d2 += diff * diff
+        d2[np.isnan(d2)] = np.inf
+        j = d2.argmin(axis=2)
+        best = np.take_along_axis(d2, j[:, :, None], axis=2)[:, :, 0]
+        return np.where(best < np.inf, j, -1).astype(np.int32)
+
+    def pq_luts(vm, cb):
+        """(rows, m, k) ADC lookup tables: subspace-by-codeword dot
+        products folded over the ``sub`` dims from 0.0."""
+        m, k, sub = cb.shape
+        x = vm[:, : m * sub].reshape(len(vm), m, sub)
+        lut = np.zeros((len(vm), m, k))
+        with np.errstate(invalid="ignore", over="ignore"):
+            for i in range(sub):
+                lut += x[:, :, i, None] * cb[:, :, i]
+        return lut
+
+    return batch_matrix, list_array, cosines, pq_codes, pq_luts
+
+
+def _kernel_args(df: DataFrame, keep, cent_rows, books, cell_col, books_col):
+    """What both Arrow kernels share: the output names and schema (the
+    ``keep`` columns, default all of ``df``, then ``cell_col`` bigint
+    with cells and ``books_col`` with codes), the centroid arrays (None
+    without cells), the codebook array (None without codes), and the
+    batch-matrix width that covers both."""
+    import numpy as np
+
+    keep = list(df.columns) if keep is None else list(keep)
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    extra = [(cell_col, "bigint")] if cent_rows is not None else []
+    extra += [books_col] if books is not None else []
+    names = keep + [n for n, _ in extra]
+    schema = ", ".join(f"`{n}` {t}" for n, t in [(c, types[c]) for c in keep] + extra)
+    cents = None if cent_rows is None else _centroid_arrays(cent_rows)
+    cb = None if books is None else np.asarray(books, dtype=np.float64)
+    width = max(
+        0 if cents is None else cents[1].shape[1],
+        0 if cb is None else cb.shape[0] * cb.shape[2],
+    )
+    return keep, names, schema, cents, cb, width
+
+
+def _assign_cells_arrow(
+    df: DataFrame,
+    vec_c: str,
+    nrm_c,
+    cent_rows,
+    cell_col: str = "cell",
+    books=None,
+    keep=None,
+) -> DataFrame:
+    """Corpus side of the ANN indexes as ONE Arrow ``mapInArrow`` pass,
+    a narrow zero-shuffle map: each row's nearest IVF cell (cosine
+    argmax over ``cent_rows``; None for no cells) and its PQ ``code``
+    (argmin per subspace over the [m][k][sub] codebook ``books``; None
+    for no codes). Output: the ``keep`` columns (default: all of
+    ``df``), untouched, then ``cell_col`` bigint, then ``code``
+    array<int>.
+
+    Bit-identical to the JVM folds it replaced (executable specs in
+    tests/test_operators.py): sums are vectorized ACROSS rows but
+    SEQUENTIAL across dims. The cell fold keeps (max cos, then smallest
+    cid): centroids sort by cid and ``argmax`` returns the first
+    maximum; Spark's NaN ordering is mirrored (kernel comment). Rows the
+    fold could never assign (vector length ≠ centroid dim; all cosines
+    -inf) get its NULL init. ~20× faster per row than the interpreted
+    fold (1.8 s → 0.1 s over sf0.1). Callers pre-apply
+    ``_nonzero_norm``: a NULL element would read as NaN.
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    batch_matrix, list_array, cosines, pq_codes, _ = _np_kernels()
+    keep, names, schema, cents, cb, width = _kernel_args(
+        df, keep, cent_rows, books, cell_col, ("code", "array<int>")
+    )
 
     def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            # the fold yields NULL for any row whose vector length
-            # differs from the centroid dim (zip_with pads with NULL →
-            # NULL products poison the sum); mask those out so the
-            # batch matrix stays rectangular, and tag them NULL cell
-            # like the fold would (no second JVM scan for the split)
-            ok = (
-                np.fromiter(
-                    (len(v) for v in pdf[vec_c]), dtype=np.int64,
-                    count=len(pdf),
-                )
-                == d
-            )
-            cells = pd.array([pd.NA] * len(pdf), dtype="Int64")
-            if ok.any():
-                sub = pdf[vec_c][ok]
-                vm = np.array(
-                    [np.asarray(v, dtype=np.float64) for v in sub]
-                )
-                acc = np.zeros((len(vm), len(cids)))
-                for dd in range(d):
-                    acc += np.multiply.outer(vm[:, dd], cm[:, dd])
-                with np.errstate(invalid="ignore", over="ignore"):
-                    cos = acc / np.multiply.outer(
-                        pdf[nrm_c].to_numpy(dtype=np.float64)[ok], cn
+            vm, lens = batch_matrix(batch.column(vec_c), width)
+            out = [batch.column(c) for c in keep]
+            if cents is not None:
+                cids, cm, cn = cents
+                d = cm.shape[1]
+                # a vector length other than the centroid dim makes the
+                # fold's zip_with pad NULLs: such rows keep a NULL cell
+                ok = (lens == d) & (len(cids) > 0)
+                cells = np.zeros(len(lens), dtype=np.int64)
+                null = ~ok
+                if ok.any():
+                    nrm = batch.column(nrm_c).to_numpy(zero_copy_only=False)
+                    cos = cosines(vm[ok, :d], nrm[ok], cm, cn)
+                    # Spark semantics (NOT IEEE): NaN is LARGER than
+                    # +inf and NaN == NaN, so the fold picks the smallest
+                    # cid among NaN cosines, else the plain argmax; -inf
+                    # never beats the -2.0 init (all -inf: NULL cell).
+                    nan = np.isnan(cos)
+                    has_nan = nan.any(axis=1)
+                    cos2 = np.where(nan, -np.inf, cos)
+                    idx = np.where(
+                        has_nan,
+                        np.argmax(nan, axis=1),
+                        np.argmax(cos2, axis=1),
                     )
-                # Spark comparison semantics (NOT IEEE): NaN is LARGER
-                # than every value incl. +inf, and NaN == NaN — so the
-                # fold picks the smallest cid among NaN cosines when any
-                # exist, else the plain argmax. Genuine -inf is never
-                # selected (-inf > -2.0 init is false): a row whose
-                # cosines are ALL -inf (and none NaN) keeps the fold's
-                # NULL init.
-                nan = np.isnan(cos)
-                has_nan = nan.any(axis=1)
-                cos2 = np.where(nan, -np.inf, cos)
-                idx = np.where(
-                    has_nan,
-                    np.argmax(nan, axis=1),
-                    np.argmax(cos2, axis=1),
-                )
-                best = pd.array(cids[idx], dtype="Int64")
-                best[~has_nan & (cos2 == -np.inf).all(axis=1)] = pd.NA
-                cells[ok] = best
-            out = pdf.copy()
-            out[cell_col] = cells
-            yield out
+                    cells[ok] = cids[idx]
+                    null[ok] = ~has_nan & (cos2 == -np.inf).all(axis=1)
+                out.append(pa.array(cells, mask=null))
+            if cb is not None:
+                # a short row is NaN-padded: its short subspaces get -1,
+                # as the fold's NULL distances were never chosen either
+                out.append(list_array(pq_codes(vm, cb).ravel(), cb.shape[0]))
+            yield pa.RecordBatch.from_arrays(out, names=names)
 
-    return df.mapInPandas(assign, out_schema)
+    return df.mapInArrow(assign, schema)
+
+
+def _probe_arrow(
+    q: DataFrame,
+    id_c: str,
+    vec_c: str,
+    nrm_c,
+    cent_rows,
+    nprobe: int,
+    books=None,
+    keep=None,
+) -> DataFrame:
+    """Query side of the ANN indexes as ONE Arrow ``mapInArrow`` pass.
+
+    With ``cent_rows``: one row per probed cell (``cell`` bigint), the
+    ``nprobe`` cells of highest cosine per ``id_c`` pooled over all its
+    rows, as a ``row_number`` window by (cosine DESC, cell ASC) picks
+    them: NaN first (Spark sorts NaN above +inf), NULL last (ragged
+    dim), ties to the smaller cell. Pooling needs every row of an id in
+    one task, so the queries are coalesced to one partition: they are
+    small by contract (broadcast). With ``books``: each row also
+    carries its query's ADC table ``lut`` array<array<double>> [m][k];
+    without ``cent_rows`` that is one row per query. Output: the
+    ``keep`` columns (default: all of ``q``), then ``cell``, then
+    ``lut``. Callers pre-apply ``_nonzero_norm``.
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    batch_matrix, list_array, cosines, _, pq_luts = _np_kernels()
+    keep, names, schema, cents, cb, width = _kernel_args(
+        q, keep, cent_rows, books, "cell", ("lut", "array<array<double>>")
+    )
+    if cents is not None:
+        q = q.coalesce(1)
+
+    def probe(batches):
+        batches = list(batches)
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches)
+        # a NULL id never matches a candidate: such rows probe nothing
+        tbl = tbl.filter(tbl.column(id_c).is_valid()).combine_chunks()
+        if not tbl.num_rows:
+            return
+        vm, lens = batch_matrix(tbl.column(vec_c).chunk(0), width)
+        rows = np.arange(tbl.num_rows)
+        if cents is not None:
+            cids, cm, cn = cents
+            n, c, d = tbl.num_rows, len(cids), cm.shape[1]
+            ok = lens == d
+            cos = np.zeros((n, c))
+            if ok.any():
+                nrm = tbl.column(nrm_c).to_numpy()
+                cos[ok] = cosines(vm[ok, :d], nrm[ok], cm, cn)
+            # rank classes: 0 NaN, 1 a number, 2 NULL (ragged dim); the
+            # sort runs over (id, class, -cosine, cell), then each id
+            # keeps its first nprobe entries
+            flat = cos.ravel()
+            cls = np.where(np.repeat(~ok, c), 2, np.where(np.isnan(flat), 0, 1))
+            desc = np.where(cls == 1, -flat, 0.0)
+            ids = np.repeat(tbl.column(id_c).to_numpy(), c)
+            order = np.lexsort((np.tile(np.arange(c), n), desc, cls, ids))
+            first = np.r_[True, ids[order][1:] != ids[order][:-1]]
+            pos = np.arange(len(order))
+            start = np.maximum.accumulate(np.where(first, pos, 0))
+            pick = order[pos - start < nprobe]
+            rows = pick // c
+        out = [tbl.column(col).chunk(0).take(pa.array(rows)) for col in keep]
+        if cents is not None:
+            out.append(pa.array(cids[pick % c]))
+        if cb is not None:
+            m, k, sub = cb.shape
+            if (lens[rows] < m * sub).any():
+                # the SQL fold's element_at failed on these too
+                raise ValueError(
+                    f"query vector shorter than the PQ codebook's {m * sub} "
+                    "dims; the embedding corpus must be uniform-dimension"
+                )
+            lut = pq_luts(vm, cb)[rows]
+            out.append(list_array(list_array(lut.ravel(), k), m))
+        yield pa.RecordBatch.from_arrays(out, names=names)
+
+    return q.mapInArrow(probe, schema)
 
 
 def _nonzero_norm(df: DataFrame, vec_col: str) -> DataFrame:
@@ -472,10 +599,11 @@ def ivf_topk(
     k-means centroids; the plan shape below is unchanged). The
     centroids are collected once (n_cells x dim floats — index
     metadata, exactly what a real ANN index stores beside the data) and
-    inlined as literals, which makes corpus->cell assignment a PURE
-    NARROW MAP: an ``aggregate`` argmax fold over the literal centroid
-    array, zero shuffle over the corpus at any scale. Each query probes
-    its ``nprobe`` nearest cells and scores only those cells' vectors
+    held by two Arrow kernels, never by the plan: corpus->cell
+    assignment is a PURE NARROW MAP (``_assign_cells_arrow``, zero
+    shuffle over the corpus at any scale), and each query's ``nprobe``
+    nearest cells come from one pass over the query side
+    (``_probe_arrow``). A query scores only those cells' vectors
     (~nprobe/n_cells of the corpus), joined cell-to-cell with the
     probe side broadcast.
     """
@@ -495,45 +623,17 @@ def ivf_topk(
     )
     if not cent_rows:
         return _empty_topk(corpus)
-    cents = _centroid_literal(cent_rows)
-    # corpus-side assignment: Arrow batch product (bit-identical to the
-    # literal argmax fold, ~20× faster per row — see _assign_cells_arrow);
-    # the literal cells stay on the tiny query-side probe ranking
-    # below, where |Q| × n_cells rows don't justify a Python stage
     assigned = _assign_cells_arrow(corpus, "candv", "candn", cent_rows)
-
     q = _nonzero_norm(queries, vec_col).selectExpr(
         f"{id_col} AS query_id", f"{vec_col} AS queryv", f"{nrm} AS queryn"
     )
-    pw = Window.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("cell"))
-    probes = (
-        q.selectExpr("*", f"explode({cents}) AS c")
-        .selectExpr(
-            "query_id",
-            "queryv",
-            "queryn",
-            "c.cid AS cell",
-            f"{_cell_cos('c', 'queryv', 'queryn')} AS ccos",
-        )
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= nprobe)
-        .select("query_id", "queryv", "queryn", "cell")
-    )
+    probes = _probe_arrow(q, "query_id", "queryv", "queryn", cent_rows, nprobe)
     scored = (
         assigned.join(F.broadcast(probes), "cell")
         .filter(F.col("query_id") != F.col("cand_id"))
         .selectExpr("query_id", "cand_id", _PAIR_COS_SQL)
     )
-    # pair grain ("each cand_id at most once per query"), the family
-    # contract shared with lsh_topk: duplicate input rows — candidate,
-    # query, or sampled-centroid duplicates doubling a probed cell —
-    # would otherwise occupy several top-k slots, and the oracles'
-    # row-collapsing argmin assignments would disagree on the grain
-    # (differential-fuzzer find); scalar rows, map-combined
-    scored = scored.groupBy("query_id", "cand_id").agg(
-        F.max("cos_sim").alias("cos_sim")
-    )
-    return _rank_topk(scored, k)
+    return _pair_topk(scored, k)
 
 
 def lsh_topk(
@@ -590,15 +690,9 @@ def lsh_topk(
         .filter(F.col("query_id") != F.col("cand_id"))
         .selectExpr("query_id", "cand_id", _PAIR_COS_SQL)
     )
-    # unconditional (not just n_tables > 1): the pair grain is the
-    # contract — "each cand_id at most once per query" — and duplicate
-    # INPUT ids would otherwise occupy several top-k slots in the
-    # single-table form too (differential-fuzzer find); scalar rows,
-    # map-combined, negligible at any scale
-    scored = scored.groupBy("query_id", "cand_id").agg(
-        F.max("cos_sim").alias("cos_sim")
-    )
-    return _rank_topk(scored, k)
+    # pair grain unconditionally (not just n_tables > 1): duplicate
+    # INPUT ids break it in the single-table form too
+    return _pair_topk(scored, k)
 
 
 def tf_cosine_pairs(
@@ -953,21 +1047,6 @@ def _pq_sample_rows(
     )
 
 
-def _pq_codebook_literal(code_rows, m: int, sub: int) -> str:
-    """ONE nested literal [m][n_codes][sub] and data-driven HOF loops:
-    unrolling m x n_codes separate fold expressions in Python blew
-    past the whole-stage-codegen method limit and fell back to
-    interpreted evaluation — measured 33s vs ~1s for identical math
-    at sf0.1. Rendered as SQL text (F.lit on the nested list cost 2.1 s
-    of Py4J round-trips per plan BUILD — see _doubles_sql)."""
-    return _doubles_sql(
-        [
-            [[float(x) for x in r["cv"][s * sub:(s + 1) * sub]] for r in code_rows]
-            for s in range(m)
-        ]
-    )
-
-
 def _lloyd_np(X, k: int, iters: int, spherical: bool = False):
     """Deterministic Lloyd's k-means over a SMALL sampled matrix,
     driver-side (numpy float64). This is deliberately not the
@@ -1014,8 +1093,8 @@ def train_pq_codebooks(
 ):
     """Per-subspace k-means PQ codebooks: the md5-smallest ``sample_n``
     corpus vectors train ``m`` independent Lloyd runs (one per
-    subspace slice). Returns the nested ``[m][n_codes][sub]`` literal
-    payload, or None on an empty corpus. No SQL oracle can re-derive
+    subspace slice). Returns the nested ``[m][n_codes][sub]`` codebook,
+    or None on an empty corpus. No SQL oracle can re-derive
     a k-means fit, so the catalog keeps the md5 sample codebook as its
     oracle-exact form; this is the measured-recall production path
     (curves in docs/SCALE.md)."""
@@ -1050,8 +1129,9 @@ def train_ivf_centroids(
     """Spherical k-means IVF centroids (cosine objective: sample rows
     are unit-normalized and centroids renormalize each round) trained
     on the md5-smallest ``sample_n`` corpus vectors. Returns
-    ``_centroid_literal``-shaped rows with integer cell ids 0..k-1 and
-    unit norms."""
+    (cid, cv, cn) centroid rows, the shape ``_pq_sample_rows(...,
+    with_norm=True)`` returns, with integer cell ids 0..k-1 and unit
+    norms."""
     import numpy as np
 
     rows = _pq_sample_rows(candidates, id_col, vec_col, sample_n)
@@ -1060,7 +1140,7 @@ def train_ivf_centroids(
     dims = {len(r["cv"]) for r in rows}
     if len(dims) > 1:
         # named error, not numpy's inhomogeneous-shape ValueError
-        # (see _assign_cells_arrow's identical guard)
+        # (see _centroid_arrays' identical guard)
         raise ValueError(
             "training sample has mixed embedding dimensions "
             f"{sorted(dims)}; the corpus must be uniform-dimension"
@@ -1076,51 +1156,6 @@ def train_ivf_centroids(
         {"cid": i, "cv": [float(x) for x in c], "cn": 1.0}
         for i, c in enumerate(C)
     ]
-
-
-def _pq_subvec(vec: str, s: str, sub: int) -> str:
-    # element_at arithmetic over the lambda variable ``s``, 1-based
-    return (
-        f"transform(sequence(1, {sub}), pq_i -> "
-        f"CAST(element_at({vec}, CAST({s} * {sub} + pq_i AS INT)) AS DOUBLE))"
-    )
-
-
-def _pq_codeword(cb: str) -> str:
-    # codeword pq_j of subspace pq_s (both 0-based lambda variables)
-    return f"element_at(element_at({cb}, CAST(pq_s + 1 AS INT)), CAST(pq_j + 1 AS INT))"
-
-
-def _pq_encode(vec: str, cb: str, m: int, n_codes: int, sub: int) -> str:
-    """argmin-L2 fold per subspace over the literal codebook ``cb`` —
-    the narrow map that compresses a vector to m small codes; ties
-    break to the smallest code index. SQL text (see the note above
-    _double_sql)."""
-    d2 = (
-        f"aggregate(zip_with({_pq_subvec(vec, 'pq_s', sub)}, {_pq_codeword(cb)}, "
-        "(pq_x, pq_c) -> (pq_x - pq_c) * (pq_x - pq_c)), "
-        "0.0D, (pq_a, pq_t) -> pq_a + pq_t)"
-    )
-    return (
-        f"transform(sequence(0, {m - 1}), pq_s -> aggregate("
-        f"transform(sequence(0, {n_codes - 1}), pq_j -> "
-        f"struct({d2} AS d2, CAST(pq_j AS INT) AS j)), "
-        f"struct({_double_sql(float('inf'))} AS d2, -1 AS j), "
-        "(pq_acc, pq_sc) -> CASE WHEN pq_sc.d2 < pq_acc.d2 OR "
-        "(pq_sc.d2 = pq_acc.d2 AND pq_sc.j < pq_acc.j) "
-        "THEN pq_sc ELSE pq_acc END).j)"
-    )
-
-
-def _pq_lut(vec: str, cb: str, m: int, n_codes: int, sub: int) -> str:
-    """Per-query ADC lookup table: m x n_codes subspace dot products
-    from the same codebook literal, computed row-locally. SQL text."""
-    return (
-        f"transform(sequence(0, {m - 1}), pq_s -> "
-        f"transform(sequence(0, {n_codes - 1}), pq_j -> "
-        f"aggregate(zip_with({_pq_subvec(vec, 'pq_s', sub)}, {_pq_codeword(cb)}, "
-        "(pq_x, pq_c) -> pq_x * pq_c), 0.0D, (pq_a, pq_t) -> pq_a + pq_t)))"
-    )
 
 
 #: ADC score of a (code, lut) row: m table lookups summed left to right
@@ -1151,13 +1186,15 @@ def pq_topk(
     corpus vectors chosen by smallest md5(id) — the same seeded-sample-
     in-disguise as ``ivf_topk``, so the DuckDB oracle re-derives them
     (production swaps in per-subspace k-means; the plan shape is
-    unchanged). Encode: argmin-L2 fold over the LITERAL codebook per
-    subspace — a narrow map that compresses each vector to m small
-    codes (64 floats -> 4 codes here: the ~64x index-memory trick real
-    PQ deployments bank on). ADC: each query precomputes its
-    m x n_codes lookup table of subspace dot products row-locally from
-    the same literals; a (query, candidate) score is then m table
-    lookups + adds instead of d multiplies.
+    unchanged). Encode: argmin-L2 per subspace over the collected
+    codebook (``_assign_cells_arrow``) — a narrow Arrow map that
+    compresses each vector to m small codes (64 floats -> 4 codes here:
+    the ~64x index-memory trick real PQ deployments bank on). ADC: each
+    query precomputes its m x n_codes lookup table of subspace dot
+    products row-locally from the same codebook (``_probe_arrow``); a
+    (query, candidate) score is then m table lookups + adds instead of
+    d multiplies. A sample of fewer than ``n_codes`` rows makes a
+    codebook of that many codewords.
 
     Scoring is EXHAUSTIVE over candidates by contract — PQ is a
     compression scheme, not a pruning scheme; compose with IVF cells
@@ -1171,6 +1208,7 @@ def pq_topk(
     # _nonzero_norm convention as every other path in this family; the
     # oracle mirrors norm > 0.
     candidates = _nonzero_norm(candidates, vec_col)
+    no_index = candidates.select(F.col(id_col).alias("cand_id"))
     queries = _nonzero_norm(queries, vec_col)
     if train_sample:
         books = train_pq_codebooks(
@@ -1178,52 +1216,35 @@ def pq_topk(
             train_iters,
         )
         if books is None:
-            return _empty_topk(
-                candidates.select(F.col(id_col).alias("cand_id")),
-                score_col="adc_score",
-            )
-        n_codes, sub = len(books[0]), len(books[0][0])
-        cb = _doubles_sql(books)
+            return _empty_topk(no_index, "adc_score")
     else:
         code_rows = sorted(
             _pq_sample_rows(candidates, id_col, vec_col, n_codes),
             key=lambda r: r["cid"],
         )
         if not code_rows:
-            return _empty_topk(
-                candidates.select(F.col(id_col).alias("cand_id")),
-                score_col="adc_score",
-            )
+            return _empty_topk(no_index, "adc_score")
         d = len(code_rows[0]["cv"])
         if d % m != 0:
             raise ValueError(f"dim {d} not divisible by m={m} subspaces")
-        sub = d // m
-        cb = _pq_codebook_literal(code_rows, m, sub)
+        books = _pq_codebook(code_rows, m, d // m)
 
-    cands = spread_for_compute(candidates, id_col).selectExpr(
-        f"{id_col} AS cand_id",
-        f"{_pq_encode(vec_col, cb, m, n_codes, sub)} AS code",
+    cands = _assign_cells_arrow(
+        spread_for_compute(candidates, id_col).selectExpr(
+            f"{id_col} AS cand_id", f"{vec_col} AS v"
+        ),
+        "v", None, None, books=books, keep=["cand_id"],
     )
-
-    q = queries.selectExpr(
-        f"{id_col} AS query_id",
-        f"{_pq_lut(vec_col, cb, m, n_codes, sub)} AS lut",
+    q = _probe_arrow(
+        queries.selectExpr(f"{id_col} AS query_id", f"{vec_col} AS v"),
+        "query_id", "v", None, None, 0, books=books, keep=["query_id"],
     )
     scored = (
         cands.crossJoin(F.broadcast(q))
         .filter(F.col("cand_id") != F.col("query_id"))
         .selectExpr("query_id", "cand_id", _ADC_SQL)
     )
-    # pair grain ("each cand_id at most once per query"), the family
-    # contract shared with lsh_topk: duplicate input rows — candidate,
-    # query, or sampled-centroid duplicates doubling a probed cell —
-    # would otherwise occupy several top-k slots, and the oracles'
-    # row-collapsing argmin assignments would disagree on the grain
-    # (differential-fuzzer find); scalar rows, map-combined
-    scored = scored.groupBy("query_id", "cand_id").agg(
-        F.max("adc_score").alias("adc_score")
-    )
-    return _rank_topk(scored, k, score_col="adc_score")
+    return _pair_topk(scored, k, "adc_score")
 
 
 def ivf_pq_topk(
@@ -1248,14 +1269,17 @@ def ivf_pq_topk(
     Both quantizers use the md5-smallest corpus sample as their
     deterministic codebook stand-in (``ivf_topk`` / ``pq_topk``
     conventions, so the DuckDB oracle re-derives everything); corpus
-    cell assignment and PQ encoding are one narrow map over literal
-    codebooks — an index build with zero corpus shuffle. The only
+    cell assignment and PQ encoding are ONE narrow Arrow map
+    (``_assign_cells_arrow``) — an index build with zero corpus
+    shuffle — and each query's probed cells and lookup table come from
+    one Arrow pass over the query side (``_probe_arrow``). The only
     exchange is the broadcast probe join keyed by cell.
     """
     # cosine cell assignment is undefined for zero-norm vectors (and
     # aborts under ANSI): both sides — including the shared codebook
     # sample — draw from the norm-filtered corpus, like ivf_topk.
     candidates = _nonzero_norm(candidates, vec_col)
+    no_index = candidates.select(F.col(id_col).alias("cand_id"))
     # ONE corpus sample feeds BOTH quantizers: the md5 ordering is
     # prefix-closed, so the first n_cells rows of a max(n_cells,
     # n_codes) collect are exactly the IVF sample and the first
@@ -1265,10 +1289,7 @@ def ivf_pq_topk(
         candidates, id_col, vec_col, max(n_cells, n_codes), with_norm=True
     )
     if not sample_rows:
-        return _empty_topk(
-            candidates.select(F.col(id_col).alias("cand_id")),
-            score_col="adc_score",
-        )
+        return _empty_topk(no_index, "adc_score")
     if train_sample:
         # trained index (no SQL oracle): spherical-k-means cells +
         # per-subspace-k-means codebooks, same plan shape / query cost
@@ -1281,72 +1302,33 @@ def ivf_pq_topk(
             train_iters,
         )
         if not cent_rows or books is None:
-            return _empty_topk(
-                candidates.select(F.col(id_col).alias("cand_id")),
-                score_col="adc_score",
-            )
+            return _empty_topk(no_index, "adc_score")
         cell_rows = cent_rows
-        cents = _centroid_literal(cell_rows)
-        n_codes, sub = len(books[0]), len(books[0][0])
-        cb = _doubles_sql(books)
     else:
         # ---- IVF coarse quantizer (cosine argmax, ivf_topk convention)
         cell_rows = sample_rows[:n_cells]
-        cents = _centroid_literal(cell_rows)
-
         # ---- PQ fine quantizer (pq_topk convention: cid-ordered sample)
         code_rows = sorted(sample_rows[:n_codes], key=lambda r: r["cid"])
         d = len(code_rows[0]["cv"])
         if d % m != 0:
             raise ValueError(f"dim {d} not divisible by m={m} subspaces")
-        sub = d // m
-        cb = _pq_codebook_literal(code_rows, m, sub)
+        books = _pq_codebook(code_rows, m, d // m)
 
-    # coarse assignment via the Arrow batch product (bit-identical to
-    # the literal fold — see _assign_cells_arrow), then the PQ
-    # encode fold JVM-side: two chained narrow maps, zero shuffle
-    vecs = [
-        f"{vec_col} AS v", f"sqrt({_dot_sql(vec_col, vec_col)}) AS nrm"
-    ]
+    vecs = [f"{vec_col} AS v", f"sqrt({_dot_sql(vec_col, vec_col)}) AS nrm"]
     assigned = _assign_cells_arrow(
         spread_for_compute(candidates, id_col).selectExpr(
             f"{id_col} AS cand_id", *vecs
         ),
-        "v",
-        "nrm",
-        cell_rows,
-    ).selectExpr(
-        "cand_id", "cell", f"{_pq_encode('v', cb, m, n_codes, sub)} AS code"
+        "v", "nrm", cell_rows, books=books, keep=["cand_id"],
     )
-
-    q = _nonzero_norm(queries, vec_col).selectExpr(f"{id_col} AS query_id", *vecs)
-    pw = Window.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("cell"))
-    probes = (
-        q.selectExpr("query_id", "v", f"explode({cents}) AS c", "nrm")
-        .selectExpr(
-            "query_id",
-            "v",
-            "c.cid AS cell",
-            f"{_cell_cos('c', 'v', 'nrm')} AS ccos",
-        )
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= nprobe)
-        .selectExpr(
-            "query_id", "cell", f"{_pq_lut('v', cb, m, n_codes, sub)} AS lut"
-        )
+    probes = _probe_arrow(
+        _nonzero_norm(queries, vec_col).selectExpr(f"{id_col} AS query_id", *vecs),
+        "query_id", "v", "nrm", cell_rows, nprobe, books=books,
+        keep=["query_id"],
     )
     scored = (
         assigned.join(F.broadcast(probes), "cell")
         .filter(F.col("query_id") != F.col("cand_id"))
         .selectExpr("query_id", "cand_id", _ADC_SQL)
     )
-    # pair grain ("each cand_id at most once per query"), the family
-    # contract shared with lsh_topk: duplicate input rows — candidate,
-    # query, or sampled-centroid duplicates doubling a probed cell —
-    # would otherwise occupy several top-k slots, and the oracles'
-    # row-collapsing argmin assignments would disagree on the grain
-    # (differential-fuzzer find); scalar rows, map-combined
-    scored = scored.groupBy("query_id", "cand_id").agg(
-        F.max("adc_score").alias("adc_score")
-    )
-    return _rank_topk(scored, k, score_col="adc_score")
+    return _pair_topk(scored, k, "adc_score")

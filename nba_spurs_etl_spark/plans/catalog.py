@@ -136,6 +136,13 @@ ENTRY_QUERY = "summary_rank"
 # through a rewritten builder (minhash, _dot_sql, _nonzero_norm, PQ/IVF);
 # the 16 longest-standing r11 entries dropped out rejoin the queue.
 set_priority([
+    # ---- built through the Arrow ANN kernels ----
+    "similarity_topk_ivf_pq",
+    "similarity_topk_pq",
+    "similarity_topk_ivf",
+    "similarity_recall_eval",
+    "embedding_mislabel_flags",
+    "similarity_topk_arrow",
     # ---- built through a rewritten SQL-text builder ----
     "dedup_minhash_lsh",
     "dedup_incremental_batch",
@@ -152,15 +159,9 @@ set_priority([
     "graph_pagerank_dups",
     "graph_triangles_dups",
     "stream_dedup_lsh_index",
-    "similarity_topk_ivf_pq",
-    "similarity_topk_pq",
-    "similarity_topk_ivf",
     "similarity_topk_bruteforce",
-    "similarity_topk_arrow",
     "similarity_topk_lsh",
     "similarity_topk_lsh_multi",
-    "similarity_recall_eval",
-    "embedding_mislabel_flags",
     "search_hybrid_rrf_topk",
     "search_rrf_fuse_3",
     # ---- kept from the r11 prefix ----

@@ -68,9 +68,9 @@ def _bucket_sql(vec: str, planes: int, offset: int = 0) -> str:
 
 def _pq_l2_sql(vec: str, cw: str, sub: int) -> str:
     """Subspace L2 distance between a vector slice and a codeword
-    slice (s is the enclosing lambda's subspace index) — the SQL twin
-    of similarity._pq_encode's fold, shared by the PQ and IVF-PQ
-    oracles."""
+    slice (s is the enclosing lambda's subspace index), shared by the
+    PQ and IVF-PQ oracles: the DuckDB form of the distance fold in
+    similarity's Arrow encode kernel (``pq_codes``)."""
     return (
         f"list_reduce(list_transform(generate_series(1, {sub}), "
         f"i -> (CAST({vec}[s*{sub}+i] AS DOUBLE) - CAST({cw}[s*{sub}+i] AS DOUBLE))"
@@ -586,8 +586,8 @@ FROM (
     group="ext-similarity",
     oracle=_ivf_oracle(),
     doc="IVF approximate top-5: 16 deterministic md5-sampled centroids "
-    "(k-means stand-in), corpus->cell assignment as a zero-shuffle "
-    "literal-centroid argmax fold, queries probe their 4 nearest cells "
+    "(k-means stand-in), corpus->cell assignment as a zero-shuffle Arrow "
+    "argmax map, queries probe their 4 nearest cells (one Arrow pass) "
     "and score ~nprobe/n_cells of the corpus via a broadcast cell join.",
 )
 def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3354,10 +3354,10 @@ SELECT query_id, cand_id, adc_score, CAST(rn AS INT) AS rnk FROM (
     oracle=_pq_oracle(),
     doc="Product-quantization approximate top-5 with ADC scoring: "
     "16 subspaces x 32 codewords (md5-sampled slices, the k-means "
-    "stand-in), candidates compress to 16 codes in a narrow "
-    "literal-codebook argmin fold (the index-memory trick: 256 bytes "
-    "of floats -> 16 small codes), queries precompute their 16x32 dot "
-    "LUT row-locally, and each pair scores via 16 lookups + adds "
+    "stand-in), candidates compress to 16 codes in a narrow Arrow "
+    "argmin map (the index-memory trick: 256 bytes of floats -> 16 "
+    "small codes), queries get their 16x32 dot LUT from one Arrow "
+    "pass, and each pair scores via 16 lookups + adds "
     "instead of 64 multiplies. Exhaustive over candidates by contract "
     "(PQ compresses, IVF prunes — compose for both); measured "
     "recall@10 0.54, monotone in both knobs "
@@ -3460,9 +3460,9 @@ SELECT query_id, cand_id, adc_score, CAST(rn AS INT) AS rnk FROM (
     "corpus via the broadcast cell join) while PQ codes COMPRESS the "
     "scoring inside probed cells (16 LUT lookups per pair, 16 small "
     "codes per vector in the index instead of 64 floats). Cell "
-    "assignment and PQ encode are one narrow literal-codebook map — "
-    "an index build with zero corpus shuffle "
-    "(operators/similarity.py::ivf_pq_topk).",
+    "assignment and PQ encode are one narrow Arrow map (zero corpus "
+    "shuffle), each query's cells and LUT one Arrow pass; no codebook "
+    "enters the plan (operators/similarity.py::ivf_pq_topk).",
 )
 def similarity_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")

@@ -11,7 +11,8 @@ split granularity and the problem never exists. The driver-provided
 testdata, however, arrives as one row group per table.
 
 ``ensure_repacked`` reproduces that ingest step locally, once per
-scale-factor directory: every table large enough to matter is rewritten
+scale-factor directory (keyed by its resolved path, so two inputs that
+share a basename never share an output): every table large enough to matter is rewritten
 into ``parallelism`` order-preserving parquet part-files (pyarrow
 zero-copy slices — byte-identical rows, same schema, same physical
 types, including the events table's TIMESTAMP(NANOS)); everything else
@@ -29,6 +30,7 @@ the benchmark input ambiguous. The repack is an explicit, logged step.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 import os
@@ -61,7 +63,17 @@ def _marker(table_dir: str) -> str:
 
 def _src_fingerprint(src: str) -> dict:
     st = os.stat(src)
-    return {"mtime_ns": st.st_mtime_ns, "size": st.st_size}
+    return {
+        "source": os.path.realpath(src), "mtime_ns": st.st_mtime_ns, "size": st.st_size
+    }
+
+
+def _out_dir(sf_dir: str) -> str:
+    """``<basename>-<hash of the resolved path>``: keyed by basename
+    alone, two inputs named alike rewrote each other's output."""
+    real = os.path.realpath(sf_dir)
+    tag = hashlib.sha256(real.encode()).hexdigest()[:10]
+    return os.path.join(_repack_root(), f"{os.path.basename(real)}-{tag}")
 
 
 def ensure_repacked(
@@ -70,8 +82,9 @@ def ensure_repacked(
     """Return a directory equivalent to ``sf_dir`` whose large tables
     are laid out as ``parallelism`` independent part-files.
 
-    Idempotent and mtime-keyed: a table is re-repacked only when the
-    source file changed since the last run. Tables already laid out
+    Idempotent and keyed by the source's resolved path, mtime and size:
+    a table is re-repacked only when the source file changed since the
+    last run. Tables already laid out
     with >= ``parallelism`` row groups (any well-written production
     table) pass through untouched — on real data this function is a
     no-op that returns a directory of symlinks.
@@ -79,7 +92,7 @@ def ensure_repacked(
     import pyarrow.parquet as pq
 
     sf_dir = os.path.abspath(sf_dir)
-    out = os.path.join(_repack_root(), os.path.basename(sf_dir.rstrip("/")))
+    out = _out_dir(sf_dir)
     os.makedirs(out, exist_ok=True)
 
     for name in TESTDATA_TABLES:

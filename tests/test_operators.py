@@ -826,20 +826,179 @@ def test_topk_arrow_empty_query_set_returns_empty(spark):
     assert out.count() == 0
 
 
+# ---------------------------------------------------------------------------
+# ANN kernels vs their executable specs: the JVM SQL folds over literal
+# centroids and codebooks that similarity's Arrow kernels replaced
+# ---------------------------------------------------------------------------
+
+
+def _double_sql(x: float) -> str:
+    """One double as SQL literal text, bit-exact round-trip: Python
+    repr is the shortest decimal that re-parses to the same bits, and
+    Java's Double.parseDouble is correctly rounded too; non-finite
+    values go through their CAST spellings. A bare ``0.1`` would parse
+    as DECIMAL, hence the ``D`` suffix."""
+    x = float(x)
+    if x != x:
+        return "CAST('NaN' AS DOUBLE)"
+    if x == float("inf"):
+        return "CAST('Infinity' AS DOUBLE)"
+    if x == float("-inf"):
+        return "CAST('-Infinity' AS DOUBLE)"
+    return repr(x) + "D"
+
+
+def _doubles_sql(payload) -> str:
+    """Nested float lists rendered as one SQL array(...) expression."""
+    if isinstance(payload, (list, tuple)):
+        return "array(" + ",".join(_doubles_sql(x) for x in payload) + ")"
+    return _double_sql(payload)
+
+
+def _centroid_literal(cent_rows) -> str:
+    """(cid, cv, cn) centroid structs inlined as ONE array literal."""
+    return (
+        "array("
+        + ",".join(
+            "named_struct('cid', {cid}L, 'cv', {cv}, 'cn', {cn})".format(
+                cid=int(r["cid"]),
+                cv=_doubles_sql(list(r["cv"])),
+                cn=_double_sql(r["cn"]),
+            )
+            for r in cent_rows
+        )
+        + ")"
+    )
+
+
+def _cell_cos(c: str, vec_c: str, nrm_c: str) -> str:
+    """cosine(centroid struct c, row vector) with the row norm hoisted."""
+    from nba_spurs_etl_spark.operators.dedup import _dot_sql
+
+    return f"{_dot_sql(f'{c}.cv', vec_c)} / ({c}.cn * {nrm_c})"
+
+
 def _best_cell(cents: str, vec_c: str, nrm_c: str) -> str:
     """Nearest-centroid id by cosine argmax fold over the literal
     centroid array, ties to smallest cid (SQL text): the executable
-    spec of similarity._assign_cells_arrow. Each centroid is scored
-    once, then the fold compares precomputed (cos, cid) structs."""
-    from nba_spurs_etl_spark.operators import similarity as S
-
+    spec of similarity._assign_cells_arrow's cells. Each centroid is
+    scored once, then the fold compares precomputed (cos, cid)
+    structs."""
     return (
         f"aggregate(transform({cents}, bc_c -> struct("
-        f"{S._cell_cos('bc_c', vec_c, nrm_c)} AS cos, bc_c.cid AS cid)), "
+        f"{_cell_cos('bc_c', vec_c, nrm_c)} AS cos, bc_c.cid AS cid)), "
         "struct(-2.0D AS cos, CAST(NULL AS BIGINT) AS cid), "
         "(bc_acc, bc_s) -> CASE WHEN bc_s.cos > bc_acc.cos OR "
         "(bc_s.cos = bc_acc.cos AND bc_s.cid < bc_acc.cid) "
         "THEN bc_s ELSE bc_acc END).cid"
+    )
+
+
+def _pq_codebook_literal(code_rows, m: int, sub: int) -> str:
+    """ONE nested [m][k][sub] literal of the cid-ordered sample rows."""
+    return _doubles_sql(
+        [
+            [[float(x) for x in r["cv"][s * sub:(s + 1) * sub]] for r in code_rows]
+            for s in range(m)
+        ]
+    )
+
+
+def _pq_subvec(vec: str, s: str, sub: int) -> str:
+    # element_at arithmetic over the lambda variable ``s``, 1-based
+    return (
+        f"transform(sequence(1, {sub}), pq_i -> "
+        f"CAST(element_at({vec}, CAST({s} * {sub} + pq_i AS INT)) AS DOUBLE))"
+    )
+
+
+def _pq_codeword(cb: str) -> str:
+    # codeword pq_j of subspace pq_s (both 0-based lambda variables)
+    return f"element_at(element_at({cb}, CAST(pq_s + 1 AS INT)), CAST(pq_j + 1 AS INT))"
+
+
+def _pq_encode(vec: str, cb: str, m: int, n_codes: int, sub: int) -> str:
+    """argmin-L2 fold per subspace over the literal codebook ``cb``,
+    ties to the smallest code index: the spec of the kernel's codes."""
+    d2 = (
+        f"aggregate(zip_with({_pq_subvec(vec, 'pq_s', sub)}, {_pq_codeword(cb)}, "
+        "(pq_x, pq_c) -> (pq_x - pq_c) * (pq_x - pq_c)), "
+        "0.0D, (pq_a, pq_t) -> pq_a + pq_t)"
+    )
+    return (
+        f"transform(sequence(0, {m - 1}), pq_s -> aggregate("
+        f"transform(sequence(0, {n_codes - 1}), pq_j -> "
+        f"struct({d2} AS d2, CAST(pq_j AS INT) AS j)), "
+        f"struct({_double_sql(float('inf'))} AS d2, -1 AS j), "
+        "(pq_acc, pq_sc) -> CASE WHEN pq_sc.d2 < pq_acc.d2 OR "
+        "(pq_sc.d2 = pq_acc.d2 AND pq_sc.j < pq_acc.j) "
+        "THEN pq_sc ELSE pq_acc END).j)"
+    )
+
+
+def _pq_lut(vec: str, cb: str, m: int, n_codes: int, sub: int) -> str:
+    """Per-query ADC lookup table: m x n_codes subspace dot products
+    from the literal codebook: the spec of the kernel's ``lut``."""
+    return (
+        f"transform(sequence(0, {m - 1}), pq_s -> "
+        f"transform(sequence(0, {n_codes - 1}), pq_j -> "
+        f"aggregate(zip_with({_pq_subvec(vec, 'pq_s', sub)}, {_pq_codeword(cb)}, "
+        "(pq_x, pq_c) -> pq_x * pq_c), 0.0D, (pq_a, pq_t) -> pq_a + pq_t)))"
+    )
+
+
+def _probe_window(q, cents: str, nprobe: int, lut: str | None = None):
+    """The query-side probe as the explode + row_number window it was:
+    each (query_id, v, nrm) row against every literal centroid, the
+    top ``nprobe`` cells per query_id by (cosine DESC, cell ASC), plus
+    the LUT when given: the spec of similarity._probe_arrow."""
+    from pyspark.sql import Window
+
+    pw = Window.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("cell"))
+    out = (
+        q.selectExpr("query_id", "v", f"explode({cents}) AS c", "nrm")
+        .selectExpr(
+            "query_id", "v", "c.cid AS cell", f"{_cell_cos('c', 'v', 'nrm')} AS ccos"
+        )
+        .withColumn("prn", F.row_number().over(pw))
+        .filter(F.col("prn") <= nprobe)
+    )
+    return out.selectExpr("query_id", "cell", *([f"{lut} AS lut"] if lut else []))
+
+
+def _bits(v):
+    """A value as comparable bits: doubles by their bytes (so -0.0 !=
+    0.0), every NaN as one marker, lists element-wise."""
+    import struct
+
+    if isinstance(v, (list, tuple)):
+        return tuple(_bits(x) for x in v)
+    if isinstance(v, float):
+        return "nan" if v != v else struct.pack("<d", v)
+    return v
+
+
+def _ann_fixture(spark, n: int):
+    """(sf0.01 corpus as (id, v, nrm) rows, its n md5-smallest sample
+    rows, dim): the index inputs every kernel spec test starts from."""
+    from .conftest import SF_SMOKE
+    from nba_spurs_etl_spark.operators import similarity as S
+    from nba_spurs_etl_spark.sources.catalog import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    cand = S._nonzero_norm(emb, "embedding")
+    rows = S._pq_sample_rows(cand, "vec_id", "embedding", n, with_norm=True)
+    return cand, rows, len(rows[0]["cv"])
+
+
+def _with_norm(df, id_c: str):
+    """(vec_id, embedding) rows as the kernels' (id_c, v, nrm) input."""
+    from nba_spurs_etl_spark.operators.dedup import _dot_sql
+
+    return df.select(
+        F.col("vec_id").alias(id_c),
+        F.col("embedding").alias("v"),
+        F.expr(f"sqrt({_dot_sql('embedding', 'embedding')})").alias("nrm"),
     )
 
 
@@ -852,14 +1011,9 @@ def test_assign_cells_arrow_matches_best_cell_fold(spark):
     vector driving every cosine to NaN — which under Spark's
     non-IEEE NaN ordering (NaN above everything, NaN == NaN) the
     fold SELECTS, ties to the smallest cid."""
-    from .conftest import SF_SMOKE
     from nba_spurs_etl_spark.operators import similarity as S
-    from nba_spurs_etl_spark.sources.catalog import load_table
 
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    cand = S._nonzero_norm(emb, "embedding")
-    rows = S._pq_sample_rows(cand, "vec_id", "embedding", 8, with_norm=True)
-    dim = len(rows[0]["cv"])
+    cand, rows, dim = _ann_fixture(spark, 8)
     extra = spark.createDataFrame(
         [
             (900001, [1.5] * (dim // 2)),        # ragged: fold gives NULL
@@ -879,7 +1033,7 @@ def test_assign_cells_arrow_matches_best_cell_fold(spark):
             ),
         )
     )
-    cents = S._centroid_literal(rows)
+    cents = _centroid_literal(rows)
     fold = {
         r["cand_id"]: r["cell"]
         for r in corpus.withColumn(
@@ -898,6 +1052,198 @@ def test_assign_cells_arrow_matches_best_cell_fold(spark):
     # pick the smallest centroid id, not NULL
     assert fold[900002] == min(r["cid"] for r in rows)
     assert fold[900003] is not None
+
+
+_NAN, _INF = float("nan"), float("inf")
+
+
+def test_pq_codes_kernel_matches_encode_fold(spark):
+    """_assign_cells_arrow's PQ codes must equal the _pq_encode fold
+    over the literal codebook bit-for-bit, on the sf0.01 corpus and on
+    every edge row the fold defines: an exact codeword (its duplicate
+    at a later j ties and loses), NaN and +/-inf elements (NaN or +inf
+    distances are never chosen), an all-+inf vector (no distance below
+    +inf: code -1 everywhere) and a longer ragged vector (only the
+    codebook's dims count). The codebook itself carries a duplicate, a
+    NaN and a short codeword. A shorter vector fails the fold under
+    ANSI (element_at), so it is compared with ANSI off, where the
+    fold's NULL distances give -1 like the kernel's NaN padding."""
+    from nba_spurs_etl_spark.operators import similarity as S
+
+    cand, rows, dim = _ann_fixture(spark, 32)
+    m, sub = 16, dim // 16
+    code_rows = sorted(rows, key=lambda r: r["cid"])
+    first = list(code_rows[0]["cv"])
+    code_rows += [
+        {"cid": 10**9, "cv": first},
+        {"cid": 10**9 + 1, "cv": [_NAN] * dim},
+        {"cid": 10**9 + 2, "cv": first[: dim // 2 + 1]},
+    ]
+    k = len(code_rows)
+    cb = _pq_codebook_literal(code_rows, m, sub)
+    edge = [
+        (900001, first),
+        (900002, [_NAN] + [0.5] * (dim - 1)),
+        (900003, [_INF] * 4 + [0.25] * (dim - 4)),
+        (900004, [-_INF] + [-0.25] * (dim - 1)),
+        (900005, [_INF] * dim),
+        (900006, [0.5] * (dim + 8)),
+    ]
+    corpus = _with_norm(
+        cand.select("vec_id", "embedding").unionByName(
+            spark.createDataFrame(edge, "vec_id long, embedding array<float>")
+        ),
+        "cand_id",
+    )
+
+    def both(frame):
+        fold = frame.selectExpr(
+            "cand_id", f"{_pq_encode('v', cb, m, k, sub)} AS code"
+        ).collect()
+        kern = S._assign_cells_arrow(
+            frame, "v", None, None,
+            books=S._pq_codebook(code_rows, m, sub), keep=["cand_id"],
+        ).collect()
+        return (
+            sorted((r["cand_id"], tuple(r["code"])) for r in fold),
+            sorted((r["cand_id"], tuple(r["code"])) for r in kern),
+        )
+
+    fold, kern = both(corpus)
+    assert fold == kern
+    got = dict(kern)
+    assert got[900001] == (0,) * m  # the twin at j=k-3 ties and loses
+    assert got[900002][0] == -1 and -1 not in got[900002][1:]
+    assert got[900003][0] == -1 and got[900004][0] == -1
+    assert got[900005] == (-1,) * m
+    assert -1 not in got[900006]
+
+    short = _with_norm(
+        spark.createDataFrame(
+            [(900007, [0.5] * (dim // 2 + 2))], "vec_id long, embedding array<float>"
+        ),
+        "cand_id",
+    )
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        fold, kern = both(short)
+    finally:
+        spark.conf.unset("spark.sql.ansi.enabled")
+    assert fold == kern
+    assert kern[0][1][: dim // 2 // sub] != (-1,) * (dim // 2 // sub)
+    assert kern[0][1][dim // 2 // sub + 1:] == (-1,) * (m - dim // 2 // sub - 1)
+
+
+def _edge_queries(spark, cand, dim):
+    """sf0.01 query rows plus the probe edge rows: NaN and +/-inf
+    elements (NaN cosines), a longer and a shorter ragged vector (NULL
+    cosines), an exact duplicate query row and a same-id row with
+    another vector (one probe ranking pools both rows)."""
+    base = cand.filter("vec_id % 100 = 0").select("vec_id", "embedding")
+    q0 = base.orderBy("vec_id").first()
+    edge = [
+        (910001, [_NAN] + [0.5] * (dim - 1)),
+        (910002, [_INF] + [0.5] * (dim - 1)),
+        (910003, [-_INF] * 2 + [0.5] * (dim - 2)),
+        (910004, [0.5] * (dim + 4)),
+        (910005, [0.5] * (dim - 4)),
+        (q0["vec_id"], list(q0["embedding"])),
+        (q0["vec_id"], [0.25] * dim),
+    ]
+    return _with_norm(
+        base.unionByName(
+            spark.createDataFrame(edge, "vec_id long, embedding array<float>")
+        ),
+        "query_id",
+    )
+
+
+def test_pq_lut_kernel_matches_lut_fold(spark):
+    """_probe_arrow's lookup tables must equal the _pq_lut fold
+    bit-for-bit, per query row, including NaN/+/-inf elements and a
+    longer ragged vector; a shorter vector fails both (the fold's
+    element_at under ANSI, the kernel's named error)."""
+    from nba_spurs_etl_spark.operators import similarity as S
+
+    cand, rows, dim = _ann_fixture(spark, 32)
+    m, sub = 16, dim // 16
+    code_rows = sorted(rows, key=lambda r: r["cid"])
+    cb = _pq_codebook_literal(code_rows, m, sub)
+    books = S._pq_codebook(code_rows, m, sub)
+    q = _edge_queries(spark, cand, dim)
+    ok = q.filter(f"size(v) >= {dim}")
+
+    def key(r):
+        return (r["query_id"], _bits(list(r["lut"])))
+
+    fold = sorted(
+        map(key, ok.selectExpr(
+            "query_id", f"{_pq_lut('v', cb, m, len(code_rows), sub)} AS lut"
+        ).collect())
+    )
+    kern = sorted(
+        map(key, S._probe_arrow(
+            ok, "query_id", "v", None, None, 0, books=books, keep=["query_id"]
+        ).collect())
+    )
+    assert fold == kern
+    assert len(kern) == ok.count()
+    short = q.filter(f"size(v) < {dim}")
+    with pytest.raises(Exception, match="shorter than the PQ codebook"):
+        S._probe_arrow(
+            short, "query_id", "v", None, None, 0, books=books, keep=["query_id"]
+        ).collect()
+    with pytest.raises(Exception, match="INVALID_ARRAY_INDEX"):
+        short.selectExpr(f"{_pq_lut('v', cb, m, len(code_rows), sub)} AS lut").collect()
+
+
+def test_probe_kernel_matches_probe_window(spark):
+    """_probe_arrow's probed cells must equal the explode + row_number
+    window over _centroid_literal/_cell_cos, as a row multiset: NaN
+    cosines rank first and NULL ones (ragged dims) last, ties go to the
+    smaller cell (a duplicated centroid), and one query id's rows pool
+    into one ranking (a duplicated query row probes nprobe cells in
+    all, not nprobe each). With a codebook every probe row also carries
+    the LUT of its own query row."""
+    from nba_spurs_etl_spark.operators import similarity as S
+
+    cand, rows, dim = _ann_fixture(spark, 32)
+    cells = rows[:16] + [dict(rows[0].asDict(), cid=10**9)]
+    cents = _centroid_literal(cells)
+    q = _edge_queries(spark, cand, dim)
+
+    def key(r):
+        return tuple(_bits(list(v)) if isinstance(v, list) else v for v in r)
+
+    for nprobe in (1, 4):
+        fold = sorted(map(key, _probe_window(q, cents, nprobe).collect()))
+        kern = sorted(
+            map(key, S._probe_arrow(
+                q, "query_id", "v", "nrm", cells, nprobe, keep=["query_id"]
+            ).collect())
+        )
+        assert fold == kern
+    by_q = {}
+    for qid, cell in kern:
+        by_q.setdefault(qid, []).append(cell)
+    smallest = sorted(r["cid"] for r in cells)[:4]
+    assert sorted(by_q[910001]) == smallest  # all NaN: the first cells
+    assert sorted(by_q[910004]) == smallest  # all NULL: the first cells
+    assert sorted(by_q[910005]) == smallest
+    assert len(by_q[q.agg(F.min("query_id")).first()[0]]) == 4  # pooled
+
+    code_rows = sorted(rows, key=lambda r: r["cid"])
+    m, sub = 16, dim // 16
+    lut = _pq_lut("v", _pq_codebook_literal(code_rows, m, sub), m, 32, sub)
+    ok = q.filter(f"size(v) >= {dim}")
+    fold = sorted(map(key, _probe_window(ok, cents, 4, lut).collect()))
+    kern = sorted(
+        map(key, S._probe_arrow(
+            ok, "query_id", "v", "nrm", cells, 4,
+            books=S._pq_codebook(code_rows, m, sub), keep=["query_id"],
+        ).collect())
+    )
+    assert fold == kern
 
 
 def test_lsh_bucket_dim_guard_names_the_misconfiguration(spark):
@@ -3348,15 +3694,14 @@ def test_pq_family_builds_cache_no_samples(spark):
 
 
 def test_doubles_sql_roundtrips_edge_values_bit_exact(spark):
-    """The rendered-literal fast path (_doubles_sql -> F.expr) must be
-    bit-identical to the F.lit slow path it replaced, INCLUDING the
-    values Python repr / SQL parsing could plausibly mangle:
-    subnormals, -0.0, +/-inf, NaN, extreme magnitudes (ADVICE r08 —
-    the docstring claimed this was verified but nothing pinned it)."""
+    """The rendered literals the kernel specs build their centroid and
+    codebook arrays from (_doubles_sql -> F.expr) must be bit-identical
+    to the values they encode, INCLUDING the values Python repr / SQL
+    parsing could plausibly mangle: subnormals, -0.0, +/-inf, NaN,
+    extreme magnitudes. A mangled literal would make a spec, not the
+    kernel, drift."""
     import math
     import struct
-
-    from nba_spurs_etl_spark.operators.similarity import _doubles_sql
 
     edges = [
         5e-324,                 # smallest positive subnormal

@@ -534,6 +534,56 @@ def test_repack_layout_equivalence(spark):
         assert before == after
 
 
+def test_repack_sources_with_one_basename_never_share_output(
+    tmp_path, monkeypatch
+):
+    """Two input dirs both named sf0.01, repacked alternately, get
+    separate output dirs: no symlink is re-pointed and no part file is
+    rewritten by the other source's calls, and each split table's
+    marker names its source. Keyed by basename alone, the two shared
+    one dir and every alternate call rewrote it."""
+    import json
+    import os
+    import shutil
+
+    from nba_spurs_etl_spark.sources import repack
+
+    from .conftest import SF_SMOKE
+
+    monkeypatch.setattr(repack, "_repack_root", lambda: str(tmp_path / "root"))
+    srcs = []
+    for side in ("a", "b"):
+        d = tmp_path / side / "sf0.01"
+        d.mkdir(parents=True)
+        for t in ("lineitem", "region"):
+            shutil.copy(os.path.join(SF_SMOKE, f"{t}.parquet"), d)
+        srcs.append(str(d))
+
+    def state(out):
+        li = os.path.join(out, "lineitem.parquet")
+        parts = {
+            p: (st.st_ino, st.st_mtime_ns)
+            for p in os.listdir(li)
+            for st in [os.stat(os.path.join(li, p))]
+        }
+        return os.readlink(os.path.join(out, "region.parquet")), parts
+
+    outs = [repack.ensure_repacked(s, 4, min_rows=1000) for s in srcs]
+    assert outs[0] != outs[1]
+    assert {os.path.basename(o).split("-")[0] for o in outs} == {"sf0.01"}
+    first = [state(o) for o in outs]
+    for _ in range(2):
+        for s, o in zip(srcs, outs):
+            assert repack.ensure_repacked(s, 4, min_rows=1000) == o
+    assert [state(o) for o in outs] == first
+    for s, o, (link, _) in zip(srcs, outs, first):
+        assert link == os.path.join(s, "region.parquet")
+        with open(os.path.join(o, "lineitem.parquet.repack.json")) as f:
+            assert json.load(f)["source"] == os.path.realpath(
+                os.path.join(s, "lineitem.parquet")
+            )
+
+
 def test_dynamic_partition_overwrite_backfill(spark, tmp_path):
     """Idempotent daily backfill: re-running one day's aggregation with
     partitionOverwriteMode=dynamic must replace ONLY that day's

@@ -934,7 +934,7 @@ QUERY_JOB_BUDGET = {
     "search_bm25_topk": 12,
     "text_repetition": 1,
     "dedup_incremental_batch": 7,
-    "similarity_topk_ivf_pq": 7,
+    "similarity_topk_ivf_pq": 6,
     "pricing_summary": 2,
     "q5_local_supplier_volume": 7,
     "q18_large_orders": 4,
