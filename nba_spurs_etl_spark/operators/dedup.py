@@ -918,10 +918,17 @@ def connected_components(
     Iterative min-label propagation: each round every node takes the
     minimum label among itself and its neighbors; converges in
     O(component diameter) rounds — dup clusters from LSH are near-
-    cliques, so 2-3 rounds in practice. This is the one iterative
-    algorithm in the engine; per-round lineage is truncated with
-    localCheckpoint (on a cluster: set a checkpoint dir, or switch to
-    the large-star/small-star variant for graphs with long chains).
+    cliques, so 1-4 rounds on every catalog consumer at sf0.01 and
+    sf0.1. This is the engine's one connected-components kernel;
+    per-round lineage is truncated with localCheckpoint (on a cluster:
+    set a checkpoint dir). A large-star/small-star kernel (O(log n)
+    rounds on any shape) was deleted on measurement: on
+    dedup_components_star it ran 31 jobs against 13 and lost all 20
+    interleaved build+drain pairs at sf0.01 (medians 1.62-2.03 s vs
+    0.73-0.84 s, 4 cores). A component whose
+    diameter exceeds ``max_iter`` raises instead of returning wrong
+    labels. Neighborhood minima are groupBy-min aggregates, never
+    adjacency arrays, so a hub node stays O(1) per row.
 
     Deterministic output (min over a set), so the DuckDB oracle is a
     recursive-CTE transitive closure + MIN.
@@ -943,7 +950,6 @@ def connected_components(
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
-    converged_at = None
     # Seed with round 0 already applied: label = min(self, neighbors) —
     # one groupBy instead of a distinct + a full propagation round.
     labels = (
@@ -979,178 +985,17 @@ def connected_components(
         converged = new_labels.filter("moved").isEmpty()
         labels = new_labels.drop("moved")
         if converged:
-            converged_at = True
             break
-    if converged_at is None:
+    else:
         # One-hop-per-round propagation needs ~diameter rounds; dup
-        # graphs are near-cliques (2-3 rounds), but a path-shaped
-        # component longer than max_iter would previously return
-        # silently WRONG labels. Fail loudly and point at the O(log n)
-        # alternative instead.
+        # graphs are near-cliques, but a path-shaped component longer
+        # than max_iter would otherwise return silently WRONG labels.
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter); use "
-            "connected_components_star for long-chain graphs"
+            "(component diameter exceeds max_iter); raise max_iter for "
+            "long-chain graphs"
         )
     return labels.select("doc", F.col("label").alias("component"))
-
-
-def _undirect(e: DataFrame) -> DataFrame:
-    """Both directions of an edge list: (u, v) for every v ∈ N(u)."""
-    return e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-
-
-def _large_star_step(edges: DataFrame) -> DataFrame:
-    """One large-star round: every node u attaches each strictly-greater
-    neighbor v to m = min({u} ∪ N(u)).
-
-    Array-free: the closed-neighborhood minimum is a plain
-    ``groupBy(u).agg(min(v))`` (map-side-combinable, O(1) state per
-    key) re-attached to the >-filtered edge list by an equi-join on u —
-    a 10M-neighbor hub is 10M small rows across tasks, never one
-    10M-element array in one task.
-    """
-    und = _undirect(edges)
-    mins = (
-        und.groupBy("u")
-        .agg(F.min("v").alias("_mn"))
-        .select("u", F.least("u", "_mn").alias("m"))
-    )
-    return (
-        und.filter(F.col("v") > F.col("u"))
-        .join(mins, "u")
-        .filter(F.col("v") != F.col("m"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .distinct()
-    )
-
-
-def _small_star_step(edges: DataFrame) -> DataFrame:
-    """One small-star round: every node u attaches each
-    strictly-smaller neighbor (and itself) to m = min of that closed
-    set. Same min+join shape as ``_large_star_step`` — no arrays.
-    """
-    und = _undirect(edges)
-    mins = (
-        und.groupBy("u")
-        .agg(
-            F.min(F.when(F.col("v") < F.col("u"), F.col("v"))).alias("_mn")
-        )
-        .select("u", F.least("u", F.coalesce("_mn", "u")).alias("m"))
-    )
-    return (
-        und.filter(F.col("v") < F.col("u"))
-        .join(mins, "u")
-        .select(F.col("v").alias("t"), F.col("m"))
-        .unionByName(mins.select(F.col("u").alias("t"), F.col("m")))
-        .filter(F.col("t") != F.col("m"))
-        .select(F.col("t").alias("u"), F.col("m").alias("v"))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    pairs: DataFrame, max_rounds: int = 20
-) -> DataFrame:
-    """(doc, component) via alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    converges in O(log n) rounds on ANY graph shape, including the
-    long chains where one-hop min-label propagation needs O(diameter).
-
-    Per round, from the undirected adjacency of the current edge set:
-    - large-star: every node u emits (v, m) for each neighbor v > u,
-      where m = min({u} ∪ N(u)) — far nodes shortcut to the current
-      minimum;
-    - small-star: every node u emits (v, m) for each v in
-      {w ∈ N(u): w < u} ∪ {u} itself, m = min over that same closed
-      set — the local star flattens.
-
-    Both steps preserve connectivity and only ever decrease attachment
-    targets, so the edge set converges to per-component stars rooted at
-    the component minimum; convergence is detected by edge-set
-    fixpoint (count + 64-bit xor-hash — order-independent, and wide
-    enough that a false fixpoint is ~2^-64 per round). Each round is
-    two shuffles over the shrinking edge set (a groupBy-min plus an
-    equi-join keyed on the same node id), checkpointed to truncate
-    lineage.
-
-    HUB-SAFE BY CONSTRUCTION: per-node neighborhood minima come from
-    ``groupBy(u).agg(min(v))`` and are re-attached to the edge list by
-    an equi-join — no ``collect_set`` adjacency arrays anywhere. By the
-    late rounds a component root's neighborhood IS the whole component;
-    an array representation would put a |component|-element array in a
-    single row/task (the same hot-bucket OOM ``simhash_pairs``
-    documents), while min+join keeps every row O(1) no matter how large
-    the hub grows. Plan pinned by ``test_star_step_plans_are_array_free``.
-
-    Same output contract as ``connected_components`` (equality pinned
-    by property tests against a union-find model, including a 100k-leaf
-    single-hub star).
-    """
-    # ONE materialization of the upstream pair pipeline: both the edge
-    # set and the final node list derive from this checkpoint. Deriving
-    # nodes from `pairs` directly would re-execute the whole upstream
-    # plan (for the catalog entry, a second full MinHash-LSH pass —
-    # measured ~1.5 s of the entry at sf0.1, and an entire extra corpus
-    # scan at real scale).
-    # EAGER checkpoints (r12 adjudication, VERDICT r11 item 1): the
-    # r11 lazy variant piggybacked materialization on the fingerprint
-    # probe (one job per round instead of two), but the driver
-    # measured dedup_components_star 0.70x and the repo's interleaved
-    # paired A/B (revert commit 0d14f39) confirmed lazy+fused-probe
-    # medians 1.08x this eager shape — the full-scan fingerprint
-    # aggregate on the critical path costs more than the extra cheap
-    # probe job. Reverted on measurement; see connected_components for the full
-    # adjudication note.
-    base = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edges = base.filter(F.col("u") != F.col("v"))
-
-    def fingerprint(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                # order-independent xor over canonical 64-bit pair
-                # hashes (xxhash64, not 32-bit Murmur3: with 32 bits a
-                # colliding xor between consecutive differing edge sets
-                # would silently stop contraction early)
-                F.expr(
-                    "bit_xor(xxhash64(least(u, v), greatest(u, v)))"
-                ),
-                F.lit(0),
-            ).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    fp = fingerprint(edges)
-    for _ in range(max_rounds):
-        edges = _small_star_step(_large_star_step(edges)).localCheckpoint(
-            eager=True
-        )
-        new_fp = fingerprint(edges)
-        if new_fp == fp:
-            break
-        fp = new_fp
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_rounds} "
-            "rounds"
-        )
-    # at the fixpoint, edges are (node, root) stars; roots label themselves
-    nodes = (
-        base.select(F.col("u").alias("doc"))
-        .unionByName(base.select(F.col("v").alias("doc")))
-        .distinct()
-    )
-    return (
-        nodes.join(edges, nodes["doc"] == edges["u"], "left")
-        .select("doc", F.coalesce(F.col("v"), F.col("doc")).alias("component"))
-    )
 
 
 # ---------------------------------------------------------------------------

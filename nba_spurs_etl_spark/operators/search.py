@@ -255,10 +255,10 @@ def bm25_topk(
         # materialize the hit aggregation ONCE: the pruned plan reads
         # `matched` three times (nomination window, pruned postings,
         # df) and each read would otherwise re-run the corpus token
-        # explode+groupBy — the same recompute class as
-        # connected_components_star's un-checkpointed nodes frame
-        # (r08 find). The checkpointed frame is hit-sized (query-term
-        # matches only), never corpus-sized.
+        # explode+groupBy (a frame read several times downstream of
+        # an expensive subtree re-runs it per read). The checkpointed
+        # frame is hit-sized (query-term matches only), never
+        # corpus-sized.
         matched = matched.localCheckpoint(eager=True)
         dfreq = matched.groupBy("term").agg(
             F.count(F.lit(1)).alias("df")

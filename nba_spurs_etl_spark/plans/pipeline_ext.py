@@ -2058,13 +2058,13 @@ FROM spine s LEFT JOIN monthly mo ON s.m = mo.m
 
 @register(
     "dedup_components_star",
-    group="ext-dedup iterative star",
+    group="ext-dedup iterative",
     oracle=registry()["dedup_minhash_components"].oracle,
-    doc="Connected components via large-star/small-star contraction "
-    "(operators/dedup.py::connected_components_star) — O(log n) "
-    "rounds on ANY graph shape vs the min-label form's O(diameter), "
-    "the variant long-chain graphs need. Identical output contract, "
-    "same recursive-CTE oracle as dedup_minhash_components.",
+    doc="Connected components via min-label propagation "
+    "(operators/dedup.py::connected_components, the one CC kernel). "
+    "Same rows and recursive-CTE oracle as dedup_minhash_components; "
+    "a large-star/small-star kernel built this entry until it lost "
+    "every paired run on these near-clique graphs and was deleted.",
 )
 def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.minhash_lsh_pairs(
@@ -2074,7 +2074,7 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_hashes=_NUM_HASHES,
         band_size=_BAND_SIZE,
     )
-    return dedup.connected_components_star(pairs)
+    return dedup.connected_components(pairs)
 
 
 @register(

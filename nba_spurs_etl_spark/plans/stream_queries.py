@@ -49,7 +49,8 @@ def _work_dir(tag: str, sf_dir: str) -> str:
     cost is a fixed per-micro-batch tax unrelated to the computation —
     the same rationale as the memory-sink drain checkpoints
     (streaming/events.py::_drain_checkpoint_dir, ~0.4 s/query
-    measured). Production deployments pass their own durable roots to
+    measured). Setting TMPDIR redirects the scratch there instead of
+    /dev/shm. Production deployments pass their own durable roots to
     the snapshot classes; nothing here changes those paths."""
     import hashlib
     import os
@@ -63,9 +64,7 @@ def _work_dir(tag: str, sf_dir: str) -> str:
 
     def _shm_usable() -> bool:
         # an EXPLICIT scratch choice wins over the tmpfs fast path
-        # (ADVICE r11): TMPDIR is the documented way to redirect
-        # scratch, and SPARK_GRAFT_NO_SHM is the dedicated opt-out
-        if os.environ.get("TMPDIR") or os.environ.get("SPARK_GRAFT_NO_SHM"):
+        if os.environ.get("TMPDIR"):
             return False
         # containers commonly mount /dev/shm at 64 MB: require
         # headroom for the changelog + versioned snapshots these

@@ -41,6 +41,7 @@ def test_shingles_short_docs(spark):
 
 
 def _model_components(edges: list[tuple[int, int]]) -> dict[int, int]:
+    """Union-find reference: node -> min node id of its component."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -54,15 +55,10 @@ def _model_components(edges: list[tuple[int, int]]) -> dict[int, int]:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    # component label = min node of the set
-    labels: dict[int, int] = {}
-    for node in parent:
-        root = find(node)
-        labels[node] = min(labels.get(root, root), root)
     return {n: find(n) for n in parent}
 
 
-@settings(max_examples=5, deadline=None)
+@settings(max_examples=10, deadline=None)
 @given(
     st.lists(
         st.tuples(st.integers(0, 30), st.integers(0, 30)).filter(
@@ -73,12 +69,45 @@ def _model_components(edges: list[tuple[int, int]]) -> dict[int, int]:
     )
 )
 def test_connected_components_matches_union_find(spark, edges):
-    pairs = spark.createDataFrame(
-        [(min(a, b), max(a, b)) for a, b in edges], ["doc_a", "doc_b"]
+    # pairs in either orientation; 31 nodes can form a path longer than
+    # the default max_iter, so raise it
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    got = {
+        r.doc: r.component
+        for r in connected_components(pairs, max_iter=40).collect()
+    }
+    assert got == _model_components(edges)
+
+
+def test_connected_components_raise_on_long_chain(spark):
+    """A 200-node path has diameter 199: one-hop min-label would need
+    ~199 rounds, and fails loudly at the default max_iter instead of
+    returning wrong labels."""
+    chain = [(i, i + 1) for i in range(199)]
+    df = spark.createDataFrame(chain, "doc_a long, doc_b long")
+    with pytest.raises(RuntimeError, match="did not converge in 25 rounds"):
+        connected_components(df)
+
+
+@pytest.mark.parametrize("hub", ["min", "max"])
+def test_connected_components_mega_hub(spark, hub):
+    """Single-hub star with 100k leaves, the hub the smallest id (its
+    label reaches every leaf in the seed round) or the largest (the
+    leaves take the min label through it one round later). Neighborhood
+    minima are groupBy-min aggregates, so no row holds the hub's
+    100k-neighbor adjacency."""
+    n = 100_000
+    hub_id = 0 if hub == "min" else n
+    leaves = spark.range(1, n + 1) if hub == "min" else spark.range(0, n)
+    pairs = leaves.select(
+        F.lit(hub_id).cast("long").alias("doc_a"), F.col("id").alias("doc_b")
     )
-    got = {r.doc: r.component for r in connected_components(pairs).collect()}
-    want = _model_components(edges)
-    assert got == want
+    agg = connected_components(pairs).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(F.col("component") == 0, 1)).alias("zeros"),
+    ).first()
+    assert agg["n"] == n + 1
+    assert agg["zeros"] == n + 1
 
 
 # ---------------------------------------------------------------------------
@@ -1765,87 +1794,6 @@ def test_edit_distance_pairs_symspell_blocking(spark):
     assert got == want
 
 
-# ---------------------------------------------------------------------------
-# connected components: star-contraction variant + convergence guard
-# ---------------------------------------------------------------------------
-
-
-def _uf_components(pairs):
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {x: find(x) for x in parent}
-
-
-def test_star_components_on_long_chain(spark):
-    """A 200-node path has diameter 199: one-hop min-label needs ~199
-    rounds (and now FAILS LOUDLY at max_iter instead of silently
-    returning wrong labels), while star-contraction converges in
-    O(log n) rounds."""
-    from nba_spurs_etl_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    chain = [(i, i + 1) for i in range(199)]
-    df = spark.createDataFrame(chain, "doc_a long, doc_b long")
-
-    got = {
-        r["doc"]: r["component"]
-        for r in connected_components_star(df).collect()
-    }
-    assert got == {i: 0 for i in range(200)}
-
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=10)
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    edges=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=30),
-            st.integers(min_value=0, max_value=30),
-        ),
-        min_size=1,
-        max_size=40,
-    )
-)
-def test_star_components_match_union_find(spark, edges):
-    from nba_spurs_etl_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    edges = [(a, b) for a, b in edges if a != b]
-    if not edges:
-        return
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    want = _uf_components(edges)
-    got_star = {
-        r["doc"]: r["component"]
-        for r in connected_components_star(df).collect()
-    }
-    assert got_star == want
-    # and the min-label form agrees wherever it converges (30 nodes,
-    # max diameter 30 > default 25 is possible — raise max_iter)
-    got_prop = {
-        r["doc"]: r["component"]
-        for r in connected_components(df, max_iter=40).collect()
-    }
-    assert got_prop == want
-
-
 @settings(max_examples=10, deadline=None)
 @given(
     words=st.lists(
@@ -1885,31 +1833,6 @@ def test_edit_distance2_blocking_property(spark, words):
         if lev(m[a], m[b]) <= 2
     )
     assert got == want
-
-
-def test_star_components_mega_hub(spark):
-    """Single-hub star with 100k leaves — the shape VERDICT r03 flagged:
-    with collect_set adjacency the hub row would hold a 100k-element
-    array; the min+join rewrite keeps every row O(1). Must converge
-    fast and label everything with the hub (node 0)."""
-    from pyspark.sql import functions as F
-
-    from nba_spurs_etl_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    n = 100_000
-    pairs = (
-        spark.range(1, n + 1)
-        .select(F.lit(0).alias("doc_a"), F.col("id").alias("doc_b"))
-    )
-    out = connected_components_star(pairs)
-    agg = out.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(F.col("component") == 0, 1)).alias("zeros"),
-    ).first()
-    assert agg["n"] == n + 1
-    assert agg["zeros"] == n + 1
 
 
 def test_delete2_length_guard(spark):

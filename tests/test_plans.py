@@ -422,30 +422,6 @@ def test_prefix_candidates_post_only_prefix_tokens(spark, catalog):
     assert "CartesianProduct" not in plan
 
 
-def test_star_step_plans_are_array_free(spark):
-    """VERDICT r03 item 1: large-star/small-star rounds must compute
-    neighborhood minima via groupBy-min + equi-join, never collect_set
-    adjacency arrays — by late rounds a component root's neighborhood
-    IS the whole component, and an array form puts a |component|-sized
-    array in one task (hub OOM). Pin: no collect_set / collect_list in
-    either step's physical plan, no cartesian, and a partial (map-side)
-    min aggregate is present."""
-    from nba_spurs_etl_spark.operators.dedup import (
-        _large_star_step,
-        _small_star_step,
-    )
-
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3)], "u long, v long"
-    )
-    for step in (_large_star_step, _small_star_step):
-        plan = fmt_plan(step(edges))
-        assert "collect_set" not in plan, plan
-        assert "collect_list" not in plan, plan
-        assert "CartesianProduct" not in plan, plan
-        assert "partial_min" in plan, plan
-
-
 def test_aes_topk_avoids_global_sort(spark, catalog):
     """A-ES exact-k sampling is an orderBy(key).limit(k): must compile
     to TakeOrderedAndProject (per-partition top-k + driver merge),
@@ -925,11 +901,13 @@ def test_stream_scratch_sweeps_default_tmp(monkeypatch, tmp_path):
         shutil.rmtree(stale, ignore_errors=True)
 
 
-#: Spark jobs one build + noop drain launches at SF_SMOKE, for the
-#: entries of perfbench's ``query`` workload. Plan building reads table
-#: schemas from Parquet footers, so build launches no job except the
-#: ANN codebook sample collect and dedup's batch checkpoint. A change
-#: that adds a job fails here; one that removes a job lowers its pin.
+#: Spark jobs one build + noop drain launches at SF_SMOKE: the entries
+#: of perfbench's ``query`` workload, then the connected-components
+#: consumers and the ``graph_*`` entries, whose iterative kernels
+#: checkpoint per round. Plan building reads table schemas from Parquet
+#: footers, so the first group's builds launch no job except the ANN
+#: codebook sample collect and dedup's batch checkpoint. A change that
+#: adds a job fails here; one that removes a job lowers its pin.
 QUERY_JOB_BUDGET = {
     "search_bm25_topk": 12,
     "text_repetition": 1,
@@ -938,6 +916,16 @@ QUERY_JOB_BUDGET = {
     "pricing_summary": 2,
     "q5_local_supplier_volume": 7,
     "q18_large_orders": 4,
+    "dedup_components_star": 13,
+    "dedup_minhash_components": 13,
+    "corpus_split_leakage_safe": 16,
+    "dedup_keep_best_per_cluster": 15,
+    "dedup_filtered_corpus": 16,
+    "customer_entity_resolution": 26,
+    "semantic_dedup_corpus": 15,
+    "graph_pagerank_dups": 12,
+    "graph_triangles_dups": 7,
+    "graph_label_propagation": 13,
 }
 
 
