@@ -110,6 +110,32 @@ def test_connected_components_mega_hub(spark, hub):
     assert agg["zeros"] == n + 1
 
 
+@settings(max_examples=10, deadline=None)
+@given(
+    st.lists(  # (hub, leaves) stars; stars may share nodes and merge
+        st.tuples(
+            st.integers(0, 30),
+            st.lists(st.integers(0, 30), min_size=1, max_size=8),
+        ),
+        min_size=1,
+        max_size=6,
+    )
+)
+def test_star_components_match_union_find(spark, stars):
+    """Star-shaped graphs (the hub-and-spoke clusters blocking emits),
+    with the hub at any id, so labels flow hub-to-leaf and leaf-to-hub,
+    and overlapping stars chained through shared nodes."""
+    edges = [
+        (hub, leaf) for hub, leaves in stars for leaf in leaves if leaf != hub
+    ]
+    if not edges:
+        return
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    # six stars chained through shared leaves reach diameter 12 at most
+    got = {r.doc: r.component for r in connected_components(pairs).collect()}
+    assert got == _model_components(edges)
+
+
 # ---------------------------------------------------------------------------
 # as-of join vs brute-force model
 # ---------------------------------------------------------------------------
